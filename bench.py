@@ -41,6 +41,7 @@ import __spark_entry__ as entry
 from data_pipeline_4_online_retail_spark.session import (
     apply_scale_granularity,
     get_spark,
+    release_caches,
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -149,39 +150,9 @@ def _run(qs, name, spark, sf_dir, n_runs, errors):
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             return None
         finally:
-            _release_query_caches()
+            release_caches()
         runs.append(time.time() - t)
     return runs
-
-
-def _release_query_caches() -> None:
-    """Unpersist graph-query scratch tables after materialization (ADVICE
-    r5: they were only released on the NEXT graph query's entry, holding
-    executor memory under every later timing)."""
-    try:
-        from data_pipeline_4_online_retail_spark.operators.graph import (
-            release_caches,
-        )
-
-        release_caches()
-    except Exception:  # noqa: BLE001 — never let cleanup break a timing
-        pass
-    try:
-        from data_pipeline_4_online_retail_spark.functions.prefix import (
-            release_caches as release_prefix,
-        )
-
-        release_prefix()
-    except Exception:  # noqa: BLE001
-        pass
-    try:
-        from data_pipeline_4_online_retail_spark.operators.multimodal import (
-            release_caches as release_mm,
-        )
-
-        release_mm()
-    except Exception:  # noqa: BLE001
-        pass
 
 
 def _median(runs: list[float]) -> float:

@@ -82,7 +82,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from data_pipeline_4_online_retail_spark.session import drain_retained
+from data_pipeline_4_online_retail_spark.session import (
+    persist_scoped,
+    release_caches,  # noqa: F401 — re-exported for perfbench's release hooks
+)
 
 _BUCKET = "__pfx_bucket"
 
@@ -93,45 +96,6 @@ _SMALL_BYTES_DEFAULT = 32 << 20
 # Last ~N (fn, bypassed, est_bytes) decisions — introspection for the
 # path-engagement tests; bounded so long sessions don't grow it.
 DECISIONS: deque = deque(maxlen=128)
-
-# Scoped persist registry (the dedup.py/graph.py convention): the bucketed
-# input frame feeds THREE consumers (the per-bucket local window, the
-# bucket-totals aggregate, and the totals' triangle self-join) —
-# unpersisted, Spark re-evaluates the whole upstream plan for each, and
-# NESTED global_prefix calls (op_quantile_normalization chains three)
-# multiply that re-execution: the r6 sf10 probe measured 274 s for the
-# unpersisted chain vs 55 s persisted. Caches are released by the calling
-# operator at its next entry (release_caches()), and bench releases after
-# every timed materialization. The registry assumes SINGLE-THREADED query
-# execution per process (the repo's operators run sequentially): a
-# release_caches() from a concurrent query would unpersist another
-# operator's in-flight cache — recompute-only in Spark, but it defeats
-# the persist (ADVICE r6).
-_RETAINED: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    out = df.persist()
-    _RETAINED.append(out)
-    return out
-
-
-def release_caches() -> None:
-    """Unpersist every tracked prefix-helper cache (guarded like
-    dedup.py's: stale handles from a stopped-and-replaced SparkContext
-    NPE on unpersist; their blocks are already gone; swallowed errors
-    log at DEBUG via session.drain_retained)."""
-    drain_retained(_RETAINED)
-
-
-def persist_scoped(df: DataFrame) -> DataFrame:
-    """Public scoped persist for operators replacing a global-total
-    window (`Window.partitionBy()` — moves the whole frame to one task)
-    with an agg + broadcast crossJoin: the persist keeps the expensive
-    subtree single-evaluation, the registry ties its lifetime to the
-    same release points as the prefix caches."""
-    return _persist(df)
-
 
 def _estimated_bytes(df: DataFrame) -> int | None:
     """Catalyst's plan-time size estimate — driver-side only, no job."""
@@ -295,7 +259,7 @@ def _bucketize(
             ]
             sub_cuts[v] = sorted({grid[i] for i in idx})
     if not cuts:  # empty input (or all-equal tiny sample): one bucket
-        out = _persist(
+        out = persist_scoped(
             tmp.withColumn(_BUCKET, F.lit(0)).drop("__pfx_key", "__pfx_salt")
         )
     else:
@@ -330,7 +294,7 @@ def _bucketize(
             )
         if sub_case is not None:
             bucket = bucket + sub_case.otherwise(F.lit(0))
-        out = _persist(
+        out = persist_scoped(
             tmp.withColumn(_BUCKET, bucket).drop("__pfx_key", "__pfx_salt")
         )
     # Materialize the BUCKETED frame once and drop the pre-bucket cache:
@@ -338,7 +302,9 @@ def _bucketize(
     # totals, and — via the totals self-join — BOTH triangle sides plus
     # the broadcast build), and without this the n_buckets-term bucket
     # expression re-evaluates over the full fact for every consumer
-    # (r6 sf10 profile: the 320-row offsets subtree alone cost 32 s).
+    # (r6 sf10 profile: the 320-row offsets subtree alone cost 32 s), and
+    # NESTED global_prefix calls (op_quantile_normalization chains three)
+    # multiply that re-execution (r6 sf10: 274 s unpersisted vs 55 s).
     # The caller (attach_range_buckets) unpersists tmp in its finally.
     out.count()
     return out

@@ -39,7 +39,10 @@ from data_pipeline_4_online_retail_spark.functions.vector import (
     l2_norm,
 )
 from data_pipeline_4_online_retail_spark.plans.registry import register
-from data_pipeline_4_online_retail_spark.session import drain_retained
+from data_pipeline_4_online_retail_spark.session import (
+    persist_scoped,
+    release_caches,  # noqa: F401 — re-exported for perfbench's release hooks
+)
 from data_pipeline_4_online_retail_spark.sources.catalog import load_tables
 
 # MinHash/LSH geometry: 16 hashes = 8 bands × 2 rows.
@@ -60,45 +63,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan contains NO repartition node — the r12 unconditional form
     # shuffled the full corpus text at any scale).
     return load_tables(spark, sf_dir).spread("documents", "doc_id")
-
-
-# ---------------------------------------------------------------------------
-# Cache lifecycle. The dedup builders persist large intermediates
-# (exploded shingles, shingle arrays, banded signatures, edge lists) so
-# each is computed once per query instead of once per plan branch. Those
-# handles used to go out of scope still-cached: repeated invocations in
-# one session (bench min-of-N, 110-query sweeps) accumulated blocks until
-# LRU eviction pressured executor storage. Every persist now goes through
-# ``_persist`` (tracked in _RETAINED), and each registered builder starts
-# by releasing the PREVIOUS invocation's caches — at any moment at most
-# one dedup query's intermediates are cached, with no extra
-# materialization jobs on the hot path. Correctness never depends on a
-# cache: an unpersisted frame recomputes through its full lineage.
-# ---------------------------------------------------------------------------
-
-_RETAINED: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    """persist() + track for scoped release."""
-    out = df.persist()
-    _RETAINED.append(out)
-    return out
-
-
-def release_caches() -> None:
-    """Unpersist every tracked dedup cache. Called at each registered
-    builder's entry (scoping caches to one query) and available to long
-    sessions that want to drop the last query's blocks too.
-
-    Each release is individually guarded: a host that stops the
-    SparkSession and builds a NEW one in-process leaves stale handles
-    here whose ``unpersist`` NPEs against the dead context
-    (``BlockManagerMaster.driverEndpoint() is null`` — VERDICT r9 item
-    7); the blocks died with that context, so dropping the handle is the
-    correct release. Swallowed errors log at DEBUG via the shared
-    :func:`session.drain_retained` (ADVICE r10)."""
-    drain_retained(_RETAINED)
 
 
 # ---------------------------------------------------------------------------
@@ -244,12 +208,11 @@ def dedup_ngram_jaccard(spark, sf_dir):
     # Full-pairwise path: |A∩B| falls out of the shingle join itself
     # (groupBy-count over colliding pairs) — cheaper than materializing the
     # huge distinct pair list and re-intersecting arrays.
-    release_caches()  # drop the previous dedup query's cached blocks
     docs = _docs(spark, sf_dir)
     # three plan branches (self-join a/b + sizes) read the exploded
     # shingles — persist so shingling runs once
     sh = exploded_shingles(docs)
-    sh = _persist(sh)
+    sh = persist_scoped(sh)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("c"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -367,8 +330,8 @@ def _band_self_join(banded: DataFrame) -> DataFrame:
     join branches (and nothing upstream) then read the materialized
     buckets, so shingling + signatures are computed exactly once per
     query instead of once per plan branch (cache scoped to the query via
-    ``_persist``/``release_caches``)."""
-    banded = _persist(banded)
+    ``session.persist_scoped``)."""
+    banded = persist_scoped(banded)
     x = banded.alias("x")
     y = banded.alias("y")
     return (
@@ -460,8 +423,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     # Persist the shingle arrays: they feed the signature once and the
     # verification join twice; without the cache each plan branch re-reads
     # documents and re-shingles (4 full scans measured in r1's PLANS.md).
-    release_caches()
-    sharr = _persist(shingled_docs(_docs(spark, sf_dir)))
+    sharr = persist_scoped(shingled_docs(_docs(spark, sf_dir)))
     sig = minhash_signature_md5(sharr)
     cand = lsh_candidate_pairs(sig)
     return jaccard_verify_pairs(cand, sharr, JACCARD_THRESHOLD)
@@ -559,8 +521,7 @@ WHERE {_J_SQL} >= {JACCARD_THRESHOLD}
     "equivalence vs the md5 pipeline additionally in tests/test_dedup.py.",
 )
 def dedup_minhash_lsh_fast(spark, sf_dir):
-    release_caches()
-    sharr = _persist(shingled_docs(_docs(spark, sf_dir)))
+    sharr = persist_scoped(shingled_docs(_docs(spark, sf_dir)))
     sig = minhash_signature_xxhash64(sharr)
     cand = lsh_candidate_pairs_long(sig)
     return jaccard_verify_pairs(cand, sharr, JACCARD_THRESHOLD)
@@ -717,9 +678,8 @@ WHERE bit_count(xor(fp_a, fp_b)) <= 3
     "filter are hash-checked end-to-end.",
 )
 def dedup_simhash(spark, sf_dir):
-    release_caches()
     fp = simhash64(shingled_docs(_docs(spark, sf_dir)))
-    banded = _persist(
+    banded = persist_scoped(
         fp.select(
             "doc_id",
             "simhash",
@@ -947,9 +907,9 @@ def connected_components(
     )
     # Intermediate checkpoints are block-manager copies freed by the
     # ContextCleaner as superseded handles are GC'd; the final labels are
-    # tracked (inside _persist) for scoped release at the next dedup
+    # tracked (persist_scoped) for scoped release at the next registered
     # query's entry.
-    return _persist(members.unionByName(centers).unionByName(singletons))
+    return persist_scoped(members.unionByName(centers).unionByName(singletons))
 
 
 _CLUSTERS_CTES = f"""
@@ -1013,11 +973,10 @@ FROM clusters
     tags=("dedup", "verification"),
 )
 def dedup_clusters(spark, sf_dir):
-    release_caches()
-    sharr = _persist(shingled_docs(_docs(spark, sf_dir)))
+    sharr = persist_scoped(shingled_docs(_docs(spark, sf_dir)))
     sig = minhash_signature_md5(sharr)
     cand = lsh_candidate_pairs(sig)
-    pairs = _persist(jaccard_verify_pairs(cand, sharr, JACCARD_THRESHOLD))
+    pairs = persist_scoped(jaccard_verify_pairs(cand, sharr, JACCARD_THRESHOLD))
     cc = connected_components(pairs)  # labels materialized by its fixpoint
     return cc.select(
         "doc_id",
@@ -1126,11 +1085,10 @@ FROM clusters
     "recursive-CTE transitive closure the md5 clusters oracle uses.",
 )
 def dedup_clusters_fast(spark, sf_dir):
-    release_caches()
-    sharr = _persist(shingled_docs(_docs(spark, sf_dir)))
+    sharr = persist_scoped(shingled_docs(_docs(spark, sf_dir)))
     sig = minhash_signature_xxhash64(sharr)
     cand = lsh_candidate_pairs_long(sig)
-    pairs = _persist(jaccard_verify_pairs(cand, sharr, JACCARD_THRESHOLD))
+    pairs = persist_scoped(jaccard_verify_pairs(cand, sharr, JACCARD_THRESHOLD))
     cc = connected_components(pairs)
     return cc.select(
         "doc_id",
@@ -1222,9 +1180,8 @@ WHERE {_J_SQL} >= {JACCARD_THRESHOLD}
     tags=("dedup", "verification"),
 )
 def dedup_incremental(spark, sf_dir):
-    release_caches()
     docs = _docs(spark, sf_dir)
-    sharr = _persist(shingled_docs(docs))
+    sharr = persist_scoped(shingled_docs(docs))
     sig = minhash_signature_md5(sharr)
     rows = _sig_hash_count(sig) // N_BANDS
     bands = F.array(
@@ -1233,7 +1190,7 @@ def dedup_incremental(spark, sf_dir):
             for b in range(N_BANDS)
         ]
     )
-    banded = _persist(
+    banded = persist_scoped(
         sig.select("doc_id", F.posexplode(bands).alias("band_idx", "band_hash"))
     )
     new_b = banded.filter(F.expr(_INCR_NEW)).alias("n")
@@ -1282,9 +1239,8 @@ WHERE {_J_SQL} >= {JACCARD_THRESHOLD}
     "the md5 variant additionally in tests/test_r3_ops.py.",
 )
 def dedup_incremental_fast(spark, sf_dir):
-    release_caches()
     docs = _docs(spark, sf_dir)
-    sharr = _persist(shingled_docs(docs))
+    sharr = persist_scoped(shingled_docs(docs))
     sig = minhash_signature_xxhash64(sharr)
     rows = _sig_hash_count(sig) // N_BANDS
     bands = F.array(
@@ -1293,7 +1249,7 @@ def dedup_incremental_fast(spark, sf_dir):
             for b in range(N_BANDS)
         ]
     )
-    banded = _persist(
+    banded = persist_scoped(
         sig.select("doc_id", F.posexplode(bands).alias("band_idx", "band_hash"))
     )
     new_b = banded.filter(F.expr(_INCR_NEW)).alias("n")
@@ -1415,9 +1371,8 @@ CONTAINMENT_THRESHOLD = 0.9
     tags=("dedup",),
 )
 def dedup_containment(spark, sf_dir):
-    release_caches()
     docs = _docs(spark, sf_dir)
-    sh = _persist(exploded_shingles(docs))
+    sh = persist_scoped(exploded_shingles(docs))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("c"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -1638,8 +1593,7 @@ FROM merged
     tags=("dedup", "evaluation", "r4d"),
 )
 def dedup_lsh_recall_report(spark, sf_dir):
-    release_caches()
-    sharr = _persist(shingled_docs(_docs(spark, sf_dir)))
+    sharr = persist_scoped(shingled_docs(_docs(spark, sf_dir)))
     sig = minhash_signature_md5(sharr)
     cand = lsh_candidate_pairs(sig)
     sh = sharr.select("doc_id", F.explode("shingles").alias("s"))
@@ -1733,9 +1687,8 @@ JOIN sharr b ON c.doc_b = b.doc_id
     tags=("dedup", "evaluation", "r4d"),
 )
 def dedup_minhash_estimate(spark, sf_dir):
-    release_caches()
-    sharr = _persist(shingled_docs(_docs(spark, sf_dir)))
-    sig = _persist(minhash_signature_md5(sharr))
+    sharr = persist_scoped(shingled_docs(_docs(spark, sf_dir)))
+    sig = persist_scoped(minhash_signature_md5(sharr))
     cand = lsh_candidate_pairs(sig)
     sa, sb = sig.alias("sa"), sig.alias("sb")
     arr_a, arr_b = sharr.alias("a"), sharr.alias("b")

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from data_pipeline_4_online_retail_spark.plans.registry import register
+from data_pipeline_4_online_retail_spark.session import persist_scoped
 from data_pipeline_4_online_retail_spark.sources.catalog import load_tables
 
 TUMBLE_SECONDS = 600
@@ -1690,12 +1691,7 @@ def ev_funnel_dropoff(spark, sf_dir):
     tags=("events", "r4c"),
 )
 def ev_peak_concurrency(spark, sf_dir):
-    from data_pipeline_4_online_retail_spark.functions.prefix import (
-        global_prefix,
-        release_caches,
-    )
-
-    release_caches()  # scoped: drop the previous prefix query's caches
+    from data_pipeline_4_online_retail_spark.functions.prefix import global_prefix
 
     e = _events(spark, sf_dir)
     iv = e.select(
@@ -1884,13 +1880,8 @@ def ev_conversion_lag(spark, sf_dir):
     # r6: quartile assignment decomposed (was an unpartitioned ntile over
     # the |converting-users|-sized lag frame — one task); global_ntile is
     # bit-identical (pure function of position and count).
-    from data_pipeline_4_online_retail_spark.functions.prefix import (
-        global_ntile,
-        persist_scoped,
-        release_caches,
-    )
+    from data_pipeline_4_online_retail_spark.functions.prefix import global_ntile
 
-    release_caches()  # scoped: drop the previous prefix query's caches
     # persist + count: the lag frame is |converting users|-sized, and
     # the exact row count (rows_hint) routes the ntile — the byte
     # estimate passes the events-scan size through and over-decomposes;

@@ -34,32 +34,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_4_online_retail_spark.plans.registry import register
-from data_pipeline_4_online_retail_spark.session import drain_retained
+from data_pipeline_4_online_retail_spark.session import (
+    persist_scoped,
+    release_caches,  # noqa: F401 — re-exported for perfbench's release hooks
+)
 from data_pipeline_4_online_retail_spark.sources.catalog import load_tables
 
 DAMPING = 0.85
 N_ITER = 10
 CHECKPOINT_EVERY = 4
-
-_RETAINED: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    """persist() + track for scoped release (same pattern as dedup.py:73
-    — caches live until the next graph query's entry, and long sessions
-    can call release_caches() explicitly)."""
-    out = df.persist()
-    _RETAINED.append(out)
-    return out
-
-
-def release_caches() -> None:
-    """Unpersist every tracked graph cache (guarded like dedup.py's:
-    stale handles from a stopped-and-replaced SparkContext NPE on
-    unpersist; their blocks are already gone, so drop the handle;
-    swallowed errors log at DEBUG via session.drain_retained)."""
-    drain_retained(_RETAINED)
-
 
 def copurchase_edges(li: DataFrame) -> DataFrame:
     """Symmetric weighted edge list (src, dst, w) — w = co-order count,
@@ -272,10 +255,8 @@ def graph_triangle_count(spark, sf_dir):
     # triangle join, and without the cache the basket self-join + pair
     # aggregate subtree (the expensive part — the edge list itself is
     # tiny after support pruning) re-materializes per side, exactly the
-    # 4x-subtree cost the sf10 probe found in itemcf. Scoped release,
-    # same pattern as the dedup caches.
-    release_caches()
-    edges = _persist(
+    # 4x-subtree cost the sf10 probe found in itemcf.
+    edges = persist_scoped(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -404,10 +385,9 @@ def graph_itemcf_recs(
     # Persist the annotated basket table: without it the scan+distinct
     # subtree materializes once per self-join side (the sf10 probe showed
     # 4 copies — a and b sides plus pop's two derivations — at ~16 s per
-    # 60M-row distinct). Scoped like the dedup caches; at 100 TB this is
-    # the persisted signature-store shape (SCALING.md "what changes").
-    release_caches()
-    bpn = _persist(bp.join(pop, "l_partkey"))
+    # 60M-row distinct). At 100 TB this is the persisted signature-store
+    # shape (SCALING.md "what changes").
+    bpn = persist_scoped(bp.join(pop, "l_partkey"))
     a = bpn.alias("a")
     b = bpn.alias("b")
     # repartition by item_a BEFORE the pair aggregate: hash(item_a)

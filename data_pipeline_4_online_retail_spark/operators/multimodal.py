@@ -32,30 +32,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_pipeline_4_online_retail_spark.plans.registry import register
-from data_pipeline_4_online_retail_spark.session import drain_retained
+from data_pipeline_4_online_retail_spark.session import (
+    persist_scoped,
+    release_caches,  # noqa: F401 — re-exported for perfbench's release hooks
+)
 from data_pipeline_4_online_retail_spark.sources.catalog import load_tables
-
-# ---------------------------------------------------------------------------
-# Cache lifecycle (r13, VERDICT r12 item 4): mirrors operators/dedup.py.
-# mm_phash_dedup's signature frame feeds BOTH sides of the band self-join;
-# unpersisted, the plan contained two MapInPandas nodes — the expensive
-# Python stage ran twice over the corpus. The persist is within-query
-# iterative state, released at the next builder entry / bench hook.
-# ---------------------------------------------------------------------------
-
-_RETAINED: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    out = df.persist()
-    _RETAINED.append(out)
-    return out
-
-
-def release_caches() -> None:
-    """Unpersist every tracked multimodal cache (see dedup.release_caches
-    for the stale-handle guard rationale)."""
-    drain_retained(_RETAINED)
 
 MEDIA_META = T.StructType(
     [
@@ -1106,7 +1087,6 @@ PHASH_SCHEMA = T.StructType(
     tags=("multimodal", "dedup", "r4e"),
 )
 def mm_phash_dedup(spark, sf_dir):
-    release_caches()  # scoped: drop the previous mm query's caches
     # No spread() on the docs scan: the r12 phash kernel is O(1)/doc, so
     # the single-worker Python pass beats paying an exchange + 32-worker
     # fan-out at this corpus size (measured 0.79 plain vs 1.05 spread
@@ -1129,7 +1109,7 @@ def mm_phash_dedup(spark, sf_dir):
     # the plan carried TWO MapInPandas nodes (plans/r12/mm_phash_dedup_
     # after.txt nodes 2/6) and the Python pass ran twice (VERDICT r12
     # item 4 / "What's wrong" #2).
-    sigs = _persist(docs.mapInPandas(run, PHASH_SCHEMA))
+    sigs = persist_scoped(docs.mapInPandas(run, PHASH_SCHEMA))
     band_structs = [
         F.struct(
             F.lit(i).alias("band"),

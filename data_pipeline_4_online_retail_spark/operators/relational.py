@@ -294,12 +294,7 @@ def op_window_lead_lag(spark, sf_dir):
     "helper, not this demo.)",
 )
 def op_window_rank(spark, sf_dir):
-    from data_pipeline_4_online_retail_spark.functions.prefix import (
-        global_prefix,
-        release_caches,
-    )
-
-    release_caches()  # scoped: drop the previous prefix query's caches
+    from data_pipeline_4_online_retail_spark.functions.prefix import global_prefix
 
     c = _t(spark, sf_dir, "customer")
     ranked = global_prefix(
@@ -1240,12 +1235,7 @@ def op_lateral_join(spark, sf_dir):
     tags=("quality", "r4c"),
 )
 def op_sequence_gaps(spark, sf_dir):
-    from data_pipeline_4_online_retail_spark.functions.prefix import (
-        global_lead,
-        release_caches,
-    )
-
-    release_caches()  # scoped: drop the previous prefix query's caches
+    from data_pipeline_4_online_retail_spark.functions.prefix import global_lead
 
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 7 != 3)
     edges = global_lead(
@@ -1584,12 +1574,7 @@ def op_sql_scripting(spark, sf_dir):
     tags=("analytics", "r4c"),
 )
 def op_skyline_pareto(spark, sf_dir):
-    from data_pipeline_4_online_retail_spark.functions.prefix import (
-        global_prefix,
-        release_caches,
-    )
-
-    release_caches()  # scoped: drop the previous prefix query's caches
+    from data_pipeline_4_online_retail_spark.functions.prefix import global_prefix
 
     o = _t(spark, sf_dir, "orders")
     pts = global_prefix(

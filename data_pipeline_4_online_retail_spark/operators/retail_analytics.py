@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from data_pipeline_4_online_retail_spark.plans.registry import register
+from data_pipeline_4_online_retail_spark.session import persist_scoped
 from data_pipeline_4_online_retail_spark.sources.catalog import load_tables
 
 MIN_PAIR_SUPPORT = 3
@@ -64,13 +65,8 @@ def op_rfm_segments(spark, sf_dir):
     # bit-identical outputs (ntile is a pure function of position and
     # count), one parallel exchange per dimension. The sketch-cutoff
     # production variant remains op_rfm_segments_approx.
-    from data_pipeline_4_online_retail_spark.functions.prefix import (
-        global_ntile,
-        persist_scoped,
-        release_caches,
-    )
+    from data_pipeline_4_online_retail_spark.functions.prefix import global_ntile
 
-    release_caches()  # scoped: drop the previous prefix query's caches
     o = _t(spark, sf_dir, "orders")
     # persist + count once: the EXACT row count routes all three ntiles
     # (rows_hint) — Catalyst's byte estimate passes the orders-scan size
@@ -576,13 +572,8 @@ def op_gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame
     # the |customers|-row aggregate — one task); n rides a broadcast
     # 1-row frame instead of an unbounded-frame window. The i*cents
     # products stay exact longs, so the final 1-row Gini is bit-identical.
-    from data_pipeline_4_online_retail_spark.functions.prefix import (
-        global_prefix,
-        persist_scoped,
-        release_caches,
-    )
+    from data_pipeline_4_online_retail_spark.functions.prefix import global_prefix
 
-    release_caches()  # scoped: drop the previous prefix query's caches
     o = load_tables(spark, sf_dir).table("orders")
     # scope-persisted so BOTH the rank prefix and the n total ride ONE
     # evaluation of the per-customer aggregate — on the decomposed path
@@ -668,13 +659,8 @@ def op_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r6: decile assignment decomposed (was an unpartitioned ntile over
     # the |customers|-row aggregate — one task); the 10-row cumulative
     # stays a plain window (bounded input by construction).
-    from data_pipeline_4_online_retail_spark.functions.prefix import (
-        global_ntile,
-        persist_scoped,
-        release_caches,
-    )
+    from data_pipeline_4_online_retail_spark.functions.prefix import global_ntile
 
-    release_caches()  # scoped: drop the previous prefix query's caches
     o = load_tables(spark, sf_dir).table("orders")
     per_cust = persist_scoped(
         o.groupBy("o_custkey").agg(
@@ -762,13 +748,8 @@ def op_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     # running sum over the |parts|-row aggregate — one task); integer
     # cents make the bucket recombination exact. The grand total rides a
     # broadcast 1-row frame instead of an unbounded-frame window.
-    from data_pipeline_4_online_retail_spark.functions.prefix import (
-        global_prefix,
-        persist_scoped,
-        release_caches,
-    )
+    from data_pipeline_4_online_retail_spark.functions.prefix import global_prefix
 
-    release_caches()  # scoped: drop the previous prefix query's caches
     li = load_tables(spark, sf_dir).table("lineitem")
     # scope-persisted so the cumulative prefix AND the grand total ride
     # ONE evaluation of the per-part aggregate on either prefix path

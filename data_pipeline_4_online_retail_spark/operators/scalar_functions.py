@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from data_pipeline_4_online_retail_spark.plans.registry import register
+from data_pipeline_4_online_retail_spark.session import persist_scoped
 from data_pipeline_4_online_retail_spark.sources.catalog import load_tables
 
 
@@ -698,13 +699,7 @@ def op_regression_closed_form(spark, sf_dir):
     tags=("stats", "r4c"),
 )
 def op_quantile_normalization(spark, sf_dir):
-    from data_pipeline_4_online_retail_spark.functions.prefix import (
-        global_prefix,
-        persist_scoped,
-        release_caches,
-    )
-
-    release_caches()  # scoped: drop the previous prefix query's caches
+    from data_pipeline_4_online_retail_spark.functions.prefix import global_prefix
 
     o = _t(spark, sf_dir, "orders")
     n_row = o.agg(F.count(F.lit(1)).alias("__n"))

@@ -979,12 +979,8 @@ def text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window task; decomposed over the range-bucket prefix (integer token/
     # vocab counts recombine exactly; doc_id is unique, so the original
     # rangeBetween frame == the rows frame).
-    from data_pipeline_4_online_retail_spark.functions.prefix import (
-        global_prefix,
-        release_caches,
-    )
+    from data_pipeline_4_online_retail_spark.functions.prefix import global_prefix
 
-    release_caches()  # scoped: drop the previous prefix query's caches
     toks = _docs(spark, sf_dir).select(
         "doc_id", F.explode(F.split("text", " ")).alias("w")
     )

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_4_online_retail_spark.plans.registry import register
+from data_pipeline_4_online_retail_spark.session import persist_scoped
 from data_pipeline_4_online_retail_spark.sources.catalog import load_tables
 from data_pipeline_4_online_retail_spark.plans.star import (
     revenue_col,
@@ -634,12 +635,6 @@ def tpch_q15(spark, sf_dir):
     # crossJoin over the scoped-persisted per-supplier frame instead of
     # Window.partitionBy() (which funneled the |suppliers|-sized frame
     # through one task); MAX is order-free, so bit-identical.
-    from data_pipeline_4_online_retail_spark.functions.prefix import (
-        persist_scoped,
-        release_caches,
-    )
-
-    release_caches()  # scoped: drop the previous query's caches
     li = _t(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= _ts("1996-01-01"))
         & (F.col("l_shipdate") < _ts("1996-04-01"))
@@ -1263,12 +1258,6 @@ def tpch_q11(spark, sf_dir):
     # without Window.partitionBy() funneling the |parts|-sized frame
     # through one task; DECIMAL sums are order-free, so the threshold is
     # bit-identical to the window form.
-    from data_pipeline_4_online_retail_spark.functions.prefix import (
-        persist_scoped,
-        release_caches,
-    )
-
-    release_caches()  # scoped: drop the previous query's caches
     li = _t(spark, sf_dir, "lineitem")
     supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nat = F.broadcast(

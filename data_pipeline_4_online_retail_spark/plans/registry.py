@@ -23,10 +23,13 @@ probe totals reflect production plans.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from data_pipeline_4_online_retail_spark.session import release_caches
 
 
 @dataclass
@@ -47,11 +50,21 @@ def register(
     doc: str = "",
     tags: tuple[str, ...] = (),
 ) -> Callable[[Callable[[SparkSession, str], DataFrame]], Callable]:
-    """Decorator: register a (spark, sf_dir) -> DataFrame builder."""
+    """Decorator: register a (spark, sf_dir) -> DataFrame builder.
+
+    The registered builder first releases the previous query's scoped
+    caches (see the cache-lifecycle note in ``session``)."""
 
     def wrap(fn: Callable[[SparkSession, str], DataFrame]) -> Callable:
-        REGISTRY[name] = Query(name=name, build=fn, oracle=oracle, doc=doc, tags=tags)
-        return fn
+        @functools.wraps(fn)
+        def build(*args, **kwargs) -> DataFrame:
+            release_caches()
+            return fn(*args, **kwargs)
+
+        REGISTRY[name] = Query(
+            name=name, build=build, oracle=oracle, doc=doc, tags=tags
+        )
+        return build
 
     return wrap
 

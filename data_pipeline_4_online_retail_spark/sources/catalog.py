@@ -92,6 +92,8 @@ class Catalog:
 
 def _layout_scan_width(path: str, spark: SparkSession) -> int:
     """max(number of data files, total bytes / maxPartitionBytes)."""
+    # os.walk sees the local filesystem only: off-box (HDFS, object
+    # stores) this reads as a wide layout and ``spread`` never fires.
     files: list[str] = []
     if os.path.isfile(path):
         files = [path]

@@ -2,12 +2,20 @@
 
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, ROOT)
+# Python workers (UDFs, mapInPandas) import the engine too; the JVM hands
+# them its launch environment, so this must be set before the session
+# starts for the suite to run from any working directory.
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from data_pipeline_4_online_retail_spark.session import get_spark
 from data_pipeline_4_online_retail_spark.sources.catalog import load_tables

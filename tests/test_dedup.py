@@ -147,8 +147,8 @@ def test_connected_components_matches_union_find(spark):
 
     from data_pipeline_4_online_retail_spark.operators.dedup import (
         connected_components,
-        release_caches,
     )
+    from data_pipeline_4_online_retail_spark.session import release_caches
 
     @settings(max_examples=4, deadline=None, derandomize=True)
     @given(
@@ -205,8 +205,8 @@ def test_connected_components_deep_path(spark):
     regardless of round count."""
     from data_pipeline_4_online_retail_spark.operators.dedup import (
         connected_components,
-        release_caches,
     )
+    from data_pipeline_4_online_retail_spark.session import release_caches
 
     n = 31
     # Shuffle ids so the min is mid-path (propagation must cross both arms).

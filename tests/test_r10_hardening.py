@@ -101,37 +101,34 @@ def test_connected_components_all_self_pairs(spark):
 
 def test_release_caches_survive_session_restart(tmp_path):
     """VERDICT r9 item 7: a host that stops the SparkSession and builds a
-    new one in-process left stale persisted handles in _RETAINED whose
-    unpersist NPE'd (BlockManagerMaster.driverEndpoint() is null). The
-    guarded release must drain them silently and leave the registry
-    usable on the NEW session. Subprocess-isolated: the scenario kills a
-    SparkContext, which must never touch the suite's shared session."""
+    new one in-process left stale persisted handles in the scoped-persist
+    registry whose unpersist NPE'd (BlockManagerMaster.driverEndpoint() is
+    null). The guarded release must drain them silently and leave the
+    registry usable on the NEW session. Subprocess-isolated: the scenario
+    kills a SparkContext, which must never touch the suite's shared
+    session."""
     script = textwrap.dedent(
         """
         import sys
         sys.path.insert(0, %r)
-        from data_pipeline_4_online_retail_spark.session import get_spark
-        from data_pipeline_4_online_retail_spark.operators import dedup, graph
-        from data_pipeline_4_online_retail_spark.functions import prefix
+        from data_pipeline_4_online_retail_spark import session
 
-        s1 = get_spark("restart-test", shuffle_partitions=2)
+        s1 = session.get_spark("restart-test", shuffle_partitions=2)
         df = s1.createDataFrame([(1, "a")], "id long, v string")
-        dedup._persist(df).count()
-        graph._persist(df.select("id")).count()
-        prefix._RETAINED.append(df)
+        session.persist_scoped(df).count()
+        session.persist_scoped(df.select("id")).count()
+        session._RETAINED.append(df)
         s1.stop()
 
-        s2 = get_spark("restart-test-2", shuffle_partitions=2)
-        dedup.release_caches()   # raised py4j NPE before the r10 guard
-        graph.release_caches()
-        prefix.release_caches()
-        assert not dedup._RETAINED and not graph._RETAINED
-        assert not prefix._RETAINED
+        s2 = session.get_spark("restart-test-2", shuffle_partitions=2)
+        session.release_caches()   # raised py4j NPE before the r10 guard
+        assert not session._RETAINED
 
-        # the new session is fully usable, including a fresh _persist
-        out = dedup._persist(s2.createDataFrame([(2,)], "id long"))
+        # the new session is fully usable, including a fresh persist_scoped
+        out = session.persist_scoped(s2.createDataFrame([(2,)], "id long"))
         assert out.count() == 1
-        dedup.release_caches()
+        session.release_caches()
+        assert not session._RETAINED
         print("RESTART_OK")
         """
     ) % str(Path(__file__).resolve().parent.parent)

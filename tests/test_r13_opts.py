@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import pytest
 
-from data_pipeline_4_online_retail_spark.operators import multimodal as mm
+from data_pipeline_4_online_retail_spark import session
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -47,16 +47,25 @@ def test_phash_dedup_python_pass_materializes_once(spark, qs):
         live = plan.split("InMemoryRelation")[0]
         assert "MapInPandas" not in live, live
     finally:
-        mm.release_caches()
+        session.release_caches()
 
 
 def test_phash_dedup_cache_released_on_reentry(spark, qs):
     qs["mm_phash_dedup"](spark, SF_DIR)
-    assert len(mm._RETAINED) == 1
+    assert len(session._RETAINED) == 1
     qs["mm_phash_dedup"](spark, SF_DIR)  # builder entry releases the last
-    assert len(mm._RETAINED) == 1
-    mm.release_caches()
-    assert not mm._RETAINED
+    assert len(session._RETAINED) == 1
+    session.release_caches()
+    assert not session._RETAINED
+
+
+def test_registered_query_entry_releases_other_modules_caches(spark, qs):
+    """One registry across modules: entering tpch_q01 (which persists
+    nothing) drops the caches a dedup query left behind."""
+    qs["dedup_minhash_lsh_fast"](spark, SF_DIR)
+    assert session._RETAINED
+    qs["tpch_q01"](spark, SF_DIR)
+    assert not session._RETAINED
 
 
 def test_dsir_stats_single_documents_scan(spark, qs):

@@ -20,10 +20,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry
-from bench import _release_query_caches
 from data_pipeline_4_online_retail_spark.session import (
     apply_scale_granularity,
     get_spark,
+    release_caches,
 )
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
@@ -50,7 +50,7 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 — sweep must finish
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
         finally:
-            _release_query_caches()
+            release_caches()
 
     with open("/tmp/registry_sweep.json", "w") as f:
         json.dump({"times": times, "errors": errors, "sf_dir": SF_DIR}, f)
