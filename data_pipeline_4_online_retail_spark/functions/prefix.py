@@ -41,14 +41,13 @@ tests/test_prefix_helper.py, so the switch is plan-only.
 
 Callers that already persist + count their aggregate pass the exact row
 count as ``rows_hint`` (RFM/Gini/ABC/Lorenz/conversion-lag); those route
-on ``SPARK_GRAFT_PREFIX_SMALL_ROWS`` (default 10M — the measured
-crossover) instead of the byte estimate, because Catalyst passes an
-Aggregate's CHILD size through and would decompose a dimension-sized
-frame a decade early. Env forcing works uniformly across BOTH signals
-(ADVICE r7): ``SPARK_GRAFT_PREFIX_SMALL_BYTES=0`` forces the
-decomposition everywhere (the plan-shape tests do), and a huge value
-(>= 2^60) forces the plain window everywhere — no separate
-``SMALL_ROWS`` override needed to force either path.
+on a fixed 10M-row cut (the measured crossover) instead of the byte
+estimate, because Catalyst passes an Aggregate's CHILD size through and
+would decompose a dimension-sized frame a decade early. Env forcing works
+uniformly across BOTH signals (ADVICE r7):
+``SPARK_GRAFT_PREFIX_SMALL_BYTES=0`` forces the decomposition everywhere
+(the plan-shape tests do), and a huge value (>= 2^60) forces the plain
+window everywhere.
 
 **Tie-skew salting (r7, VERDICT r6 item 4).** A single key value with a
 huge tie count lands in one bucket and re-creates the straggler inside
@@ -113,7 +112,7 @@ def _estimated_bytes(df: DataFrame) -> int | None:
 # per-customer frame over a fact table reads ~10x too big and
 # decomposes a decade early; callers that already persist + count their
 # aggregate know the true size for free).
-_SMALL_ROWS_DEFAULT = 10_000_000
+_SMALL_ROWS = 10_000_000
 
 
 def _use_plain_window(
@@ -136,15 +135,7 @@ def _use_plain_window(
         DECISIONS.append((fn, True, rows_hint))
         return True
     if rows_hint is not None:
-        try:
-            small_rows = int(
-                os.environ.get(
-                    "SPARK_GRAFT_PREFIX_SMALL_ROWS", _SMALL_ROWS_DEFAULT
-                )
-            )
-        except ValueError:  # pragma: no cover - malformed env
-            small_rows = _SMALL_ROWS_DEFAULT
-        bypass = small > 0 and rows_hint < small_rows
+        bypass = small > 0 and rows_hint < _SMALL_ROWS
         DECISIONS.append((fn, bypass, rows_hint))
         return bypass
     est = _estimated_bytes(df)

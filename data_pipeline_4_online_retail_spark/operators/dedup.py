@@ -250,16 +250,18 @@ def _minhash_via_explode(sharr: DataFrame, hash_cols: list) -> DataFrame:
     through the *interpreted* higher-order-function path, paying
     per-element lambda dispatch × n_hashes and allocating n_hashes
     intermediate arrays per row. The explode + groupBy(min) form computes
-    the IDENTICAL minima (tools/sig_formulation_probe.py pins equality
-    row-for-row at sf0.1 and the 10× replica, and measures −30% on the
-    signature stage at both tiers; a one-pass HOF ``aggregate``+
-    ``zip_with`` variant was also tried and loses to explode at 10×).
+    the IDENTICAL minima (tests/test_dedup.py's
+    ``test_minhash_explode_formulation_matches_hof_array_min`` pins
+    equality row-for-row for both signature forms; the r12 A/B measured
+    −30% on the signature stage at sf0.1 and the 10× replica; a one-pass
+    HOF ``aggregate``+``zip_with`` variant was also tried and loses to
+    explode at 10×).
     Partial (map-side) aggregation makes the added exchange carry one
     narrow row per doc — |docs| × (n_hashes longs / hex strings), exactly
     the signature table itself — so nothing document-sized shuffles.
 
-    Edge parity with the array_min form, pinned by the probe's full-outer
-    equality join: ``explode_outer`` keeps empty/NULL shingle arrays as a
+    Edge parity with the array_min form, pinned by the same test:
+    ``explode_outer`` keeps empty/NULL shingle arrays as a
     single NULL-shingle row whose guarded hash is NULL, so those docs
     keep a signature row with all-NULL minima (= array_min of an empty
     array).

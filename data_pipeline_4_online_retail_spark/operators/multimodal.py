@@ -38,16 +38,6 @@ from data_pipeline_4_online_retail_spark.session import (
 )
 from data_pipeline_4_online_retail_spark.sources.catalog import load_tables
 
-MEDIA_META = T.StructType(
-    [
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.IntegerType(), True),
-        T.StructField("n_frames", T.IntegerType(), True),
-    ]
-)
-
 IMAGE_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),

@@ -15,7 +15,7 @@ this engine, session.py) and broadcast joins; these operators are the
 explicit versions with deterministic salts, and the oracle-checked query
 proves the salted plan reproduces the unsalted semantics exactly.
 
-Measured (tools/skew_probe.py, SCALING §r9, 30%-hot-key join at sf10):
+Measured (SCALING §"Round 9: the skew story", 30%-hot-key join at sf10):
 unhandled 13.7 s; AQE at Spark's default 256 MB/factor-5 granularity
 13.0 s (a near no-op — the hot partition barely clears the bar); AQE at
 the 64 MB/factor-2 granularity session.py now sets 6.4 s; this module's

@@ -54,9 +54,6 @@ def _dec_avg(col: str) -> F.Column:
     return _dec_sum(col) / F.count(F.lit(1))
 
 
-_DEC_SUM_SQL = "CAST(SUM(CAST({c} AS DECIMAL(18,4))) AS DOUBLE)"
-
-
 def _ts(s: str) -> F.Column:
     return F.lit(s).cast("timestamp")
 
@@ -1094,17 +1091,6 @@ _PS_COST_CTE = """
            MIN(l_extendedprice) AS ps_supplycost
     FROM lineitem GROUP BY 1, 2
 """
-
-
-def _ps_cost(spark, sf_dir) -> DataFrame:
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy(
-            F.col("l_partkey").alias("ps_partkey"),
-            F.col("l_suppkey").alias("ps_suppkey"),
-        )
-        .agg(F.min("l_extendedprice").alias("ps_supplycost"))
-    )
 
 
 @register(

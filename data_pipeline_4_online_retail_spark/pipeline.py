@@ -58,7 +58,7 @@ def _load_stage(raw_loader, country_loader):
     return run
 
 
-def _transform_stage(cat_unused=None):
+def _transform_stage():
     def run(cat: Catalog) -> None:
         for name, model in retail.MODELS[:5]:  # dims + fact
             cat.register(name, model(cat))

@@ -15,8 +15,9 @@ One function per reference stage, same semantics, same quirks:
   ``report_year_invoices``  the three report models
 
 All models take a Catalog (the dbt ``source()``/``ref()`` role) and return
-DataFrames; ``build_all`` materializes them in topological order,
-registering each result so downstream ``ref()`` reads hit the built stage.
+DataFrames; ``pipeline.py``'s transform and report stages run them in
+``MODELS`` (topological) order, registering each result so downstream
+``ref()`` reads hit the built stage.
 
 Quirks preserved on purpose (documented deviations belong in quality
 checks, not silently fixed):
@@ -223,14 +224,3 @@ MODELS = [
     ("report_product_invoices", report_product_invoices),
     ("report_year_invoices", report_year_invoices),
 ]
-
-
-def build_all(cat: Catalog, *, preprocess_raw: bool = True) -> Catalog:
-    """Run preprocess + every model in topo order, registering each result
-    (the ``materialized: table`` role; swap ``register`` for
-    ``write_table`` + re-read to persist stages)."""
-    if preprocess_raw:
-        cat.register("raw_invoices", preprocess(cat.table("raw_invoices")))
-    for name, model in MODELS:
-        cat.register(name, model(cat))
-    return cat

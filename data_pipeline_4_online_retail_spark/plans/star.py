@@ -319,7 +319,7 @@ def fct_invoice_line_value(cat: Catalog) -> DataFrame:
     # spread(): the md5 key projection + joins are map-side CPU over every
     # fact row; on a narrow layout (single-row-group fixture file → one
     # scan task) they would run on ONE core (measured 1.43 → 0.48 s at
-    # sf0.1, tools/star_fct_probe.py). On a many-file layout the gate
+    # sf0.1, OPTIMIZATION_r13.md). On a many-file layout the gate
     # compiles to a plain scan — no exchange in the plan (guide §2.4/§6).
     li = cat.spread("lineitem", "l_orderkey", min_speedup=4.0)
     o = cat.table("orders")

@@ -275,23 +275,25 @@ def check_curation(spark, sf_dir: str) -> QualityReport:
     n_docs = docs.count()
 
     split = C.text_split_assign(spark, sf_dir)
+    n_split = split.count()
     rep.add(
         CheckResult(
             "text_split_assign",
             "one row per document",
-            split.count() == n_docs and split.select("doc_id").distinct().count() == n_docs,
-            f"{split.count()} rows / {n_docs} docs",
+            n_split == n_docs and split.select("doc_id").distinct().count() == n_docs,
+            f"{n_split} rows / {n_docs} docs",
         )
     )
 
     packed = C.text_pack_sequences(spark, sf_dir)
+    n_packed = packed.count()
     rep.add(
         CheckResult(
             "text_pack_sequences",
             "conservation: every doc packed exactly once",
-            packed.count() == n_docs
+            n_packed == n_docs
             and packed.select("doc_id").distinct().count() == n_docs,
-            f"{packed.count()} rows / {n_docs} docs",
+            f"{n_packed} rows / {n_docs} docs",
         )
     )
 
@@ -299,8 +301,6 @@ def check_curation(spark, sf_dir: str) -> QualityReport:
     rep.add(ratio_between(samp, "sampled = 1", 0.05, 0.95, table="text_quality_sample"))
 
     # r4 gates ------------------------------------------------------------
-    from pyspark.sql import functions as F
-
     temp = C.text_temperature_sample(spark, sf_dir)
     prob_sum = temp.agg(F.sum("sample_prob")).head()[0]
     rep.add(
@@ -321,7 +321,7 @@ def check_curation(spark, sf_dir: str) -> QualityReport:
 
     spans = C.text_dup_span_removal(spark, sf_dir)
     # conservation: kept + dropped spans == ceil(tokens/SPAN_WORDS) per doc
-    expected = C._docs(spark, sf_dir).select(
+    expected = docs.select(
         "doc_id",
         F.ceil(
             F.size(F.split("text", " ")) / F.lit(float(C.SPAN_WORDS))
@@ -334,12 +334,13 @@ def check_curation(spark, sf_dir: str) -> QualityReport:
         )
         .count()
     )
+    n_spans = spans.count()
     rep.add(
         CheckResult(
             "text_dup_span_removal",
             "span conservation (kept + dropped = total)",
-            bad == 0 and spans.count() == n_docs,
-            f"{bad} violations / {spans.count()} docs",
+            bad == 0 and n_spans == n_docs,
+            f"{bad} violations / {n_spans} docs",
         )
     )
 

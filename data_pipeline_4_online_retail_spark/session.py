@@ -41,9 +41,7 @@ _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # 600M-row semi-join sort dies with UNABLE_TO_ACQUIRE_MEMORY at 32
 # coarse tasks). 128 MiB therefore puts sf0.001-sf0.1 on the fast 1x
 # path and sf1-and-up on the fine-start path.
-_FINE_SHUFFLE_INPUT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FINE_INPUT_BYTES", str(128 * 1024 * 1024))
-)
+_FINE_SHUFFLE_INPUT_BYTES = 128 << 20
 _FINE_SHUFFLE_MULT = 8
 
 
@@ -68,20 +66,9 @@ def initial_partition_num(
     """Scale-aware AQE ``initialPartitionNum``: ``shuffle_partitions`` for
     small inputs, ``8x`` past :data:`_FINE_SHUFFLE_INPUT_BYTES` so large
     sort/shuffle stages start fine and AQE coalesces back to the 64 MB
-    advisory. ``SPARK_GRAFT_INIT_PART_MULT`` forces the multiplier (the
-    A/B harnesses use it); on a real cluster the analogue is sizing this
-    conf to the job's input, which spark-submit does per-job anyway.
+    advisory. On a real cluster the analogue is sizing this conf to the
+    job's input, which spark-submit does per-job anyway.
     """
-    forced = os.environ.get("SPARK_GRAFT_INIT_PART_MULT")
-    if forced:
-        try:
-            return max(1, int(forced)) * shuffle_partitions
-        except ValueError:
-            # ADVICE r10: a malformed override must not fail session
-            # construction — fall back to the derived path, loudly.
-            _LOG.warning(
-                "ignoring malformed SPARK_GRAFT_INIT_PART_MULT=%r", forced
-            )
     if sf_dir and _dir_bytes(sf_dir) >= _FINE_SHUFFLE_INPUT_BYTES:
         return _FINE_SHUFFLE_MULT * shuffle_partitions
     return shuffle_partitions
@@ -89,9 +76,10 @@ def initial_partition_num(
 
 def apply_scale_granularity(spark: SparkSession, sf_dir: str | None) -> int:
     """Re-derive ``initialPartitionNum`` for a (possibly different-scale)
-    input dir on a live session — it is a runtime SQL conf, so bench /
-    probe harnesses call this when they switch tiers (sf0.1 -> scale10
-    replica -> sf100 replica) instead of rebuilding the session."""
+    input dir on a live session — it is a runtime SQL conf, so bench.py
+    and the sweep / plan-dump / scale-probe tools call this when they
+    switch tiers (sf0.1 -> scale10 replica -> sf100 replica) instead of
+    rebuilding the session."""
     n = initial_partition_num(
         sf_dir, int(spark.conf.get("spark.sql.shuffle.partitions"))
     )
@@ -172,7 +160,7 @@ def get_spark(
        :func:`apply_scale_granularity(spark, input_dir)` on the live
        session, or large sort/shuffle stages keep the coarse 1x start —
        the q04-at-sf100 ``UNABLE_TO_ACQUIRE_MEMORY`` scenario (ADVICE
-       r10). bench.py and every probe tool do this when switching tiers.
+       r10). bench.py and the tools that switch tiers do this.
     """
     cpus = int(_DEFAULT_CPUS)
     builder = (
@@ -193,7 +181,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # -- skew-split granularity (measured, tools/skew_probe.py r9):
+        # -- skew-split granularity (measured, SCALING §"Round 9: the
+        #    skew story" and §"Round 10: skew probe re-run"):
         #    the 256 MB/factor-5 defaults barely split a ~300 MB
         #    CPU-bound hot partition (13.0 s vs 13.7 unhandled on a 30%-
         #    hot-key join at sf10); 64 MB/factor-2 recovers 2x (6.4 s).
@@ -217,7 +206,7 @@ def get_spark(
         #    sf0.1 cost, while the benefit (q04 sf100's
         #    UNABLE_TO_ACQUIRE_MEMORY fix — 32 coarse tasks each sorting
         #    ~300 MB on one heap) only exists at decade scale. Runtime
-        #    conf; bench/probes re-derive per tier via
+        #    conf; bench and the tier-switching tools re-derive it via
         #    apply_scale_granularity(). -----------------------------------
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
@@ -240,10 +229,11 @@ def get_spark(
         #    zero-storage runtime cousin of the partkey projection.
         #    Spark's stock applicationSideScanSizeThreshold (10 GB) means
         #    it practically never fires; 1g/100m measured at sf100
-        #    (tools/runtime_filter_probe.py, SCALING §r10): q17 63 -> 9 s,
-        #    q19 21.6 -> 6.3, q09 64.8 -> 40.2, q08 64.6 -> 51.4, and
-        #    plan-verified a no-op at sf0.1/sf1 (joins broadcast below
-        #    these sizes — zero might_contain across headline+tpch).
+        #    (SCALING §"Round 10: runtime bloom-filter join pruning"):
+        #    q17 63 -> 9 s, q19 21.6 -> 6.3, q09 64.8 -> 40.2, q08
+        #    64.6 -> 51.4, and plan-verified a no-op at sf0.1/sf1 (joins
+        #    broadcast below these sizes — zero might_contain across
+        #    headline+tpch).
         #    Semantics-free: bloom false positives just reach the real
         #    join. --------------------------------------------------------
         .config(
@@ -254,16 +244,6 @@ def get_spark(
         .config(
             "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
             "100m",
-        )
-        # -- shuffle/spill compression codec. lz4 (Spark's default) is the
-        #    right latency/ratio trade on a cluster with real disks; on a
-        #    spill-constrained single node (the sf100 decade probes live on
-        #    ~60 GB of scratch) JVM-native zstd roughly halves shuffle-file
-        #    footprint for ~5-10% CPU. Env-set SPARK_GRAFT_IO_CODEC=zstd for
-        #    those probes; clusters tune via spark-submit as usual.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
         )
         # -- Arrow for the (rare) pandas_udf paths -------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

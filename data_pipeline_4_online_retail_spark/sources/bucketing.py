@@ -30,9 +30,9 @@ count wins in aggregate (96.2 s vs 105.4) and the write itself is
 35-44% cheaper at 128 (more write parallelism). Default locally: 128,
 with the q03/q05 caveat recorded rather than averaged away. This rule
 is CODE, not prose: ``pick_bucket_count(table_bytes, cores,
-consumers=...)`` below implements it (the layout probes derive their
-defaults from it). Keep the count a power of two so a future re-bucketing to
-half/double the count can merge/split buckets without a full shuffle.
+consumers=...)`` below implements it. Keep the count a power of two so
+a future re-bucketing to half/double the count can merge/split buckets
+without a full shuffle.
 Bucket-pruning on point predicates (key = literal) reads 1/N of the
 files.
 """
@@ -97,7 +97,7 @@ def pick_bucket_count(
 
 def table_file_bytes(sf_dir: str, table: str) -> int:
     """On-disk bytes of ``<sf_dir>/<table>.parquet`` (file or directory) —
-    the ``table_bytes`` input the layout probes feed pick_bucket_count."""
+    the ``table_bytes`` input of pick_bucket_count."""
     import os
 
     p = os.path.join(sf_dir, f"{table}.parquet")
@@ -129,17 +129,19 @@ def write_bucketed(
     file-count hygiene: the scan only reports the bucket SORT order when
     every bucket is a single file, so multi-file buckets silently
     re-introduce a per-query Sort under every SortMergeJoin that the
-    ``sortBy`` was meant to eliminate (observed r8: the bucketed star
-    probe kept a Sort node until the rewrite). Note the cost honestly:
+    ``sortBy`` was meant to eliminate (observed r8, SCALING §"Round 8
+    follow-up: the bucketed layout": the bucketed star plan kept a Sort
+    node until the rewrite). Note the cost honestly:
     a plain bucketBy write does NOT shuffle (it sorts within tasks and
     writes per-(task,bucket) files), so the up-front repartition adds
     one write-time exchange — a cost the layout amortizes across every
     subsequent co-bucketed read. At 100 TB pick n_buckets so one bucket
     ≈ one executor-core working set.
 
-    Layout decision rule, measured (tools/second_key_probe.py §r9,
-    tools/partkey_tail_probe.py §r10): bucket the FACT on the
-    workload's dominant join key only — a table has one layout. For a
+    Layout decision rule, measured (SCALING §"Round 9: the second join
+    key, settled", §"Round 10: the partkey tail's cheaper storage
+    point"): bucket the FACT on the workload's dominant join key only —
+    a table has one layout. For a
     standing SECOND key family (TPC-H's partkey tail), the priced
     options at sf100 are: (a) dim-side bucketing — free (8 s part
     write), a reliable 12-25% (only the dim-side exchange dies; the

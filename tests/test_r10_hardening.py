@@ -41,23 +41,19 @@ def test_initial_partition_num_large_input_goes_fine(monkeypatch):
     assert sess.initial_partition_num(SF001, 32) == _FINE_SHUFFLE_MULT * 32
 
 
-def test_initial_partition_num_env_force(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_INIT_PART_MULT", "8")
-    assert initial_partition_num(SF001, 32) == 256
-    monkeypatch.setenv("SPARK_GRAFT_INIT_PART_MULT", "1")
-    assert initial_partition_num("/anything", 32) == 32
-
-
 def test_apply_scale_granularity_sets_runtime_conf(spark, monkeypatch):
-    """Bench/probe harnesses re-derive per tier on the LIVE session —
-    the conf must be runtime-settable and follow the derivation."""
+    """Bench and the tier-switching tools re-derive per tier on the
+    LIVE session — the conf must be runtime-settable and follow the
+    derivation."""
+    import data_pipeline_4_online_retail_spark.session as sess
+
     key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     before = spark.conf.get(key, None)
     try:
         n = apply_scale_granularity(spark, SF001)
         assert n == int(spark.conf.get("spark.sql.shuffle.partitions"))
         assert spark.conf.get(key) == str(n)
-        monkeypatch.setenv("SPARK_GRAFT_INIT_PART_MULT", "8")
+        monkeypatch.setattr(sess, "_FINE_SHUFFLE_INPUT_BYTES", 1024)
         n8 = apply_scale_granularity(spark, SF001)
         assert n8 == 8 * n
         assert spark.conf.get(key) == str(n8)

@@ -1,27 +1,29 @@
-"""r11 guard-path pins (ADVICE r10): malformed-env fallback and the
-shared drain helper. No SparkSession needed."""
+"""r11 guard-path pins (ADVICE r10): the shared drain helper and the
+package's environment surface. No SparkSession needed."""
 
 from __future__ import annotations
 
-from data_pipeline_4_online_retail_spark.session import (
-    drain_retained,
-    initial_partition_num,
-)
+import re
+from pathlib import Path
 
-SF001 = "/root/testdata/sf0.001"
-
-
-def test_malformed_init_part_mult_falls_back(monkeypatch):
-    """A malformed SPARK_GRAFT_INIT_PART_MULT must not raise (it used to
-    fail session construction, ADVICE r10) — the derived path runs
-    instead, so the small fixture stays on the 1x fast path."""
-    monkeypatch.setenv("SPARK_GRAFT_INIT_PART_MULT", "eight")
-    assert initial_partition_num(SF001, 32) == 32
+import data_pipeline_4_online_retail_spark as pkg
+from data_pipeline_4_online_retail_spark.session import drain_retained
 
 
-def test_valid_init_part_mult_still_forces(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_INIT_PART_MULT", "8")
-    assert initial_partition_num(SF001, 32) == 256
+def test_package_reads_only_the_four_documented_env_names():
+    """The engine package reads exactly these four environment names
+    (README's env table lists them with the bench/tool-only ones). A new
+    knob must be added here on purpose; a value nothing sets stays a
+    constant."""
+    names = set()
+    for path in Path(pkg.__file__).parent.rglob("*.py"):
+        names |= set(re.findall(r"SPARK_GRAFT_[A-Z0-9_]+", path.read_text()))
+    assert names == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_DRIVER_MEM",
+        "SPARK_GRAFT_PREFIX_SMALL_BYTES",
+        "SPARK_GRAFT_SF_DIR",
+    }
 
 
 class _RaisingHandle:
