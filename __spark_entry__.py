@@ -18,15 +18,12 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from data_pipeline_4_online_retail_spark.plans import registry as _registry
+from data_pipeline_4_online_retail_spark.plans.registry import REGISTRY  # noqa: E402
 
-# Importing these modules populates the registry.
-from data_pipeline_4_online_retail_spark.plans import star as _star  # noqa: E402
-from data_pipeline_4_online_retail_spark.plans.registry import REGISTRY, Query  # noqa: E402
-
-for _name, (_fn, _sql) in _star.STAR_QUERIES.items():
-    REGISTRY.setdefault(_name, Query(name=_name, build=_fn, oracle=_sql))
-
-# Operator micro-queries + extensions (each module self-registers).
+# Importing these modules populates the registry (each module
+# self-registers); the star schema first, then the operator micro-queries
+# and extensions.
+import data_pipeline_4_online_retail_spark.plans.star  # noqa: E402,F401
 import data_pipeline_4_online_retail_spark.operators.relational  # noqa: E402,F401
 import data_pipeline_4_online_retail_spark.operators.dedup  # noqa: E402,F401
 import data_pipeline_4_online_retail_spark.operators.similarity  # noqa: E402,F401

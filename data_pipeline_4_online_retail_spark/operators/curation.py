@@ -1249,7 +1249,7 @@ NEAREST_TOLERANCE_US = 43_200 * 1_000_000  # ±12 h (sf fixtures: per-user event
     "range-join explosion, no per-row subquery; microsecond-integer "
     "gaps keep both engines hash-exact. DuckDB oracle uses the same "
     "window formulation (its native ASOF is backward-only).",
-    tags=("curation", "events", "r4c"),
+    tags=("curation", "events"),
 )
 def ev_nearest_join(spark, sf_dir):
     e = _events(spark, sf_dir)
@@ -1377,7 +1377,7 @@ def _ares_key() -> Column:
     "engine-stable and only the reported score needs quantizing. The "
     "unquantized priority stays pinned bit-tight by the Python "
     "replica in tests/test_r4c_ops.py.",
-    tags=("curation", "sampling", "r4c"),
+    tags=("curation", "sampling"),
 )
 def text_weighted_sample_ares(spark, sf_dir):
     d = _docs(spark, sf_dir)
@@ -1430,7 +1430,7 @@ def text_weighted_sample_ares(spark, sf_dir):
     "pipeline_curation_e2e — and the fixture's near-dups really do "
     "straddle splits (pytest pins leaks>0 and re-derives every "
     "group). One digest shuffle; output O(duplicate groups).",
-    tags=("curation", "quality", "r4c"),
+    tags=("curation", "quality"),
 )
 def text_split_leakage_audit(spark, sf_dir):
     d = _docs(spark, sf_dir)
@@ -1499,7 +1499,7 @@ COGROUP_BUCKETS = 64
     "out of the right side's Arrow batch under some downstream plans — "
     "rename the right side's columns before cogrouping so only the "
     "grouping key is shared.",
-    tags=("engine", "arrow", "r4e"),
+    tags=("engine", "arrow"),
 )
 def op_cogroup_asof(spark, sf_dir):
     e = _events(spark, sf_dir)
@@ -1621,7 +1621,7 @@ def op_cogroup_asof(spark, sf_dir):
     "division per row: hash-exact. Scale: the report costs one scan "
     "regardless of gate count (adding a gate adds a CASE arm, not a "
     "pass).",
-    tags=("curation", "r4e"),
+    tags=("curation",),
 )
 def text_filter_attrition(spark, sf_dir):
     t = _docs(spark, sf_dir).select("doc_id", F.split("text", " ").alias("toks"))

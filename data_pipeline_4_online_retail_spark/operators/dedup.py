@@ -1497,7 +1497,7 @@ URL_SHARD_MOD = 100
     "fragment. Scale: pure map-side canonicalization + one canonical-"
     "key shuffle; output O(duplicated URLs). Reference analogue: none "
     "(retail CSV has no URLs); modeled on CCNet/RefinedWeb pipelines.",
-    tags=("dedup", "curation", "r4c"),
+    tags=("dedup", "curation"),
 )
 def dedup_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir).table("documents")
@@ -1592,7 +1592,7 @@ FROM merged
     "truth sample), exactly how production dedup recall is audited. "
     "Integer counts + two identically-spelled double divisions: "
     "hash-exact.",
-    tags=("dedup", "evaluation", "r4d"),
+    tags=("dedup", "evaluation"),
 )
 def dedup_lsh_recall_report(spark, sf_dir):
     sharr = persist_scoped(shingled_docs(_docs(spark, sf_dir)))
@@ -1686,7 +1686,7 @@ JOIN sharr b ON c.doc_b = b.doc_id
     "family oracles use — both hash-exact cross-engine. Scale: "
     "candidate-pair-bounded (the band join), signatures join by "
     "doc_id; no new corpus-sized work.",
-    tags=("dedup", "evaluation", "r4d"),
+    tags=("dedup", "evaluation"),
 )
 def dedup_minhash_estimate(spark, sf_dir):
     sharr = persist_scoped(shingled_docs(_docs(spark, sf_dir)))

@@ -736,7 +736,7 @@ ATTRIB_LOOKBACK_US = 3_600_000_000  # 1 hour
     "per-user pass, then a 3-row report aggregate. Oracle uses DuckDB's "
     "native ASOF LEFT JOIN over the same touch set. Revenue follows the "
     "exact-DECIMAL discipline.",
-    tags=("events", "r4b"),
+    tags=("events",),
 )
 def ev_attribution_last_touch(spark, sf_dir):
     e = _events(spark, sf_dir)
@@ -832,7 +832,7 @@ SESSIONIZE_GAP_US = 300 * 1_000_000  # 5 minutes, microsecond-exact
     "(epoch_us / unix_micros) keeps both engines bit-identical. "
     "Reference analogue: none (the retail pipeline has no behavioral "
     "sessions); modeled on standard web-analytics sessionization.",
-    tags=("events", "r4c"),
+    tags=("events",),
 )
 def ev_sessionize(spark, sf_dir):
     e = _events(spark, sf_dir)
@@ -879,7 +879,7 @@ JOURNEY_PREFIX_LEN = 5
     "one user_id shuffle + one path shuffle. array_sort on "
     "struct(ts, event_id, event_type) gives the deterministic order "
     "without a window pass.",
-    tags=("events", "r4c"),
+    tags=("events",),
 )
 def ev_journey_paths(spark, sf_dir):
     e = _events(spark, sf_dir)
@@ -920,7 +920,7 @@ def ev_journey_paths(spark, sf_dir):
     "day) and the only global window runs over the DAY-level frame "
     "(|days|, trivially small). The same transform is what streaming "
     "dashboards use for all-time-uniques.",
-    tags=("events", "r4c"),
+    tags=("events",),
 )
 def ev_cumulative_distinct_users(spark, sf_dir):
     e = _events(spark, sf_dir)
@@ -982,7 +982,7 @@ def ev_cumulative_distinct_users(spark, sf_dir):
     "rounding. Scale: one user_id shuffle + a 2-row variant aggregate; "
     "the final cross join is 1x1. The salted-hash assignment is the "
     "production shape (stable across sessions, no assignment table).",
-    tags=("events", "experiment", "r4c"),
+    tags=("events", "experiment"),
 )
 def ev_ab_test_metrics(spark, sf_dir):
     e = _events(spark, sf_dir)
@@ -1072,7 +1072,7 @@ DWELL_CAP_US = 1800 * 1_000_000  # 30 min: tab-abandonment cap
     "hash-exact across engines. Scale: one user_id shuffle for the "
     "lead pass, then a tiny event_type aggregate; no state beyond the "
     "window sort.",
-    tags=("events", "r4c"),
+    tags=("events",),
 )
 def ev_dwell_time(spark, sf_dir):
     e = _events(spark, sf_dir)
@@ -1123,7 +1123,7 @@ CM_WIDTH = 64
     "fails if the Spark sketch violates either bound. Scale: sketch "
     "size is d*w counters regardless of input; the only corpus-sized "
     "work is the map-side combine.",
-    tags=("events", "sketch", "r4c"),
+    tags=("events", "sketch"),
 )
 def ev_cm_heavy_hitters(spark, sf_dir):
     e = _events(spark, sf_dir).select("user_id")
@@ -1190,7 +1190,7 @@ BURST_FACTOR = 2.0
     "total. The avg is an exact integer ratio; the comparison "
     "threshold is derived identically in both engines. Complements "
     "ev_anomaly_zscore (value-based) with a rate-based signal.",
-    tags=("events", "anomaly", "r4c"),
+    tags=("events", "anomaly"),
 )
 def ev_burst_detection(spark, sf_dir):
     e = _events(spark, sf_dir)
@@ -1233,7 +1233,7 @@ def ev_burst_detection(spark, sf_dir):
     "follows the DECIMAL discipline. Scale: one custkey shuffle for "
     "first-order months, one (cohort, age) aggregate; the join side "
     "carries only (custkey, cohort_month).",
-    tags=("events", "retail", "r4c"),
+    tags=("events", "retail"),
 )
 def ev_cohort_ltv(spark, sf_dir):
     o = load_tables(spark, sf_dir).table("orders")
@@ -1299,7 +1299,7 @@ COVERAGE_HALF_WINDOW_US = 150 * 1_000_000  # ±2.5 min of attention per event
     "engines, so island numbering starts at 0 identically. All "
     "integer-microsecond arithmetic; one user_id shuffle drives both "
     "window passes and both aggregates.",
-    tags=("events", "r4c"),
+    tags=("events",),
 )
 def ev_interval_coverage(spark, sf_dir):
     e = _events(spark, sf_dir)
@@ -1358,7 +1358,7 @@ def ev_interval_coverage(spark, sf_dir):
     "segments swap in the bitmap/minhash forms (op_bitmap_distinct, "
     "dedup_minhash_lsh) — this exact form is the audit baseline. The "
     "marketing 'audience overlap matrix' in one query.",
-    tags=("events", "r4c"),
+    tags=("events",),
 )
 def ev_audience_overlap(spark, sf_dir):
     e = _events(spark, sf_dir)
@@ -1437,7 +1437,7 @@ def ev_audience_overlap(spark, sf_dir):
     "for state-like series where absence means 'unchanged'). Scale: "
     "grid size is bounded by active-span days per user; one user_id "
     "shuffle drives the join and the fill window.",
-    tags=("events", "r4c"),
+    tags=("events",),
 )
 def ev_gap_fill_forward(spark, sf_dir):
     e = _events(spark, sf_dir)
@@ -1494,7 +1494,7 @@ def ev_gap_fill_forward(spark, sf_dir):
     "calendar attrs (isodow == weekday+1). Scale: at most 168 groups; "
     "the aggregate collapses map-side to one row per (dow, hour) per "
     "partition.",
-    tags=("events", "r4c"),
+    tags=("events",),
 )
 def ev_seasonality_profile(spark, sf_dir):
     e = _events(spark, sf_dir)
@@ -1544,7 +1544,7 @@ WAU_WINDOW_DAYS = 7
     "contributions table. DuckDB oracle uses the identical "
     "formulation (window DISTINCT aggregates are the non-portable "
     "alternative).",
-    tags=("events", "r4c"),
+    tags=("events",),
 )
 def ev_rolling_wau(spark, sf_dir):
     e = _events(spark, sf_dir)
@@ -1627,7 +1627,7 @@ def ev_rolling_wau(spark, sf_dir):
     "the raw funnel. Ratios divide exact integers (IEEE-identical); "
     "the 4-row window pass is trivially small. Same single user_id "
     "partitioning as ev_funnel underneath.",
-    tags=("events", "analytics", "r4c"),
+    tags=("events", "analytics"),
 )
 def ev_funnel_dropoff(spark, sf_dir):
     stages = ev_funnel(spark, sf_dir).filter(
@@ -1697,7 +1697,7 @@ def ev_funnel_dropoff(spark, sf_dir):
     "(peak, first_t) is one ordinary max-of-struct aggregate (live "
     "ASC, -t ASC breaks ties toward the EARLIEST peak instant), not a "
     "second global window.",
-    tags=("events", "r4c"),
+    tags=("events",),
 )
 def ev_peak_concurrency(spark, sf_dir):
     from data_pipeline_4_online_retail_spark.functions.prefix import global_prefix
@@ -1767,7 +1767,7 @@ def ev_peak_concurrency(spark, sf_dir):
     "islands sessionization as ev_sessionize; the ratio divides two "
     "exact integers. One user_id shuffle end-to-end, final 1-row "
     "aggregate.",
-    tags=("events", "r4c"),
+    tags=("events",),
 )
 def ev_bounce_rate(spark, sf_dir):
     sessions = ev_sessionize(spark, sf_dir)
@@ -1827,7 +1827,7 @@ def ev_bounce_rate(spark, sf_dir):
     "the ntile for a bucketed histogram if even the user table "
     "outgrows a sort. The funnel/attribution family's time-to-convert "
     "report (GA4 'time to purchase').",
-    tags=("events", "analytics", "r4d"),
+    tags=("events", "analytics"),
 )
 def ev_conversion_lag(spark, sf_dir):
     # r13 (VERDICT r12 item 6, the ev_funnel playbook): the old lags
@@ -1961,7 +1961,7 @@ def ev_conversion_lag(spark, sf_dir):
     "algorithms, one hash. Scale: both features shuffle on user_id "
     "only; N features = N window passes over ONE sorted exchange "
     "when they share the entity key.",
-    tags=("events", "curation", "r4d"),
+    tags=("events", "curation"),
 )
 def ev_feature_store_pit(spark, sf_dir):
     ev = _events(spark, sf_dir)
@@ -2070,7 +2070,7 @@ def ev_feature_store_pit(spark, sf_dir):
     "EWMA leaves bit-exactness (0.3*x rounds differently than "
     "repeated halving) — that variant belongs rows-only with a "
     "replica, which is why the oracle-able alpha is pinned here.",
-    tags=("events", "analytics", "r4d"),
+    tags=("events", "analytics"),
 )
 def ev_ewma_level(spark, sf_dir):
     ev = _events(spark, sf_dir)
@@ -2124,7 +2124,7 @@ def ev_ewma_level(spark, sf_dir):
     "prefix never includes the held-out point), run backwards over "
     "history instead of forward over features. Scale: one user-keyed "
     "shuffle; per-user arrays bounded as in the sessionize family.",
-    tags=("events", "analytics", "evaluation", "r4d"),
+    tags=("events", "analytics", "evaluation"),
 )
 def ev_forecast_backtest(spark, sf_dir):
     ev = _events(spark, sf_dir)
@@ -2201,7 +2201,7 @@ TWA_HORIZON = "2024-01-31 00:00:00"  # past max(ts) at every fixture SF
     "both engines regardless of summation order. Scale: the single "
     "user_id exchange serves the LEAD window and the aggregate; no "
     "state beyond one row of look-ahead.",
-    tags=("events", "analytics", "r4e"),
+    tags=("events", "analytics"),
 )
 def ev_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _events(spark, sf_dir)
@@ -2277,7 +2277,7 @@ CUSUM_ALARM_H = 6  # alarm threshold h
     "literal recursion in Python and pins equality, plus the "
     "structural properties (C_t >= 0, resets at the running-min "
     "floor, alarm monotone in cusum).",
-    tags=("events", "monitoring", "r4e"),
+    tags=("events", "monitoring"),
 )
 def ev_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _events(spark, sf_dir)
@@ -2372,7 +2372,7 @@ KM_CENSOR_CUTOFF = "2001-01-01 00:00:00"  # customers ordering at/after: censore
     "itself is bounded by distinct week-lifetimes (a few hundred), so "
     "the single-group collect is O(curve), never O(subjects) — the "
     "same bounded-driver-state argument as sim_kmeans\' centroids.",
-    tags=("events", "analytics", "r4e"),
+    tags=("events", "analytics"),
 )
 def ev_survival_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_tables(spark, sf_dir).table("orders")
@@ -2480,7 +2480,7 @@ def ev_survival_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle, per-user bounded arrays; the streaming twin would carry "
     "two doubles per key in applyInPandasWithState exactly like the "
     "EWMA tracker.",
-    tags=("events", "analytics", "r4e"),
+    tags=("events", "analytics"),
 )
 def ev_holt_linear_trend(spark, sf_dir):
     ev = _events(spark, sf_dir)
@@ -2610,7 +2610,7 @@ HW_ANCHOR_MONDAY = "2024-01-01"  # a Monday; weekday slot = datediff % 7
     "events is the same ~800-element fold). The streaming twin would "
     "carry (l, b, s[7]) per key in applyInPandasWithState exactly "
     "like the EWMA tracker.",
-    tags=("events", "analytics", "r5"),
+    tags=("events", "analytics"),
 )
 def ev_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _events(spark, sf_dir)
@@ -2725,7 +2725,7 @@ SEASONAL_ANCHOR_MONDAY = "2024-01-01"  # a Monday; weekday = datediff % 7
     "heavy work is the distributed per-day count; at 100 TB the "
     "decomposition input is still tiny. The same numerator trick "
     "serializes to per-key windows for per-entity decomposition.",
-    tags=("events", "analytics", "r4e"),
+    tags=("events", "analytics"),
 )
 def ev_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _events(spark, sf_dir)
@@ -2926,7 +2926,7 @@ def _markov_absorption_oracle() -> str:
     "0.0 (ADVICE r4); inside the solve such a state contributes h=0 — "
     "the conservative never-converts bound for any state that "
     "transitions into it, documented rather than hidden.",
-    tags=("events", "analytics", "r4e"),
+    tags=("events", "analytics"),
 )
 def ev_markov_absorption(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _events(spark, sf_dir)
@@ -3038,7 +3038,7 @@ def absorption_rows(counts: dict) -> list:
     "5-group sort-based percentile — the per-group sort is the "
     "documented cost of EXACT percentiles; the approx_percentile "
     "sketch twin (op_percentiles_approx) is the 100 TB substitute.",
-    tags=("events", "analytics", "r4e"),
+    tags=("events", "analytics"),
 )
 def ev_interarrival_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _events(spark, sf_dir)

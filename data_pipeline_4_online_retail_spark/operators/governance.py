@@ -65,7 +65,7 @@ def erase_users(e: DataFrame, requests: DataFrame) -> DataFrame:
     "registered query emits the audit (all BIGINT, hash-exact); the "
     "purged table itself is erase_users(), pytest-pinned to contain "
     "zero requested users and exactly rows_after rows.",
-    tags=("governance", "r4b"),
+    tags=("governance",),
 )
 def gov_gdpr_erasure_audit(spark, sf_dir):
     e = load_tables(spark, sf_dir).table("events")
@@ -127,7 +127,7 @@ PII_INJECT_MOD = 10
     "(rlike) inside codegen; counts combine map-side; zero shuffle "
     "beyond the 1-row aggregate. Spark rlike and DuckDB "
     "regexp_matches share the regex subset used here.",
-    tags=("governance", "r4c"),
+    tags=("governance",),
 )
 def gov_pii_scan_report(spark, sf_dir):
     d = load_tables(spark, sf_dir).table("documents")
@@ -209,7 +209,7 @@ _RLS_VALUES = ", ".join(f"('{r}', {k})" for r, k in RLS_POLICIES)
     "country.sql:11-250) and broadcasts; decimal-exact balance sums. "
     "Scale: fact side never shuffles — the aggregate is partial-first "
     "on a 3-value key.",
-    tags=("governance", "r4d"),
+    tags=("governance",),
 )
 def gov_row_level_security(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = load_tables(spark, sf_dir)
@@ -271,7 +271,7 @@ L_DIVERSE_L = 3  # minimum distinct sensitive values per released group
     "so both engines band identically). Scale: one partial-first "
     "aggregate on a |nations| x 3 key space; COUNT(DISTINCT) expands "
     "only within each tiny group — no global distinct shuffle.",
-    tags=("governance", "r4e"),
+    tags=("governance",),
 )
 def gov_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_tables(spark, sf_dir).table("customer")

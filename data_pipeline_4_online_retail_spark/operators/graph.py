@@ -186,7 +186,7 @@ def _pagerank_oracle(n_iter: int = N_ITER, damping: float = DAMPING) -> str:
     "per-iteration cost is one src-key join + one dst-key aggregate, "
     "both partial-agg'd; the edge list is the invariant big operand "
     "and would be persisted + pre-partitioned once at 100 TB.",
-    tags=("graph", "r4b"),
+    tags=("graph",),
 )
 def graph_pagerank_copurchase(spark, sf_dir):
     li = load_tables(spark, sf_dir).table("lineitem")
@@ -236,7 +236,7 @@ TRIANGLE_MIN_W = 2
     "features on product graphs. Complements graph_pagerank_copurchase "
     "(iterative) with a purely relational multi-way self-join "
     "mechanism.",
-    tags=("graph", "r4c"),
+    tags=("graph",),
 )
 def graph_triangle_count(spark, sf_dir):
     li = load_tables(spark, sf_dir).table("lineitem")
@@ -344,7 +344,7 @@ CF_TOP_N = 5
     "bounding the pair stream at |baskets| * max_basket^2 and the "
     "popularity counts consistently with it. Default None keeps the "
     "registered oracle semantics bit-identical.",
-    tags=("graph", "retail", "similarity", "r4d", "verification"),
+    tags=("graph", "retail", "similarity", "verification"),
 )
 def graph_itemcf_recs(
     spark: SparkSession, sf_dir: str, max_basket: int | None = None
@@ -486,7 +486,7 @@ CF_MAX_BASKET = 7  # drops ~5% of baskets at every SF (the binding case)
     "all-integer counts plus one IEEE-identical sqrt/division — not a "
     "bounded contract; the skewed-basket pytest additionally pins the "
     "pair-count bound itself.",
-    tags=("graph", "retail", "similarity", "r7"),
+    tags=("graph", "retail", "similarity"),
 )
 def graph_itemcf_recs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return graph_itemcf_recs(spark, sf_dir, max_basket=CF_MAX_BASKET)
@@ -539,7 +539,7 @@ BFS_SUPPORT = 2
     "one src-keyed join + distinct; the frontier shrinks as the "
     "component saturates; at 100 TB the edge list is the persisted, "
     "pre-partitioned invariant operand.",
-    tags=("graph", "r4e"),
+    tags=("graph",),
 )
 def graph_bfs_distances(spark, sf_dir):
     li = load_tables(spark, sf_dir).table("lineitem")

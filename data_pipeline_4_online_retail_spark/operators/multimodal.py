@@ -529,7 +529,7 @@ def text_to_pcm16(text: str) -> list[int]:
     "Scale: encode+decode are per-row CPU inside Arrow batches — "
     "partition count is the decode-parallelism dial; no shuffle at "
     "all.",
-    tags=("multimodal", "r4c"),
+    tags=("multimodal",),
 )
 def mm_wav_features(spark, sf_dir):
     docs = load_tables(spark, sf_dir).table("documents").select("doc_id", "text")
@@ -628,7 +628,7 @@ PPM_WIDTH = 16
     "PNG has its own stdlib codec since r12 (mm_png_features); JPEG "
     "stays gated on Pillow. No shuffle; Arrow-batched "
     "per-row CPU.",
-    tags=("multimodal", "r4c"),
+    tags=("multimodal",),
 )
 def mm_ppm_features(spark, sf_dir):
     docs = load_tables(spark, sf_dir).table("documents").select("doc_id", "text")
@@ -712,7 +712,7 @@ PPM_RESIZE_SCHEMA = T.StructType(
     "stay gated on Pillow like the PNG/JPEG stubs — float kernels "
     "without a reference library would be fake precision; "
     "nearest-neighbor is exactly reproducible stdlib-side.",
-    tags=("multimodal", "r4d"),
+    tags=("multimodal",),
 )
 def mm_ppm_resize(spark, sf_dir):
     docs = load_tables(spark, sf_dir).table("documents").select("doc_id", "text")
@@ -888,7 +888,7 @@ BINFILE_SCHEMA = T.StructType(
     "source needed. pathGlobFilter prunes non-.ppm junk at listing "
     "time. pytest pins row-for-row agreement with mm_ppm_features "
     "(the same docs through the no-filesystem path).",
-    tags=("multimodal", "sources", "r4d"),
+    tags=("multimodal", "sources"),
 )
 def mm_binaryfile_source(spark, sf_dir):
     path = _materialize_ppm_dir(spark, sf_dir)
@@ -1074,7 +1074,7 @@ PHASH_SCHEMA = T.StructType(
     "BK-tree/sorted-rotation sharding, accepting probabilistic "
     "recall at 4-6 — the measured-linear regime here (2.26M pairs "
     "at 50k docs, x100 copies linear) is the within-capacity case.",
-    tags=("multimodal", "dedup", "r4e"),
+    tags=("multimodal", "dedup"),
 )
 def mm_phash_dedup(spark, sf_dir):
     # No spread() on the docs scan: the r12 phash kernel is O(1)/doc, so
@@ -1400,7 +1400,7 @@ PNG_FEATURES_SCHEMA = T.StructType(
     "('real decode drops in behind the same batch signature'): "
     "decode_image_batch(fake=False) now takes this path for PNG bytes "
     "with no Pillow. No shuffle; Arrow-batched per-row CPU.",
-    tags=("multimodal", "r12"),
+    tags=("multimodal",),
 )
 def mm_png_features(spark, sf_dir):
     docs = load_tables(spark, sf_dir).table("documents").select("doc_id", "text")
@@ -1510,7 +1510,7 @@ def documents_as_png_media(docs: DataFrame) -> DataFrame:
     "fake query documented ('real decode drops in behind the same "
     "batch signature') kept: same batch signature, real decode, DuckDB "
     "oracle hash-exact on width/height/mean_luma.",
-    tags=("multimodal", "r12"),
+    tags=("multimodal",),
 )
 def mm_image_features(spark, sf_dir):
     docs = load_tables(spark, sf_dir).table("documents")

@@ -1170,7 +1170,7 @@ FROM chain
     "dedup.connected_components instead). Each "
     "iteration is one equi-join on next_key: hash-partitioned, "
     "AQE-sized; depth_i frontier rows only, never the whole history.",
-    tags=("relational", "r4b"),
+    tags=("relational",),
 )
 def op_recursive_cte_chain(spark, sf_dir):
     cat = load_tables(spark, sf_dir)
@@ -1199,7 +1199,7 @@ FROM nation n JOIN LATERAL (
     "shuffle as op_group_topk — the point of declaring it "
     "declaratively instead of looping. Identical SQL text runs on "
     "DuckDB modulo the JOIN LATERAL/comma spelling.",
-    tags=("engine", "r4c"),
+    tags=("engine",),
 )
 def op_lateral_join(spark, sf_dir):
     cat = load_tables(spark, sf_dir)
@@ -1232,7 +1232,7 @@ def op_lateral_join(spark, sf_dir):
     "bucket's tail row takes the next non-empty bucket's head from a "
     "broadcast <= n_buckets-row heads table — no fact-sized single-"
     "partition window. Output is O(holes), not O(rows).",
-    tags=("quality", "r4c"),
+    tags=("quality",),
 )
 def op_sequence_gaps(spark, sf_dir):
     from data_pipeline_4_online_retail_spark.functions.prefix import global_lead
@@ -1279,7 +1279,7 @@ def op_sequence_gaps(spark, sf_dir):
     "migration validators use to compare a 100 TB table across "
     "engines without moving rows. Spark conv(hex,16,10) == DuckDB "
     "CAST('0x…'), both exact at 15 hex digits.",
-    tags=("quality", "r4c"),
+    tags=("quality",),
 )
 def op_checksum_table(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
@@ -1327,7 +1327,7 @@ def op_checksum_table(spark, sf_dir):
     "boundaries via date_trunc/last_day). Scale: the spine is "
     "O(days) — generated at the driver-free expression level and "
     "broadcastable to any fact join.",
-    tags=("calendar", "r4c"),
+    tags=("calendar",),
 )
 def op_date_spine(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
@@ -1374,7 +1374,7 @@ def op_date_spine(spark, sf_dir):
     "change is NULL). Scale: the global window runs over the MONTH "
     "frame (|months| rows) after the aggregate — the one place an "
     "unpartitioned window is the right call.",
-    tags=("analytics", "r4c"),
+    tags=("analytics",),
 )
 def op_percent_change_mom(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
@@ -1413,7 +1413,7 @@ HIST_BIN_WIDTH = 25_000.0
     "shuffle is O(bins x partitions) regardless of table size — why "
     "fixed-bin histograms beat exact percentiles for dashboard-scale "
     "profiling (op_percentiles_approx covers the adaptive case).",
-    tags=("profiling", "r4c"),
+    tags=("profiling",),
 )
 def op_histogram_fixed_bins(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
@@ -1455,7 +1455,7 @@ GROUP_SAMPLE_K = 5
     "(WindowGroupLimit pushes the limit below the exchange, "
     "pytest-pinned). The md5 ordering also makes the sample stable "
     "under re-partitioning and data arrival order.",
-    tags=("curation", "r4c"),
+    tags=("curation",),
 )
 def op_group_sample_exact_k(spark, sf_dir):
     d = load_tables(spark, sf_dir).table("documents")
@@ -1485,7 +1485,7 @@ def op_group_sample_exact_k(spark, sf_dir):
     "hand-written literals, while callers get injection-safe templating "
     "— the JDBC-prepared-statement contract on the DataFrame API. "
     "Oracle inlines the same literals.",
-    tags=("sql", "r4c"),
+    tags=("sql",),
 )
 def op_parameterized_sql(spark, sf_dir):
     cat = load_tables(spark, sf_dir)
@@ -1522,7 +1522,7 @@ def op_parameterized_sql(spark, sf_dir):
     "result; variables bind as constants so the optimized plan is "
     "identical to a literal query (no lost pushdown). The oracle runs "
     "the equivalent flat SQL with the variable's arithmetic inlined.",
-    tags=("sql", "r4c"),
+    tags=("sql",),
 )
 def op_sql_scripting(spark, sf_dir):
     cat = load_tables(spark, sf_dir)
@@ -1571,7 +1571,7 @@ def op_sql_scripting(spark, sf_dir):
     "cascade forward as offsets — the 'hierarchical prefix-max' the r5 "
     "docstring promised, now implemented: no fact-sized single-"
     "partition window remains. Output is O(frontier).",
-    tags=("analytics", "r4c"),
+    tags=("analytics",),
 )
 def op_skyline_pareto(spark, sf_dir):
     from data_pipeline_4_online_retail_spark.functions.prefix import global_prefix
@@ -1628,7 +1628,7 @@ def op_skyline_pareto(spark, sf_dir):
     "SQL moves anywhere else; Catalyst plans the NOT IN as "
     "NullAwareAntiJoin (the expensive null-safe form) — the reason "
     "style guides say NOT EXISTS.",
-    tags=("semantics", "r4c"),
+    tags=("semantics",),
 )
 def op_not_in_null_semantics(spark, sf_dir):
     cat = load_tables(spark, sf_dir)
@@ -1681,7 +1681,7 @@ def op_not_in_null_semantics(spark, sf_dir):
     "Catalyst plan as the nested classic form (the oracle runs the "
     "classic spelling). Relevant to reference users: BigQuery ships "
     "the same pipe syntax, so dbt-style SQL migrates verbatim.",
-    tags=("sql", "r4c"),
+    tags=("sql",),
 )
 def op_sql_pipe_syntax(spark, sf_dir):
     cat = load_tables(spark, sf_dir)
@@ -1727,7 +1727,7 @@ def op_sql_pipe_syntax(spark, sf_dir):
     "holds <= 3 identically-derived doubles summed in frame order on "
     "both engines. Month frame is tiny; the window runs post-"
     "aggregate.",
-    tags=("analytics", "r4c"),
+    tags=("analytics",),
 )
 def op_moving_average_centered(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
@@ -1776,7 +1776,7 @@ def op_moving_average_centered(spark, sf_dir):
     "CASE guard pins empty-array semantics on both. Reference "
     "analogue: none (no nested data); SURVEY §2.9's array extension "
     "surface.",
-    tags=("relational", "r4d"),
+    tags=("relational",),
 )
 def op_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -1821,7 +1821,7 @@ def op_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     "here pin the multiplicities across engines, not just membership. "
     "Scale: three partial-first aggregates on the same key, no "
     "distinct-expand.",
-    tags=("relational", "r4d"),
+    tags=("relational",),
 )
 def op_set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
@@ -1869,7 +1869,7 @@ def op_set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     "really joined (segment 'BUILDING' maps to NULL on both sides). "
     "Scale: one equi-shuffle; the NULL bucket is a skew key by "
     "construction — AQE skew-split or pre-count it.",
-    tags=("relational", "r4d"),
+    tags=("relational",),
 )
 def op_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
@@ -1912,7 +1912,7 @@ def op_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "vs the rewrite's extra lower() projection — same shuffle either "
     "way; the win is semantic (no normalization drift across queries). "
     "Reference analogue: none (BigQuery CI collation was unused).",
-    tags=("relational", "spark4", "r4d"),
+    tags=("relational", "spark4"),
 )
 def op_collation_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
@@ -1957,7 +1957,7 @@ def op_collation_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(date, key) ordering; raw column values, no arithmetic — "
     "hash-exact. One exchange serves all three functions (same "
     "window spec family).",
-    tags=("relational", "r4d"),
+    tags=("relational",),
 )
 def op_window_nth_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -2021,7 +2021,7 @@ def op_window_nth_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Oracle inlines both bodies as plain SQL (DuckDB has no Spark SQL "
     "UDDL); band join is a broadcast of 5 rows; the fact aggregate is "
     "partial-first on the band key.",
-    tags=("engine", "sqludf", "r4e"),
+    tags=("engine", "sqludf"),
 )
 def op_sql_udf(spark, sf_dir):
     spark.sql(
@@ -2085,7 +2085,7 @@ def op_sql_udf(spark, sf_dir):
     "Scale: generator fan-out is 3x map-side, the aggregate is "
     "partial-first on a 3-value key — no shuffle grows with the "
     "fan-out.",
-    tags=("engine", "generator", "r4e"),
+    tags=("engine", "generator"),
 )
 def op_stack_long_format(spark, sf_dir):
     o = load_tables(spark, sf_dir).table("orders")
@@ -2154,7 +2154,7 @@ def op_stack_long_format(spark, sf_dir):
     "store, and referential checks are wh_foreign_key_check. Scale: "
     "single partial-first aggregate, no shuffle beyond 1-row partials; "
     "adding a constraint adds a column, not a scan.",
-    tags=("engine", "quality", "r4e"),
+    tags=("engine", "quality"),
 )
 def op_constraint_check(spark, sf_dir):
     o = load_tables(spark, sf_dir).table("orders")
@@ -2215,7 +2215,7 @@ def op_constraint_check(spark, sf_dir):
     "the pure-JVM built-in form (length/regexp_count). Scale: "
     "map-side only, no shuffle; batch size bounded by "
     "spark.sql.execution.arrow.maxRecordsPerBatch.",
-    tags=("engine", "arrow", "r4e"),
+    tags=("engine", "arrow"),
 )
 def op_map_in_arrow(spark, sf_dir):
     docs = load_tables(spark, sf_dir).table("documents").select("doc_id", "text")
@@ -2265,7 +2265,7 @@ def op_map_in_arrow(spark, sf_dir):
     "query exists to pin the analyze-time contract: isConstantExpression "
     "gating, literal capture, schema construction. Scale: per-row "
     "generator, map-side; the aggregate shuffles a 5-value key.",
-    tags=("engine", "udtf", "r4e"),
+    tags=("engine", "udtf"),
 )
 def op_udtf_polymorphic(spark, sf_dir):
     from pyspark.sql.functions import udtf
@@ -2344,7 +2344,7 @@ def op_udtf_polymorphic(spark, sf_dir):
     "driver to mint column names, so it is a small-result reporting "
     "tool (3 groups here), never a wide-data operator; at 100 TB the "
     "aggregate runs distributed and only the tiny summary transposes.",
-    tags=("engine", "r4e"),
+    tags=("engine",),
 )
 def op_transpose_summary(spark, sf_dir):
     li = load_tables(spark, sf_dir).table("lineitem")
@@ -2390,7 +2390,7 @@ def op_transpose_summary(spark, sf_dir):
     "single-partition windows — grouped/columnar usage like this stays "
     "fully distributed, and that distinction is the whole art of "
     "using the dialect at 100 TB.",
-    tags=("engine", "pandas-api", "r4e"),
+    tags=("engine", "pandas-api"),
 )
 def op_pandas_api_groupby(spark, sf_dir):
     o = load_tables(spark, sf_dir).table("orders")

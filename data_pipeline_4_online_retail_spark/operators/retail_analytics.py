@@ -56,7 +56,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "replace with percentile-bound scoring (approx_percentile cutoffs "
     "broadcast back, map-side CASE), which this module's pytest "
     "cross-checks as agreeing on quartile boundaries.",
-    tags=("retail", "r4b"),
+    tags=("retail",),
 )
 def op_rfm_segments(spark, sf_dir):
     # r6: the three exact-quartile ntiles ran |customers| rows through ONE
@@ -179,7 +179,7 @@ def _rfm_approx_oracle() -> str:
     "test_rfm_ntile_agrees_with_percentile_cutoff_path. Recency uses "
     "epoch-microseconds of the last order (timestamps aren't "
     "percentile-able directly on either engine).",
-    tags=("retail", "r6"),
+    tags=("retail",),
 )
 def op_rfm_segments_approx(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
@@ -253,7 +253,7 @@ def op_rfm_segments_approx(spark, sf_dir):
     "hash-partitions cleanly at 100 TB. The confidence ratio divides "
     "two exact integers (IEEE-exact, engine-identical). Min-support "
     "pruning cuts the output long before the frequency joins.",
-    tags=("retail", "r4b"),
+    tags=("retail",),
 )
 def op_market_basket_pairs(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
@@ -363,7 +363,7 @@ BRIDGE_SPLIT = "1998-01-01 00:00:00"  # period A: before; period B: at/after
     "Scale: one fact scan, one (part, period) partial-first aggregate, "
     "a self-join on |parts| rows; the per-part grain IS the mix story "
     "(roll up the effect columns for the headline bridge).",
-    tags=("retail", "r4e"),
+    tags=("retail",),
 )
 def op_revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = load_tables(spark, sf_dir)
@@ -471,7 +471,7 @@ DID_TREATED_SEGMENT = "BUILDING"  # treated customer group
     "cross-engine. Scale: one join, one 4-cell partial-first "
     "aggregate; the 1-row-x-1-row cell crossJoins are bounded by "
     "construction (BNLJ whitelist).",
-    tags=("retail", "causal", "r4e"),
+    tags=("retail", "causal"),
 )
 def op_did_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = load_tables(spark, sf_dir)
@@ -565,7 +565,7 @@ def op_did_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rank is ONE global sort of |customers| rows (not events), the "
     "same bounded-global-sort shape as op_order_by_full; the closing "
     "aggregate is a single row.",
-    tags=("retail", "r4e"),
+    tags=("retail",),
 )
 def op_gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r6: the rank index decomposed (was an unpartitioned row_number over
@@ -653,7 +653,7 @@ def op_gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame
     "one division per decile row. Scale: same bounded shape as the "
     "Gini — per-customer aggregate partial-first, one global sort of "
     "|customers| rows, a 10-row closing window.",
-    tags=("retail", "r4e"),
+    tags=("retail",),
 )
 def op_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r6: decile assignment decomposed (was an unpartitioned ntile over
@@ -741,7 +741,7 @@ ABC_B_CUT = 0.95
     "misclassify cross-engine). Scale: partial-first per-part "
     "aggregate, one global sort of |parts| rows (the bounded "
     "dimension, not the fact), a running sum.",
-    tags=("retail", "r4e"),
+    tags=("retail",),
 )
 def op_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r6: the cumulative-cents prefix decomposed (was an unpartitioned

@@ -351,7 +351,7 @@ def op_percentiles_approx_raw(spark, sf_dir):
     "then a map-side clip + aggregate. At 100 TB swap the exact "
     "percentile pass for approx_percentile and keep the identical "
     "second pass; the clip itself never shuffles.",
-    tags=("robust", "r4b"),
+    tags=("robust",),
 )
 def op_winsorize(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
@@ -411,7 +411,7 @@ def op_winsorize(spark, sf_dir):
     "same shape as Iceberg/ClickHouse bitmap rollups. Oracle is plain "
     "COUNT(DISTINCT) double-checked by a per-day max; Spark output is "
     "exact, not approximate.",
-    tags=("engine", "r4c"),
+    tags=("engine",),
 )
 def op_bitmap_distinct(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
@@ -470,7 +470,7 @@ def op_bitmap_distinct(spark, sf_dir):
     "(F10 failed-rows analogue). All codegen'd JVM expressions. "
     "DuckDB oracle: TRY_CAST + explicit zero-divisor CASE (its / "
     "already yields NULL-free doubles on the non-zero path).",
-    tags=("engine", "r4c"),
+    tags=("engine",),
 )
 def op_try_arithmetic(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
@@ -541,7 +541,7 @@ CHI2_PRICE_BUCKET = 150_000.0
     "beyond toy cell counts, round the statistic or sum in decimal "
     "micro-units. Scale: one map-side-combined count per cell, then "
     "O(cells) window math.",
-    tags=("stats", "r4c"),
+    tags=("stats",),
 )
 def op_crosstab_chi2(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
@@ -610,7 +610,7 @@ def op_crosstab_chi2(spark, sf_dir):
     "hash-comparable, and catastrophically cancellable at 100 TB); "
     "sufficient-statistics-in-decimal is the production-exact form "
     "and is embarrassingly map-side-combinable.",
-    tags=("stats", "r4c"),
+    tags=("stats",),
 )
 def op_regression_closed_form(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
@@ -696,7 +696,7 @@ def op_regression_closed_form(spark, sf_dir):
     "lookup join probes the persisted ranked frame: one exchange per "
     "side and a hash join — no second sampling pass, no carry join, "
     "no 2n-row union.",
-    tags=("stats", "r4c"),
+    tags=("stats",),
 )
 def op_quantile_normalization(spark, sf_dir):
     from data_pipeline_4_online_retail_spark.functions.prefix import global_prefix
@@ -805,7 +805,7 @@ def op_quantile_normalization(spark, sf_dir):
     "(compare like op_crosstab_chi2). Uniform-ish synthetic prices "
     "will NOT follow Benford — the operator reports, the analyst "
     "judges. Map-side combine to <= 9 groups.",
-    tags=("stats", "audit", "r4c"),
+    tags=("stats", "audit"),
 )
 def op_benford_first_digit(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
@@ -853,7 +853,7 @@ def op_benford_first_digit(spark, sf_dir):
     "text_weighted_sample_ares) and cost-weighted SLO percentiles. "
     "One group shuffle shared by both window passes and the final "
     "aggregate.",
-    tags=("stats", "r4c"),
+    tags=("stats",),
 )
 def op_weighted_median(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
@@ -917,7 +917,7 @@ def op_weighted_median(spark, sf_dir):
     "form: stored (n, Σx, Σx²) per partition/day roll up to any "
     "coarser grain without rescanning (the incremental-agg pattern of "
     "incremental_agg_merge).",
-    tags=("aggregation", "r4d"),
+    tags=("aggregation",),
 )
 def op_group_moments_mergeable(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
@@ -977,7 +977,7 @@ def op_group_moments_mergeable(spark, sf_dir):
     "small, broadcast back — then deviation medians); at 100 TB swap "
     "both percentile_disc calls for approx_percentile and keep the "
     "identical shape (the op_winsorize scale note applies verbatim).",
-    tags=("robust", "r4d"),
+    tags=("robust",),
 )
 def op_median_absolute_deviation(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
@@ -1045,7 +1045,7 @@ TRIM_FRAC = 0.1  # drop floor(n * frac) elements from EACH end
     "is for groups that fit an executor (bounded-cardinality keys); "
     "unbounded keys belong to built-in aggregates or the mergeable "
     "moments/sketch tier.",
-    tags=("engine", "arrow", "r4e"),
+    tags=("engine", "arrow"),
 )
 def op_pandas_udaf_trimmed_mean(spark, sf_dir):
     import math

@@ -61,7 +61,7 @@ def props_parsed(e: DataFrame) -> DataFrame:
     "from_json('k INT') parses JVM-side inside codegen (no UDF, no "
     "shuffle for the parse); only (event_type) groups shuffle. "
     "All-integer outputs: hash-exact across engines.",
-    tags=("json", "r4b"),
+    tags=("json",),
 )
 def ev_props_json_stats(spark, sf_dir):
     p = props_parsed(_events(spark, sf_dir))
@@ -89,7 +89,7 @@ def ev_props_json_stats(spark, sf_dir):
     "the parquet scan; the JSON predicate evaluates map-side post-scan. "
     "At 100 TB: materialize hot JSON paths as typed columns so their "
     "predicates gain footer-stats pruning too.",
-    tags=("json", "r4b"),
+    tags=("json",),
 )
 def ev_props_json_filter(spark, sf_dir):
     p = props_parsed(_events(spark, sf_dir))
@@ -117,7 +117,7 @@ def ev_props_json_filter(spark, sf_dir):
     "the extracted struct, canonical separators) with a per-row "
     "equality audit column — the write-back shape for materializing "
     "parsed JSON, plus proof the parse lost nothing.",
-    tags=("json", "r4b"),
+    tags=("json",),
 )
 def ev_props_json_roundtrip(spark, sf_dir):
     p = props_parsed(_events(spark, sf_dir)).filter(F.col("event_id") < 500)
@@ -152,7 +152,7 @@ def ev_props_json_roundtrip(spark, sf_dir):
     "is the 100 TB evolution story (from_json forces a DDL schema; "
     "variant shreds lazily and new keys need no reload). Extraction "
     "stays JVM-side; only (event_type) groups shuffle.",
-    tags=("json", "variant", "r4b"),
+    tags=("json", "variant"),
 )
 def ev_props_variant_stats(spark, sf_dir):
     e = _events(spark, sf_dir)
@@ -186,7 +186,7 @@ FROM (SELECT doc_id, string_split(text, ' ') AS l
     "expansion logic genuinely needs Python (a tokenizer library, a "
     "parser). Partition-parallel: the UDTF runs per input partition "
     "with Arrow transfer, no shuffle.",
-    tags=("text", "udtf", "r4b"),
+    tags=("text", "udtf"),
 )
 def text_udtf_word_positions(spark, sf_dir):
     from pyspark.sql.functions import udtf
@@ -235,7 +235,7 @@ def word_positions_builtin(docs: DataFrame) -> DataFrame:
     "from_xml(to_xml(x)) == x on every row — a real losslessness "
     "check, not a tautology. Both conversions are JVM expressions "
     "inside codegen; no shuffle at all (narrow scan->project).",
-    tags=("xml", "r4c"),
+    tags=("xml",),
 )
 def ev_props_xml_roundtrip(spark, sf_dir):
     e = _events(spark, sf_dir).filter(F.col("event_id") < 500)
@@ -269,7 +269,7 @@ def ev_props_xml_roundtrip(spark, sf_dir):
     "(build CSV line -> from_csv; build XML -> xpath_int) to be "
     "lossless on every row. Both are JVM expressions in codegen; no "
     "shuffle.",
-    tags=("csv", "xml", "r4c"),
+    tags=("csv", "xml"),
 )
 def ev_props_csv_and_xpath(spark, sf_dir):
     e = _events(spark, sf_dir).filter(F.col("event_id") < 500)
@@ -325,7 +325,7 @@ def ev_props_csv_and_xpath(spark, sf_dir):
     "json_type's UBIGINT/VARCHAR). Scale: the parse and explode are "
     "map-side (3x bounded fan-out), the aggregate shuffles a tiny "
     "(type x key) key space.",
-    tags=("json", "variant", "r4e"),
+    tags=("json", "variant"),
 )
 def ev_props_variant_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _events(spark, sf_dir)

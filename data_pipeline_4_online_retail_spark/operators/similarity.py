@@ -1328,7 +1328,7 @@ def sim_ann_ivf_pq(spark, sf_dir):
     "query batch, WindowGroupLimit-pre-filtered per-query top-k; the "
     "vote aggregation then touches only Q*k rows. At 100 TB the corpus "
     "scan dominates and amortizes over the whole query batch.",
-    tags=("similarity", "r4b"),
+    tags=("similarity",),
 )
 def sim_knn_classify(spark, sf_dir):
     from pyspark.sql.window import Window
@@ -1478,7 +1478,7 @@ def _mmr_oracle(dim: int = 64) -> str:
     "the output, no quantization needed. Also verified by the "
     "independent pure-Python re-derivation incl. the "
     "first-pick==top-cosine and pairwise-diversity invariants.",
-    tags=("similarity", "r4c"),
+    tags=("similarity",),
 )
 def sim_mmr_rerank(spark, sf_dir):
     import math
@@ -1574,7 +1574,7 @@ RANGE_QUERY_COUNT = 10
     "hash compare is float-fold-free; boundary sensitivity is the "
     "same list_cosine_similarity threshold discipline as "
     "dedup_semantic_within_label.",
-    tags=("similarity", "r4d"),
+    tags=("similarity",),
 )
 def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
@@ -1657,7 +1657,7 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-query, the IVF side stays indexed), the standard ANN-bench "
     "protocol. Integer counts + identically-spelled divisions: "
     "hash-exact.",
-    tags=("similarity", "evaluation", "r4d"),
+    tags=("similarity", "evaluation"),
 )
 def sim_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -1763,7 +1763,7 @@ PQ_REFINE_SHORTLIST = 50
     "the shortlist — the refine stage itself is exact). PROMOTED from "
     "rows-only in r8: full oracle — shortlist from the ADC oracle, "
     "exact_l2 as the same per-index fold, raw doubles.",
-    tags=("similarity", "r4e"),
+    tags=("similarity",),
 )
 def sim_ann_pq_refine(spark, sf_dir):
     e = _emb(spark, sf_dir)

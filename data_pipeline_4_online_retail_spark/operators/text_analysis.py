@@ -971,7 +971,7 @@ def text_dsir_weights(spark, sf_dir):
     "curve per shard/day and sum shard partials instead of "
     "single-partitioning a billion-doc window. All-integer outputs: "
     "hash-exact.",
-    tags=("text", "curation", "r4d"),
+    tags=("text", "curation"),
 )
 def text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r6: the two running sums ran the per-doc aggregate (|docs| rows —
@@ -1046,7 +1046,7 @@ VOCAB_TOP_N = 1000
     "join is map-side broadcast — only the per-doc aggregate "
     "shuffles, on doc_id. Integer counts + one identically-spelled "
     "division: hash-exact.",
-    tags=("text", "curation", "r4d"),
+    tags=("text", "curation"),
 )
 def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window

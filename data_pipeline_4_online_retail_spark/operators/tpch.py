@@ -1126,7 +1126,7 @@ _PS_COST_CTE = """
     "sf0.1 0.80 -> 0.62 s, sf100 on the partkey projection 5-6 s with "
     "two fewer exchanges, SCALING §r10); top-100 is "
     "TakeOrderedAndProject with a full deterministic tie-break.",
-    tags=("tpch", "r4b"),
+    tags=("tpch",),
 )
 def tpch_q02(spark, sf_dir):
     supp = _t(spark, sf_dir, "supplier").select(
@@ -1230,7 +1230,7 @@ def tpch_q02(spark, sf_dir):
     "pass, no recompute fork, no BNLJ. Scale: the wide groupBy reads "
     "~1/25th of lineitem; the only global window runs over |parts| "
     "rows.",
-    tags=("tpch", "r4b"),
+    tags=("tpch",),
 )
 def tpch_q11(spark, sf_dir):
     # Perf shape (measured in-round: 4.5s -> see NOTES_r4): (1) the
@@ -1308,7 +1308,7 @@ def tpch_q11(spark, sf_dir):
     "shape is preserved — Spark plans it as a left-anti join). Scale: "
     "the part filters prune before the join; COUNT(DISTINCT) expands "
     "to a two-phase aggregate on (class, suppkey) then (class).",
-    tags=("tpch", "r4b"),
+    tags=("tpch",),
 )
 def tpch_q16(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
@@ -1372,7 +1372,7 @@ def tpch_q16(spark, sf_dir):
     "reads only the red fraction of the fact — measured 2.2x at "
     "sf0.1), then a single pair-key shuffle; nation filters prune "
     "before joins.",
-    tags=("tpch", "r4b"),
+    tags=("tpch",),
 )
 def tpch_q20(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")

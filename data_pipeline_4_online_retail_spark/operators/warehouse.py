@@ -376,7 +376,7 @@ def incremental_agg_merge(
     "exercised, not just asserted clean. Scale: each edge is one keyed "
     "shuffle (or broadcast when the parent is dim-sized); counts "
     "combine map-side. Output is O(edges).",
-    tags=("warehouse", "quality", "r4c"),
+    tags=("warehouse", "quality"),
 )
 def wh_foreign_key_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = load_tables(spark, sf_dir)
@@ -452,7 +452,7 @@ _SCD2_VERSIONS_SQL = """
     "each user's timeline so exactly one version matches per fact row "
     "(pytest-pinned). Versions come from the same gaps-and-islands "
     "build as wh_scd2_build.",
-    tags=("warehouse", "r4c"),
+    tags=("warehouse",),
 )
 def wh_scd2_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir).table("events").select(
@@ -534,7 +534,7 @@ def wh_scd2_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "span) for free. Versions are simulated with modular filters plus "
     "a value perturbation so every delta column is nonzero-exercised. "
     "The 1x1 cross join is a broadcast of one row.",
-    tags=("warehouse", "quality", "r4c"),
+    tags=("warehouse", "quality"),
 )
 def wh_data_diff_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_tables(spark, sf_dir).table("orders")
@@ -602,7 +602,7 @@ def wh_data_diff_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "round-trips a table. One keyed shuffle; output O(base + feed). "
     "On a transactional format the same semantics are MERGE ... WHEN "
     "MATCHED AND op='D' THEN DELETE.",
-    tags=("warehouse", "r4c"),
+    tags=("warehouse",),
 )
 def wh_cdc_apply_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_tables(spark, sf_dir).table("orders")
@@ -676,7 +676,7 @@ _REV_DEC = "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))"
     "is a map-side CASE, no extra pass. Reference analogue: none "
     "(WRITE_TRUNCATE rebuilds never face late arrivals; this is the "
     "incremental-world counterpart).",
-    tags=("warehouse", "r4d"),
+    tags=("warehouse",),
 )
 def wh_late_arriving_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = load_tables(spark, sf_dir)
@@ -756,7 +756,7 @@ COMPACTION_TARGET_BYTES = 64 * 1024
     "bins never span layout keys). All-integer arithmetic: hash-exact "
     "across engines. Reference analogue: none (BigQuery manages its own "
     "storage); this is the lakehouse OPTIMIZE/compact primitive.",
-    tags=("warehouse", "r4d"),
+    tags=("warehouse",),
 )
 def wh_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_tables(spark, sf_dir).table("lineitem")
@@ -822,7 +822,7 @@ SURROGATE_EXISTING_MOD = 3
     "contiguity costs a sort, uniqueness alone does not. Contrast "
     "functions/keys.surrogate_key (md5, content-addressed): hash keys "
     "survive reruns, integer keys stay join/sort-friendly and 8 bytes.",
-    tags=("warehouse", "r4d"),
+    tags=("warehouse",),
 )
 def wh_dim_surrogate_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_tables(spark, sf_dir).table("part")
@@ -882,7 +882,7 @@ def wh_dim_surrogate_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rn=1 survives. NULL prior = customer has a single version (the "
     "honest first-load state). Fully deterministic ordering "
     "(date, key).",
-    tags=("warehouse", "r4d"),
+    tags=("warehouse",),
 )
 def wh_scd3_prior_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_tables(spark, sf_dir).table("orders")
@@ -968,7 +968,7 @@ _US_PER_HOUR = 3_600_000_000
     "shuffle); the single user_id exchange serves the window rank and "
     "the visibility count; at 100 TB the tx filter prunes whole "
     "partitions when the log is written tx-date-partitioned.",
-    tags=("warehouse", "r4e"),
+    tags=("warehouse",),
 )
 def wh_bitemporal_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir).table("events").select(
@@ -1057,7 +1057,7 @@ def wh_bitemporal_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     "window function, zero extra shuffles). Deterministic (ts, "
     "event_id) tie-breaks everywhere, all categorical/timestamp "
     "outputs: hash-exact.",
-    tags=("warehouse", "r4e"),
+    tags=("warehouse",),
 )
 def wh_scd6_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir).table("events").select(

@@ -30,6 +30,7 @@ from data_pipeline_4_online_retail_spark.functions.keys import (
     surrogate_key,
     surrogate_key_sql,
 )
+from data_pipeline_4_online_retail_spark.plans.registry import register
 from data_pipeline_4_online_retail_spark.sources.catalog import Catalog, load_tables
 
 # ---------------------------------------------------------------------------
@@ -550,7 +551,7 @@ ORDER BY year, month
 
 
 # ---------------------------------------------------------------------------
-# Registration helpers
+# Registration
 # ---------------------------------------------------------------------------
 
 
@@ -561,13 +562,54 @@ def _with_catalog(model):
     return run
 
 
-STAR_QUERIES = {
-    "star_dim_customer": (_with_catalog(dim_customer), DIM_CUSTOMER_SQL),
-    "star_dim_product": (_with_catalog(dim_product), DIM_PRODUCT_SQL),
-    "star_dim_datetime": (_with_catalog(dim_datetime), DIM_DATETIME_SQL),
-    "star_dim_invoice": (_with_catalog(dim_invoice), DIM_INVOICE_SQL),
-    "star_fct_invoice_line_value": (_with_catalog(fct_invoice_line_value), FCT_SQL),
-    "star_report_customer": (_with_catalog(report_customer), REPORT_CUSTOMER_SQL),
-    "star_report_product": (_with_catalog(report_product), REPORT_PRODUCT_SQL),
-    "star_report_year": (_with_catalog(report_year), REPORT_YEAR_SQL),
-}
+register(
+    "star_dim_customer",
+    DIM_CUSTOMER_SQL,
+    doc="star schema: dim_customer.sql analogue — DISTINCT (md5 key, id, "
+    "country) projection with a LEFT JOIN lookup whose unmatched rows "
+    "null-extend.",
+)(_with_catalog(dim_customer))
+register(
+    "star_dim_product",
+    DIM_PRODUCT_SQL,
+    doc="star schema: dim_product.sql analogue — DISTINCT projection with "
+    "not-null/positive-price filters and a 3-column md5 surrogate key.",
+)(_with_catalog(dim_product))
+register(
+    "star_dim_datetime",
+    DIM_DATETIME_SQL,
+    doc="star schema: dim_datetime.sql analogue — DISTINCT date key plus the "
+    "EXTRACT family (year..minute, 1=Sunday weekday).",
+)(_with_catalog(dim_datetime))
+register(
+    "star_dim_invoice",
+    DIM_INVOICE_SQL,
+    doc="star schema: dim_invoice.sql analogue — DISTINCT invoices whose "
+    "customer survives dim_customer (the implicit inner-join drop).",
+)(_with_catalog(dim_invoice))
+register(
+    "star_fct_invoice_line_value",
+    FCT_SQL,
+    doc="star schema: fct_invoice_line_value.sql analogue — keyed fact lines "
+    "with quantity > 0 and the three dims' membership drops, joined on "
+    "natural keys with the md5 keys attached after the last exchange.",
+)(_with_catalog(fct_invoice_line_value))
+register(
+    "star_report_customer",
+    REPORT_CUSTOMER_SQL,
+    doc="star schema: report_customer_invoices.sql analogue, the flagship — "
+    "top-10 countries by revenue over a two-level (order, customer) "
+    "rollup; COUNT counts invoice lines like the reference.",
+)(_with_catalog(report_customer))
+register(
+    "star_report_product",
+    REPORT_PRODUCT_SQL,
+    doc="star schema: report_product_invoices.sql analogue — top-10 products "
+    "by quantity, aggregated per part before the part join.",
+)(_with_catalog(report_product))
+register(
+    "star_report_year",
+    REPORT_YEAR_SQL,
+    doc="star schema: report_year_invoices.sql analogue — per (year, month) "
+    "distinct-invoice count and revenue over a per-order rollup.",
+)(_with_catalog(report_year))

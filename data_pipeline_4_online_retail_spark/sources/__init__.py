@@ -2,7 +2,7 @@
 
 - ``schemas``      declared StructTypes for every table (no inferSchema in
                    production paths — SURVEY.md §1.3)
-- ``io``           CSV/parquet readers + overwrite table sink
+- ``io``           CSV/parquet/JSONL/ORC/XML readers and overwrite sinks
 - ``catalog``      named-source registry (the dbt ``source()``/``ref()``
                    equivalent) over the /root/testdata star schema
 - ``country_seed`` the static country lookup (reference
@@ -12,10 +12,6 @@
 """
 
 from data_pipeline_4_online_retail_spark.sources.catalog import Catalog, load_tables
-from data_pipeline_4_online_retail_spark.sources.io import (
-    read_csv,
-    read_parquet,
-    write_table,
-)
+from data_pipeline_4_online_retail_spark.sources.io import read_csv, read_parquet
 
-__all__ = ["Catalog", "load_tables", "read_csv", "read_parquet", "write_table"]
+__all__ = ["Catalog", "load_tables", "read_csv", "read_parquet"]

@@ -1,15 +1,12 @@
 """Readers and sinks (SURVEY.md §2.1 S2/S3/S5/S11).
 
-Readers take explicit schemas; the sink is the reference's full-rebuild
+Readers take explicit schemas; sinks are the reference's full-rebuild
 ``materialized: table`` semantics (WRITE_TRUNCATE / CREATE OR REPLACE →
 ``mode("overwrite")``).
 
-Scale notes:
-- parquet reads are vectorized + filter-pushdown/column-pruned by Catalyst;
-  callers should select/filter *before* any wide transform so pruning
-  reaches the scan,
-- ``write_table`` supports partition columns and bucketing so downstream
-  co-located joins skip the shuffle at 100 TB.
+Scale note: parquet reads are vectorized + filter-pushdown/column-pruned
+by Catalyst; callers should select/filter *before* any wide transform so
+pruning reaches the scan.
 """
 
 from __future__ import annotations
@@ -43,31 +40,6 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Parquet scan (schema comes from parquet footers; declared schemas are
     asserted post-read by quality checks rather than forced at scan)."""
     return spark.read.parquet(path)
-
-
-def write_table(
-    df: DataFrame,
-    name: str,
-    *,
-    partition_by: list[str] | None = None,
-    bucket_by: tuple[int, list[str]] | None = None,
-    fmt: str = "parquet",
-) -> None:
-    """Full-rebuild table sink — the reference's ``materialized: table`` /
-    ``WRITE_TRUNCATE`` semantics (dbt_project.yml:5-7,
-    dags/online_retail.py:90).
-
-    ``partition_by`` enables partition pruning for downstream reads;
-    ``bucket_by=(n, cols)`` pre-shuffles on join keys once so repeated
-    large-large joins on those keys become shuffle-free.
-    """
-    writer = df.write.mode("overwrite").format(fmt)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if bucket_by:
-        n, cols = bucket_by
-        writer = writer.bucketBy(n, *cols).sortBy(*cols)
-    writer.saveAsTable(name)
 
 
 def write_csv(df: DataFrame, path: str, *, header: bool = True, single_file: bool = False) -> None:

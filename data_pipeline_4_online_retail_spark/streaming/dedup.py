@@ -22,8 +22,8 @@ Structured Streaming guide.
 
 Per-batch cost is O(batch + collisions), never O(corpus): the index is
 only ever *probed* on its (band_idx, band_hash) key and *appended* to.
-At 100 TB the bucket table is additionally bucketed on band_hash so the
-probe join is co-located (see sources/io.write_table bucket_by).
+At 100 TB the bucket table should additionally be bucketed on band_hash
+(``bucketBy`` on the index write) so the probe join is co-located.
 """
 
 from __future__ import annotations

@@ -1,172 +1,22 @@
-"""Z-order layout: files must become prunable on BOTH dimensions.
+"""Physical-layout and write-path mechanisms the 100 TB notes rely on.
 
-The planner's skip decision is reproduced from parquet footers
-(files_overlapping). A ts-sorted linear layout prunes ts predicates but
-matches every file for user_id predicates; the Morton layout must prune
-a user_id range query to at most half the files while keeping ts
-predicates prunable too.
+Each test pins a Spark behavior by its plan or its result, not by a
+registered query:
+
+- column statistics from ANALYZE let the cost-based optimizer broadcast
+  a filtered join side that file size alone would sort-merge;
+- dynamic partition pruning adds a runtime subquery to a partitioned
+  fact scan joined on its partition column;
+- ``mergeSchema`` unions drifting parquet schemas and null-fills the
+  new column for old files;
+- ``partitionOverwriteMode=dynamic`` replaces only the partitions the
+  incoming batch touches;
+- the REBALANCE hint plans an AQE rebalance exchange and conserves rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from data_pipeline_4_online_retail_spark.sources.layout import (
-    files_overlapping,
-    write_zordered,
-    zorder_column,
-)
-
-N_FILES = 8
-
-
-def _layouts(spark, catalog, tmp_path_factory):
-    base = tmp_path_factory.mktemp("layout")
-    events = catalog.table("events").select("event_id", "ts", "user_id", "value")
-    linear = str(base / "linear")
-    zpath = str(base / "zorder")
-    (
-        events.repartitionByRange(N_FILES, "ts")
-        .sortWithinPartitions("ts")
-        .write.mode("overwrite")
-        .parquet(linear)
-    )
-    write_zordered(events, zpath, ["ts", "user_id"], num_files=N_FILES)
-    return events, linear, zpath
-
-
-def test_zorder_prunes_both_dimensions(spark, catalog, tmp_path_factory):
-    events, linear, zpath = _layouts(spark, catalog, tmp_path_factory)
-    users = [r.user_id for r in events.select("user_id").collect()]
-    lo, hi = min(users), max(users)
-    # point query on a first-quadrant user (the z-curve's weak spot is a
-    # range STRADDLING the top-bit flip at the middle; a point query is
-    # the representative lookup)
-    point = lo + (hi - lo) // 4
-
-    lin_match, lin_total = files_overlapping(linear, "user_id", point, point)
-    z_match, z_total = files_overlapping(zpath, "user_id", point, point)
-    assert lin_total == z_total == N_FILES
-    # ts-ordered ingest cannot skip anything for a user predicate...
-    assert lin_match == N_FILES
-    # ...the Morton layout must skip at least half the files
-    assert z_match <= N_FILES // 2, (z_match, lin_match)
-
-    # even the worst case — a band straddling the curve's center
-    # boundary — must beat the linear layout
-    mid = (lo + hi) // 2
-    band = (mid, mid + max((hi - lo) // 16, 1))
-    z_band, _ = files_overlapping(zpath, "user_id", *band)
-    assert z_band < N_FILES, z_band
-
-
-def test_zorder_keeps_ts_prunable(spark, catalog, tmp_path_factory):
-    events, linear, zpath = _layouts(spark, catalog, tmp_path_factory)
-    import datetime as dt
-
-    ts = sorted(r.ts for r in events.select("ts").collect())
-    lo, hi = ts[0], ts[len(ts) // 20]  # first 5% of the time range
-    z_match, z_total = files_overlapping(zpath, "ts", lo, hi)
-    assert z_match <= z_total // 2, z_match
-
-
-def test_zorder_result_set_unchanged(spark, catalog, tmp_path_factory):
-    """Layout is physical only: the same rows come back."""
-    events, _, zpath = _layouts(spark, catalog, tmp_path_factory)
-    back = spark.read.parquet(zpath)
-    assert back.count() == events.count()
-    assert (
-        back.agg(F.sum("event_id")).collect()[0][0]
-        == events.agg(F.sum("event_id")).collect()[0][0]
-    )
-
-
-def test_morton_code_locality():
-    """Adjacent bucket pairs differ in low Morton bits: the code for
-    (a, b) interleaves exactly the bucket bits, so sorting by it groups
-    spatial neighbors — pinned on a tiny in-memory example."""
-    import pyspark.sql.functions as F
-    from data_pipeline_4_online_retail_spark.sources.layout import _interleave
-
-    # interleave(bits=2) of buckets (x=0b10, y=0b11) →
-    # bit layout y1 x1 y0 x0 = 1 1 1 0 = 14
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    df = spark.range(1).select(
-        _interleave([F.lit(2).cast("long"), F.lit(3).cast("long")], 2).alias("z")
-    )
-    assert df.collect()[0].z == 14
-
-
-def test_bucketed_join_has_no_exchange(spark, catalog, tmp_path_factory):
-    """Both sides written bucketed+sorted by the join key -> the join
-    plan contains NO shuffle (Exchange) — the write-time shuffle is
-    amortized across every later join on that key. A plain parquet
-    re-read of the same data DOES exchange, pinning that the bucket
-    metadata (not data size) is what removed it."""
-    from data_pipeline_4_online_retail_spark.sources.bucketing import (
-        cobucketed_join,
-        write_bucketed,
-    )
-
-    base = tmp_path_factory.mktemp("buckets")
-    orders = catalog.table("orders")
-    li = catalog.table("lineitem").withColumnRenamed("l_orderkey", "o_orderkey")
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        write_bucketed(
-            orders, "t_orders_b", str(base / "o"), bucket_by="o_orderkey", n_buckets=8
-        )
-        write_bucketed(
-            li, "t_lineitem_b", str(base / "l"), bucket_by="o_orderkey", n_buckets=8
-        )
-        joined = cobucketed_join(spark, "t_lineitem_b", "t_orders_b", "o_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert joined.count() == catalog.table("lineitem").count()
-
-        flat = li.join(orders, "o_orderkey")
-        flat_plan = flat._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in flat_plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_lineitem_b")
-
-
-def test_bucket_pruning_on_point_predicate(spark, catalog, tmp_path_factory):
-    """A key = literal predicate over a bucketed table reads 1/N of the
-    buckets (SelectedBucketsCount in the scan node)."""
-    from data_pipeline_4_online_retail_spark.sources.bucketing import (
-        write_bucketed,
-    )
-
-    base = tmp_path_factory.mktemp("bucket_prune")
-    orders = catalog.table("orders")
-    # a bare filter has no join to feed, so the planner's auto-bucketed-scan
-    # would fall back to a plain scan; force the bucketed read to exercise
-    # bucket-filter pruning
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    try:
-        write_bucketed(
-            orders, "t_orders_p", str(base / "o"), bucket_by="o_orderkey", n_buckets=8
-        )
-        key = orders.select("o_orderkey").head()[0]
-        plan = (
-            spark.table("t_orders_p")
-            .filter(F.col("o_orderkey") == key)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "SelectedBucketsCount: 1 out of 8" in plan, plan
-    finally:
-        spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-        spark.sql("DROP TABLE IF EXISTS t_orders_p")
 
 
 def test_analyze_column_stats_enable_cbo_broadcast(spark, catalog, tmp_path_factory):
@@ -344,98 +194,3 @@ def test_rebalance_hint_evens_output_partitions(spark, catalog):
     plan = balanced._jdf.queryExecution().executedPlan().toString()
     assert "REBALANCE" in plan.upper() or "RebalancePartitions" in plan, plan[:800]
     assert balanced.count() == e.count()
-
-
-def test_single_file_buckets_eliminate_per_query_sort(
-    spark, catalog, tmp_path_factory
-):
-    """write_bucketed's single_file_buckets default writes exactly ONE
-    file per bucket, and under
-    spark.sql.legacy.bucketedTableScan.outputOrdering=true the scan then
-    reports the sortBy order, so the cobucketed SMJ plans with NO Sort
-    node (on top of no Exchange). Multi-file buckets silently
-    re-introduce the per-query Sort — the r8 bucketed-star probe caught
-    exactly that, and this pins the fix."""
-    import glob
-
-    from data_pipeline_4_online_retail_spark.sources.bucketing import (
-        cobucketed_join,
-        write_bucketed,
-    )
-
-    base = tmp_path_factory.mktemp("bucket_sorted")
-    orders = catalog.table("orders")
-    li = catalog.table("lineitem").withColumnRenamed("l_orderkey", "o_orderkey")
-
-    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set(
-        "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
-    )
-    try:
-        write_bucketed(
-            orders, "t_orders_s", str(base / "o"), bucket_by="o_orderkey", n_buckets=4
-        )
-        write_bucketed(
-            li, "t_lineitem_s", str(base / "l"), bucket_by="o_orderkey", n_buckets=4
-        )
-        for d in ("o", "l"):
-            files = glob.glob(str(base / d / "*.parquet"))
-            assert len(files) == 4, files
-        joined = cobucketed_join(spark, "t_lineitem_s", "t_orders_s", "o_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        # " Sort [" matches the Sort operator on EITHER join branch and
-        # under any tree prefix (":- Sort [", "+- Sort [", "*(n) Sort [")
-        # without matching "SortMergeJoin [" (ADVICE r8: the old
-        # "+- Sort [" form only caught a Sort rendered as last child)
-        assert " Sort [" not in plan, plan
-        assert joined.count() == catalog.table("lineitem").count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
-        spark.conf.unset(
-            "spark.sql.legacy.bucketedTableScan.outputOrdering"
-        )
-        spark.sql("DROP TABLE IF EXISTS t_orders_s")
-        spark.sql("DROP TABLE IF EXISTS t_lineitem_s")
-
-
-def test_pick_bucket_count_measured_table():
-    """r12 (VERDICT r11 item 5): the bucket-count rule as code, pinned
-    against the sf100 sweep it encodes (bucketing.py header, SCALING
-    §r10 addendum / §r11): scan-dominated consumers (q04/q17/q19/q21)
-    -> 128 on 32 cores; the exchange-dominated q03/q05 exception -> 32;
-    the 100 TB header example (10 TiB fact / 2.5 GiB working set) ->
-    4096 via the working-set bound."""
-    from data_pipeline_4_online_retail_spark.sources.bucketing import (
-        BUCKET_WORKING_SET_BYTES,
-        pick_bucket_count,
-        table_file_bytes,
-    )
-
-    # measured local tier: sub-GiB fact, 32 cores — waves bound dominates
-    assert pick_bucket_count(800 * 2**20, 32, consumers="scan") == 128
-    assert pick_bucket_count(800 * 2**20, 32, consumers="exchange") == 32
-    # 100 TB sizing example — working-set bound dominates
-    assert pick_bucket_count(10 * 2**40, 32, consumers="exchange") == 4096
-    # both bounds always yield a power of two, and never shrink with size
-    for b in (0, 1, 2**30, 7 * 2**30, 13 * 2**40):
-        for c in (1, 8, 32, 100):
-            for cons in ("scan", "exchange"):
-                n = pick_bucket_count(b, c, consumers=cons)
-                assert n & (n - 1) == 0 and n >= 1
-                # one bucket fits the working set (within pow2 rounding)
-                assert b / n <= BUCKET_WORKING_SET_BYTES * 2
-    # waves bound: scan is 4 waves, exchange 1 wave, pow2-rounded up
-    assert pick_bucket_count(0, 100, consumers="scan") == 512
-    assert pick_bucket_count(0, 100, consumers="exchange") == 128
-    try:
-        pick_bucket_count(1, 1, consumers="both")
-    except ValueError:
-        pass
-    else:
-        raise AssertionError("invalid consumers accepted")
-    # table_file_bytes handles both single-file and directory layouts
-    assert table_file_bytes("/root/testdata/sf0.1", "lineitem") > 10**6
-    assert table_file_bytes("/root/testdata/sf0.1", "part") > 10**4

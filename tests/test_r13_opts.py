@@ -59,13 +59,26 @@ def test_phash_dedup_cache_released_on_reentry(spark, qs):
     assert not session._RETAINED
 
 
-def test_registered_query_entry_releases_other_modules_caches(spark, qs):
-    """One registry across modules: entering tpch_q01 (which persists
-    nothing) drops the caches a dedup query left behind."""
+@pytest.mark.parametrize("entered", ["tpch_q01", "star_report_customer"])
+def test_registered_query_entry_releases_other_modules_caches(spark, qs, entered):
+    """One registry across modules: entering a query that persists
+    nothing (an operator module's or a star-schema model's) drops the
+    caches a dedup query left behind."""
     qs["dedup_minhash_lsh_fast"](spark, SF_DIR)
     assert session._RETAINED
-    qs["tpch_q01"](spark, SF_DIR)
+    qs[entered](spark, SF_DIR)
     assert not session._RETAINED
+
+
+def test_every_registered_build_goes_through_register(qs):
+    """Only ``register`` wraps a builder (functools.wraps sets
+    ``__wrapped__``), so an entry added beside it would skip the
+    release-on-entry above."""
+    from data_pipeline_4_online_retail_spark.plans.registry import REGISTRY
+
+    assert REGISTRY
+    unwrapped = [n for n, q in REGISTRY.items() if not hasattr(q.build, "__wrapped__")]
+    assert not unwrapped, unwrapped
 
 
 def test_dsir_stats_single_documents_scan(spark, qs):

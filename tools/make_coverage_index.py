@@ -10,8 +10,11 @@ Usage: python tools/make_coverage_index.py
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+INDEX = ROOT / "COVERAGE_INDEX.md"
+sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entry  # noqa: E402  (populates the registry)
 from data_pipeline_4_online_retail_spark.plans.registry import (  # noqa: E402
@@ -19,7 +22,8 @@ from data_pipeline_4_online_retail_spark.plans.registry import (  # noqa: E402
 )
 
 
-def main() -> None:
+def render() -> str:
+    """The index text for the registry as imported."""
     names = list(entry.queries())
     window = set(names[:50])
     n_oracled = sum(1 for q in REGISTRY.values() if q.oracle is not None)
@@ -41,27 +45,24 @@ def main() -> None:
         "|---|---|---|---|---|---|",
     ]
     for i, name in enumerate(names, 1):
-        q = REGISTRY.get(name)
-        if q is None:  # star/retail entries injected without Query metadata
-            oracle = "sql"
-            tags = ""
-            tier = "production"
-            doc = ""
-        else:
-            oracle = "sql" if q.oracle is not None else "rows-only"
-            tags = ",".join(q.tags)
-            tier = "verification" if "verification" in q.tags else "production"
-            doc = " ".join((q.doc or "").split())
-            if len(doc) > 220:
-                doc = doc[:217] + "..."
+        q = REGISTRY[name]
+        oracle = "sql" if q.oracle is not None else "rows-only"
+        tags = ",".join(q.tags)
+        tier = "verification" if "verification" in q.tags else "production"
+        doc = " ".join((q.doc or "").split())
+        if len(doc) > 220:
+            doc = doc[:217] + "..."
         w = " [W]" if name in window else ""
         doc = doc.replace("|", "\\|")
         lines.append(
             f"| {i} | `{name}`{w} | {oracle} | {tier} | {tags} | {doc} |"
         )
-    with open("COVERAGE_INDEX.md", "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote COVERAGE_INDEX.md ({len(names)} rows, {n_oracled} oracled)")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    INDEX.write_text(render(), encoding="utf-8")
+    print(f"wrote {INDEX.name} ({len(REGISTRY)} rows)")
 
 
 if __name__ == "__main__":
