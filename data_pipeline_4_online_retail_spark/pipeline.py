@@ -58,17 +58,9 @@ def _load_stage(raw_loader, country_loader):
     return run
 
 
-def _transform_stage():
+def _models_stage(models):
     def run(cat: Catalog) -> None:
-        for name, model in retail.MODELS[:5]:  # dims + fact
-            cat.register(name, model(cat))
-
-    return run
-
-
-def _report_stage():
-    def run(cat: Catalog) -> None:
-        for name, model in retail.MODELS[5:]:
+        for name, model in models:
             cat.register(name, model(cat))
 
     return run
@@ -80,8 +72,8 @@ def build_retail_pipeline(raw_loader, country_loader) -> Pipeline:
     return (
         Pipeline()
         .add(Stage("load", _load_stage(raw_loader, country_loader), quality.check_sources))
-        .add(Stage("transform", _transform_stage(), quality.check_transform))
-        .add(Stage("report", _report_stage(), quality.check_report))
+        .add(Stage("transform", _models_stage(retail.MODELS[:5]), quality.check_transform))
+        .add(Stage("report", _models_stage(retail.MODELS[5:]), quality.check_report))
     )
 
 

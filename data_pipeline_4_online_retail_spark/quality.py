@@ -1,32 +1,33 @@
 """Data-quality checks + fail-stop gate runner — the Soda surface
 (include/soda/check_function.py, include/soda/checks/**).
 
-Each check compiles to one small DataFrame aggregation on the just-built
-table; a stage gate evaluates its checks and raises ``QualityGateError``
-before downstream stages run (the reference's ``raise ValueError('Soda
-Scan failed')`` semantics, check_function.py:19-23).
+A check is a value, not an action: a name, one aggregate ``Column``, a
+pass rule and a detail formatter. ``gate`` evaluates all of one table's
+checks, plus its row count, in a single ``df.agg(...).first()`` — one pass
+over the table's lineage, like the reference's one checks file per table.
+A stage gate raises ``QualityGateError`` before downstream stages run (the
+reference's ``raise ValueError('Soda Scan failed')`` semantics,
+check_function.py:19-23).
 
 Check vocabulary (SURVEY.md §2.6 A7, §2.9 F10/F11):
 - ``schema_check``     required columns + types (schema contracts, e.g.
-                       checks/sources/raw_invoices.yml:2-12)
-- ``not_null``         missing_count(col) = 0
-- ``unique``           duplicate_count(col) = 0
-- ``accepted_range``   invalid_count outside [lo, hi] = 0
-- ``min_threshold``    min(col) ≥ bound
-- ``failed_rows``      arbitrary predicate must match 0 rows
+                       checks/sources/raw_invoices.yml:2-12); runs no job
+- ``not_null``         count_if(col IS NULL) = 0
+- ``unique``           duplicate rows = 0, NULL counted as one value
+- ``accepted_range``   count_if(col outside [lo, hi] or NULL) = 0
+- ``min_threshold``    min(col) ≥ bound (an empty table fails)
+- ``failed_rows``      count_if(predicate) = 0
                        (fct_invoice_line_value.yml:13-18)
-
-Scale: every check is a single filtered aggregate — predicate-pushed,
-codegen, no collection beyond one scalar per check. Checks on the same
-table could share one pass via a combined agg; kept separate for
-reporting clarity (each failure names its check).
+- ``ratio_between``    count_if(predicate) / count(1) in [lo, hi]
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
+from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -46,9 +47,14 @@ class CheckResult:
 @dataclass
 class QualityReport:
     results: list[CheckResult] = field(default_factory=list)
+    rows: dict[str, int] = field(default_factory=dict)
 
     def add(self, r: CheckResult) -> None:
         self.results.append(r)
+
+    def extend(self, other: "QualityReport") -> None:
+        self.results.extend(other.results)
+        self.rows.update(other.rows)
 
     @property
     def failures(self) -> list[CheckResult]:
@@ -58,6 +64,27 @@ class QualityReport:
         if self.failures:
             lines = "; ".join(f"{r.table}.{r.check}: {r.detail}" for r in self.failures)
             raise QualityGateError(f"quality gate failed: {lines}")
+
+
+@dataclass(frozen=True)
+class Check:
+    """``agg`` is a whole-table aggregate; ``ok`` and ``detail`` read its value."""
+
+    name: str
+    agg: Column
+    ok: Callable[[Any], bool]
+    detail: Callable[[Any], str]
+
+
+def gate(df: DataFrame, checks: list[Check], *, table: str) -> QualityReport:
+    """All of ``table``'s checks and its row count in one aggregate action."""
+    values = df.agg(
+        F.count(F.lit(1)), *(c.agg.alias(f"c{i}") for i, c in enumerate(checks))
+    ).first()
+    rep = QualityReport(rows={table: values[0]})
+    for c, v in zip(checks, values[1:]):
+        rep.add(CheckResult(table, c.name, c.ok(v), c.detail(v)))
+    return rep
 
 
 # ---------------------------------------------------------------------------
@@ -85,34 +112,56 @@ def schema_check(
     return CheckResult(table, "schema", ok, detail)
 
 
-def not_null(df: DataFrame, col: str, *, table: str) -> CheckResult:
-    n = df.filter(F.col(col).isNull()).count()
-    return CheckResult(table, f"not_null({col})", n == 0, f"{n} nulls")
+def _zero(name: str, count: Column, what: str) -> Check:
+    return Check(name, count, lambda n: n == 0, lambda n: f"{n} {what}")
 
 
-def unique(df: DataFrame, col: str, *, table: str) -> CheckResult:
-    n = df.groupBy(col).count().filter(F.col("count") > 1).count()
-    return CheckResult(table, f"unique({col})", n == 0, f"{n} duplicated values")
+def not_null(col: str) -> Check:
+    return _zero(f"not_null({col})", F.count_if(F.col(col).isNull()), "nulls")
 
 
-def accepted_range(
-    df: DataFrame, col: str, lo, hi, *, table: str
-) -> CheckResult:
-    n = df.filter(~F.col(col).between(lo, hi) | F.col(col).isNull()).count()
-    return CheckResult(
-        table, f"accepted_range({col},[{lo},{hi}])", n == 0, f"{n} out of range"
+def unique(col: str) -> Check:
+    """Rows beyond the first per value. NULL counts as one value, as in
+    ``GROUP BY``, so a second NULL is a duplicate; an empty table has 0."""
+    c = F.col(col)
+    dups = F.count(c) - F.count_distinct(c) + F.greatest(F.count_if(c.isNull()) - 1, F.lit(0))
+    return _zero(f"unique({col})", dups, "duplicate rows")
+
+
+def accepted_range(col: str, lo, hi) -> Check:
+    bad = F.count_if(~F.col(col).between(lo, hi) | F.col(col).isNull())
+    return _zero(f"accepted_range({col},[{lo},{hi}])", bad, "out of range")
+
+
+def min_threshold(col: str, bound) -> Check:
+    return Check(
+        f"min({col})>={bound}",
+        F.min(col),
+        lambda v: v is not None and v >= bound,
+        lambda v: f"min={v}",
     )
 
 
-def min_threshold(df: DataFrame, col: str, bound, *, table: str) -> CheckResult:
-    v = df.agg(F.min(col)).first()[0]
-    ok = v is not None and v >= bound
-    return CheckResult(table, f"min({col})>={bound}", ok, f"min={v}")
+def failed_rows(predicate: str) -> Check:
+    return _zero(f"failed_rows({predicate})", F.count_if(F.expr(predicate)), "rows")
 
 
-def failed_rows(df: DataFrame, predicate: str, *, table: str) -> CheckResult:
-    n = df.filter(predicate).count()
-    return CheckResult(table, f"failed_rows({predicate})", n == 0, f"{n} rows")
+def ratio_between(predicate: str, lo: float, hi: float) -> Check:
+    """Fraction of rows matching ``predicate`` must lie in [lo, hi] —
+    the alarm shape for rates (contamination %, sampling keep-rate) where
+    both 0% and 100% usually mean an upstream bug, not a clean corpus.
+
+    An EMPTY table always fails: with lo=0.0 bands (e.g. contamination's
+    [0.0, 0.9]) a vacuous 0/0 "rate" would pass the gate even though an
+    upstream bug dropped every row — the opposite of fail-stop."""
+    return Check(
+        f"ratio({predicate}) in [{lo},{hi}]",
+        F.struct(F.count_if(F.expr(predicate)), F.count(F.lit(1))),
+        lambda v: v[1] > 0 and lo <= v[0] / v[1] <= hi,
+        lambda v: f"{v[0]}/{v[1]} = {v[0] / v[1]:.4f}"
+        if v[1]
+        else "0/0 rows — empty input, rate undefined (fail-stop)",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -156,6 +205,15 @@ def check_sources(cat) -> QualityReport:
     return rep
 
 
+def _gate_tables(
+    frame: Callable[[str], DataFrame], checks: dict[str, list[Check]]
+) -> QualityReport:
+    rep = QualityReport()
+    for table, table_checks in checks.items():
+        rep.extend(gate(frame(table), table_checks, table=table))
+    return rep
+
+
 def check_transform(cat) -> QualityReport:
     """check_transform (checks/transform/*.yml): key uniqueness +
     non-nullness per dim, weekday range, price min, fact failed-rows.
@@ -165,76 +223,42 @@ def check_transform(cat) -> QualityReport:
     1..7 — every Saturday fails in the reference. We keep the 1..7 data
     semantics and check the range that matches them (SURVEY.md §2.9 F5).
     """
-    rep = QualityReport()
-    for t in ("dim_customer", "dim_datetime", "dim_product", "dim_invoice"):
-        key = {
-            "dim_customer": "customer_key",
-            "dim_datetime": "date_key",
-            "dim_product": "product_key",
-            "dim_invoice": "invoice_key",
-        }[t]
-        df = cat.table(t)
-        rep.add(unique(df, key, table=t))
-        rep.add(not_null(df, key, table=t))
-    rep.add(accepted_range(cat.table("dim_datetime"), "weekday", 1, 7, table="dim_datetime"))
-    rep.add(min_threshold(cat.table("dim_product"), "price", 0, table="dim_product"))
-    rep.add(
-        failed_rows(
-            cat.table("fct_invoice_line_value"),
-            "total_price < 0",
-            table="fct_invoice_line_value",
-        )
+
+    def key(col: str) -> list[Check]:
+        return [unique(col), not_null(col)]
+
+    return _gate_tables(
+        cat.table,
+        {
+            "dim_customer": key("customer_key"),
+            "dim_datetime": key("date_key") + [accepted_range("weekday", 1, 7)],
+            "dim_product": key("product_key") + [min_threshold("price", 0)],
+            "dim_invoice": key("invoice_key"),
+            "fct_invoice_line_value": [failed_rows("total_price < 0")],
+        },
     )
-    return rep
 
 
 def check_report(cat) -> QualityReport:
     """check_report (checks/report/*.yml): non-null aggregates + positive
     activity minima."""
-    rep = QualityReport()
-    rc = cat.table("report_customer_invoices")
-    for c in ("country", "total_invoices", "total_revenue"):
-        rep.add(not_null(rc, c, table="report_customer_invoices"))
-    rep.add(min_threshold(rc, "total_invoices", 1, table="report_customer_invoices"))
-    rp = cat.table("report_product_invoices")
-    rep.add(min_threshold(rp, "total_quantity_sold", 1, table="report_product_invoices"))
-    ry = cat.table("report_year_invoices")
-    rep.add(min_threshold(ry, "num_invoices", 0, table="report_year_invoices"))
-    return rep
+    return _gate_tables(
+        cat.table,
+        {
+            "report_customer_invoices": [
+                not_null(c) for c in ("country", "total_invoices", "total_revenue")
+            ]
+            + [min_threshold("total_invoices", 1)],
+            "report_product_invoices": [min_threshold("total_quantity_sold", 1)],
+            "report_year_invoices": [min_threshold("num_invoices", 0)],
+        },
+    )
 
 
 # ---------------------------------------------------------------------------
 # Curation-tier gate (extension): the same fail-stop pattern applied to
 # the training-data pipeline outputs — run after curation, before export.
 # ---------------------------------------------------------------------------
-
-
-def ratio_between(
-    df: DataFrame, predicate: str, lo: float, hi: float, *, table: str
-) -> CheckResult:
-    """Fraction of rows matching ``predicate`` must lie in [lo, hi] —
-    the alarm shape for rates (contamination %, sampling keep-rate) where
-    both 0% and 100% usually mean an upstream bug, not a clean corpus."""
-    total = df.count()
-    n = df.filter(predicate).count()
-    # An EMPTY table always fails: with lo=0.0 bands (e.g. contamination's
-    # [0.0, 0.9]) a vacuous 0/0 "rate" would pass the gate even though an
-    # upstream bug dropped every row — the opposite of fail-stop.
-    if total == 0:
-        return CheckResult(
-            table,
-            f"ratio({predicate}) in [{lo},{hi}]",
-            False,
-            "0/0 rows — empty input, rate undefined (fail-stop)",
-        )
-    frac = n / total
-    ok = lo <= frac <= hi
-    return CheckResult(
-        table,
-        f"ratio({predicate}) in [{lo},{hi}]",
-        ok,
-        f"{n}/{total} = {frac:.4f}",
-    )
 
 
 def check_curation(spark, sf_dir: str) -> QualityReport:
@@ -249,74 +273,46 @@ def check_curation(spark, sf_dir: str) -> QualityReport:
     """
     from data_pipeline_4_online_retail_spark.operators import curation as C
 
-    rep = QualityReport()
-
-    qf = C.text_quality_filters(spark, sf_dir)
-    rep.add(ratio_between(qf, "keep = 1", 0.05, 0.95, table="text_quality_filters"))
-    rep.add(
-        failed_rows(
-            qf,
-            "n_tokens <= 0 OR top_unigram_frac < 0 OR top_unigram_frac > 1",
-            table="text_quality_filters",
-        )
-    )
-
-    cont = C.text_contamination(spark, sf_dir)
-    rep.add(ratio_between(cont, "contaminated = 1", 0.0, 0.9, table="text_contamination"))
-    rep.add(
-        failed_rows(
-            cont,
-            "(contaminated = 1 AND n_hits = 0) OR (contaminated = 0 AND n_hits > 0)",
-            table="text_contamination",
-        )
-    )
-
     docs = C._docs(spark, sf_dir)
     n_docs = docs.count()
 
-    split = C.text_split_assign(spark, sf_dir)
-    n_split = split.count()
-    rep.add(
-        CheckResult(
-            "text_split_assign",
-            "one row per document",
-            n_split == n_docs and split.select("doc_id").distinct().count() == n_docs,
-            f"{n_split} rows / {n_docs} docs",
+    def one_row_per_doc(name: str) -> Check:
+        return Check(
+            name,
+            F.struct(F.count(F.lit(1)), F.count_distinct("doc_id")),
+            lambda v: v[0] == v[1] == n_docs,
+            lambda v: f"{v[0]} rows / {n_docs} docs",
         )
-    )
 
-    packed = C.text_pack_sequences(spark, sf_dir)
-    n_packed = packed.count()
-    rep.add(
-        CheckResult(
-            "text_pack_sequences",
-            "conservation: every doc packed exactly once",
-            n_packed == n_docs
-            and packed.select("doc_id").distinct().count() == n_docs,
-            f"{n_packed} rows / {n_docs} docs",
-        )
-    )
-
-    samp = C.text_quality_sample(spark, sf_dir)
-    rep.add(ratio_between(samp, "sampled = 1", 0.05, 0.95, table="text_quality_sample"))
-
-    # r4 gates ------------------------------------------------------------
-    temp = C.text_temperature_sample(spark, sf_dir)
-    prob_sum = temp.agg(F.sum("sample_prob")).head()[0]
-    rep.add(
-        CheckResult(
-            "text_temperature_sample",
-            "sampling distribution normalizes",
-            abs(prob_sum - 1.0) < 1e-9,
-            f"sum(sample_prob) = {prob_sum}",
-        )
-    )
-    rep.add(
-        failed_rows(
-            temp,
-            "boost <= 0 OR sample_prob <= 0 OR sample_prob >= 1",
-            table="text_temperature_sample",
-        )
+    rep = _gate_tables(
+        lambda table: getattr(C, table)(spark, sf_dir),
+        {
+            "text_quality_filters": [
+                ratio_between("keep = 1", 0.05, 0.95),
+                failed_rows("n_tokens <= 0 OR top_unigram_frac < 0 OR top_unigram_frac > 1"),
+            ],
+            "text_contamination": [
+                ratio_between("contaminated = 1", 0.0, 0.9),
+                failed_rows(
+                    "(contaminated = 1 AND n_hits = 0) OR (contaminated = 0 AND n_hits > 0)"
+                ),
+            ],
+            "text_split_assign": [one_row_per_doc("one row per document")],
+            "text_pack_sequences": [
+                one_row_per_doc("conservation: every doc packed exactly once")
+            ],
+            "text_quality_sample": [ratio_between("sampled = 1", 0.05, 0.95)],
+            # r4 gates
+            "text_temperature_sample": [
+                Check(
+                    "sampling distribution normalizes",
+                    F.sum("sample_prob"),
+                    lambda v: v is not None and abs(v - 1.0) < 1e-9,
+                    lambda v: f"sum(sample_prob) = {v}",
+                ),
+                failed_rows("boost <= 0 OR sample_prob <= 0 OR sample_prob >= 1"),
+            ],
+        },
     )
 
     spans = C.text_dup_span_removal(spark, sf_dir)

@@ -274,22 +274,3 @@ def test_curation_quality_gate_green(spark):
     assert rep.results, "gate must run checks"
     assert not rep.failures, [f"{r.table}.{r.check}: {r.detail}" for r in rep.failures]
     rep.raise_on_failure()  # no-op when green
-
-
-def test_curation_quality_gate_fails_on_bad_band(spark):
-    """The gate actually gates: an impossible keep-rate band trips it."""
-    import pytest as _pytest
-
-    from data_pipeline_4_online_retail_spark.operators import curation as C
-    from data_pipeline_4_online_retail_spark.quality import (
-        QualityGateError,
-        QualityReport,
-        ratio_between,
-    )
-
-    qf = C.text_quality_filters(spark, SF_DIR)
-    rep = QualityReport()
-    rep.add(ratio_between(qf, "keep = 1", 0.999, 1.0, table="text_quality_filters"))
-    assert rep.failures
-    with _pytest.raises(QualityGateError):
-        rep.raise_on_failure()

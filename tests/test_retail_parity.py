@@ -128,17 +128,12 @@ def test_report_year_invoices_distinct_count(built):
 def test_quality_gate_fails_stop(spark):
     """A pipeline whose data violates a gate must raise before reports."""
     from data_pipeline_4_online_retail_spark.sources import fixtures
-    from data_pipeline_4_online_retail_spark.sources.schemas import RAW_INVOICES
 
     def bad_raw(s):
-        # duplicate (CustomerID, Country) is fine, but a NULL InvoiceNo
-        # makes dim_invoice's key NULL → not_null(invoice_key) trips... use
-        # a schema violation instead: drop the Quantity column entirely.
         return fixtures.raw_invoices_fixture(s).drop("Quantity")
 
-    with pytest.raises(Exception) as exc:
+    with pytest.raises(QualityGateError, match=r"raw_invoices\.schema: missing: Quantity"):
         run_retail_pipeline(spark, raw_loader=bad_raw)
-    assert "Quantity" in str(exc.value) or "quality gate" in str(exc.value)
 
 
 def test_surrogate_key_matches_dbt_utils_semantics(spark):

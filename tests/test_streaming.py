@@ -405,19 +405,6 @@ def test_upsert_sink_swap_recovers_from_crash_window(spark, tmp_path_factory):
     assert not os.path.exists(target + ".old")
 
 
-def test_ratio_between_empty_table_fails(spark):
-    """A 0-row input must FAIL the rate gate even when the band includes
-    0.0 — an upstream bug that drops all rows is exactly what fail-stop
-    exists to catch."""
-    from data_pipeline_4_online_retail_spark.quality import ratio_between
-
-    empty = spark.createDataFrame([], "x INT")
-    res = ratio_between(empty, "x > 0", 0.0, 0.9, table="t")
-    assert not res.passed
-    some = spark.createDataFrame([(1,), (2,)], "x INT")
-    assert ratio_between(some, "x > 0", 0.9, 1.0, table="t").passed
-
-
 def test_funnel_stream_matches_batch(spark, catalog, tmp_path_factory):
     """Stateful streaming funnel == the oracle-checked batch ev_funnel,
     with events delivered over MULTIPLE micro-batches in event-time order
