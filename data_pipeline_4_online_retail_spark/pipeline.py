@@ -7,6 +7,17 @@ order with fail-stop quality gates between stages (C1-C3).
 
 ``run_retail_pipeline`` is the whole reference DAG end-to-end:
 load fixtures (or real CSV) → gate → dims+fact → gate → reports → gate.
+
+Every stage table is ``materialized: table``, as in the reference's
+dbt_project.yml: ``raw_invoices`` and each model are persisted through
+``session.persist_scoped`` before they are registered. Each table's gate
+aggregate is the first action over it and fills the cache, so later
+models, the parquet writes and any ``show()`` read the materialized rows
+instead of re-deriving the CSV read, the preprocess window and every
+upstream join. The tables are held until the next ``Pipeline.execute`` or
+``session.release_caches()`` (which ``plans.registry.register`` calls at
+each registered builder's entry); after that a frame recomputes through
+its lineage.
 """
 
 from __future__ import annotations
@@ -16,7 +27,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
-from data_pipeline_4_online_retail_spark import quality
+from data_pipeline_4_online_retail_spark import quality, session
 from data_pipeline_4_online_retail_spark.plans import retail
 from data_pipeline_4_online_retail_spark.sources.catalog import Catalog
 
@@ -38,7 +49,10 @@ class Pipeline:
 
     def execute(self, cat: Catalog) -> list[quality.QualityReport]:
         """Run stages in order; a failing gate raises QualityGateError and
-        halts the chain (the reference's Soda fail-stop, C2)."""
+        halts the chain (the reference's Soda fail-stop, C2). The previous
+        run's stage tables are released first, so at most one run's are
+        held."""
+        session.release_caches()
         reports: list[quality.QualityReport] = []
         for stage in self.stages:
             stage.run(cat)
@@ -52,7 +66,8 @@ class Pipeline:
 def _load_stage(raw_loader, country_loader):
     def run(cat: Catalog) -> None:
         spark = cat.spark
-        cat.register("raw_invoices", retail.preprocess(raw_loader(spark)))
+        raw = session.persist_scoped(retail.preprocess(raw_loader(spark)))
+        cat.register("raw_invoices", raw)
         cat.register("country", country_loader(spark))
 
     return run
@@ -61,7 +76,7 @@ def _load_stage(raw_loader, country_loader):
 def _models_stage(models):
     def run(cat: Catalog) -> None:
         for name, model in models:
-            cat.register(name, model(cat))
+            cat.register(name, session.persist_scoped(model(cat)))
 
     return run
 
@@ -81,10 +96,9 @@ def run_retail_pipeline(
     spark: SparkSession, raw_loader=None, country_loader=None
 ) -> Catalog:
     """End-to-end run; defaults to the deterministic parity fixtures."""
-    from data_pipeline_4_online_retail_spark.session import pin_session_semantics
     from data_pipeline_4_online_retail_spark.sources import fixtures
 
-    pin_session_semantics(spark)
+    session.pin_session_semantics(spark)
     raw_loader = raw_loader or fixtures.raw_invoices_fixture
     country_loader = country_loader or fixtures.country_fixture
     cat = Catalog(spark)

@@ -23,6 +23,7 @@ Check vocabulary (SURVEY.md §2.6 A7, §2.9 F10/F11):
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
@@ -48,6 +49,7 @@ class CheckResult:
 class QualityReport:
     results: list[CheckResult] = field(default_factory=list)
     rows: dict[str, int] = field(default_factory=dict)
+    seconds: dict[str, float] = field(default_factory=dict)
 
     def add(self, r: CheckResult) -> None:
         self.results.append(r)
@@ -55,6 +57,7 @@ class QualityReport:
     def extend(self, other: "QualityReport") -> None:
         self.results.extend(other.results)
         self.rows.update(other.rows)
+        self.seconds.update(other.seconds)
 
     @property
     def failures(self) -> list[CheckResult]:
@@ -77,11 +80,16 @@ class Check:
 
 
 def gate(df: DataFrame, checks: list[Check], *, table: str) -> QualityReport:
-    """All of ``table``'s checks and its row count in one aggregate action."""
+    """All of ``table``'s checks and its row count in one aggregate action.
+    ``seconds`` times that action; over a persisted stage table it is the
+    action that materializes it, so it is the table's build time too."""
+    start = time.perf_counter()
     values = df.agg(
         F.count(F.lit(1)), *(c.agg.alias(f"c{i}") for i, c in enumerate(checks))
     ).first()
-    rep = QualityReport(rows={table: values[0]})
+    rep = QualityReport(
+        rows={table: values[0]}, seconds={table: time.perf_counter() - start}
+    )
     for c, v in zip(checks, values[1:]):
         rep.add(CheckResult(table, c.name, c.ok(v), c.detail(v)))
     return rep

@@ -3,10 +3,13 @@
 Each constructor gets a pass and a fail case on a tiny frame, including
 the empty-table and NULL rules; the retail gates are pinned to one
 aggregate per table and a job budget, and to fail-stop on a data
-violation.
+violation. The pipeline's materialized stage tables are pinned by a job
+budget for a run plus its parquet writes, and by their lifetime.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import DataFrame
@@ -22,7 +25,10 @@ from data_pipeline_4_online_retail_spark.quality import (
     gate,
     ratio_between,
 )
-from data_pipeline_4_online_retail_spark.session import pin_session_semantics
+from data_pipeline_4_online_retail_spark.session import (
+    pin_session_semantics,
+    release_caches,
+)
 from data_pipeline_4_online_retail_spark.sources import fixtures
 from data_pipeline_4_online_retail_spark.sources.catalog import Catalog
 from data_pipeline_4_online_retail_spark.sources.schemas import RAW_INVOICES
@@ -96,31 +102,76 @@ def test_curation_quality_gate_fails_on_bad_band(spark):
         rep.raise_on_failure()
 
 
+@contextmanager
+def _job_group(sc, group: str):
+    """Tag the Spark jobs run inside the block; yields a job counter."""
+
+    def jobs() -> int:
+        # job starts reach the status tracker through the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    sc.setJobGroup(group, group)
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_retail_gates_one_aggregate_per_table(spark, monkeypatch):
     """check_transform + check_report: one ``agg`` per gated table, 19
-    check names with the load gate, and a pinned Spark job budget."""
+    check names with the load gate, a timing per table, and a pinned Spark
+    job budget."""
     cat = run_retail_pipeline(spark)
     calls = []
     cls = type(cat.table("dim_customer"))
     agg = cls.agg
     monkeypatch.setattr(cls, "agg", lambda self, *a: calls.append(1) or agg(self, *a))
-    sc = spark.sparkContext
-    sc.setJobGroup("quality-gate-jobs", "retail transform + report gates")
-    try:
+    with _job_group(spark.sparkContext, "quality-gate-jobs") as jobs:
         reps = [Q.check_transform(cat), Q.check_report(cat)]
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("quality-gate-jobs")
     tables = [t for rep in reps for t in rep.rows]
     assert tables == [name for name, _ in MODELS]
     assert len(calls) == len(MODELS)
     assert sum(len(rep.results) for rep in reps) == 17  # + 2 schema checks
     assert not any(rep.failures for rep in reps)
-    # Measured 87-90 jobs at 4 and 32 cores (AQE's job split varies by a few
-    # between runs); one action per check, the form ``gate`` replaced, ran
-    # 118-119.
-    assert len(jobs) <= 95, len(jobs)
+    seconds = {t: s for rep in reps for t, s in rep.seconds.items()}
+    assert list(seconds) == tables and all(s >= 0 for s in seconds.values())
+    # Re-gating the run's materialized tables: 18 jobs measured at 4 and 32
+    # cores. A gate that re-derived its table's lineage would add tens.
+    assert jobs() <= 20, jobs()
+
+
+def test_retail_pipeline_job_budget(spark, tmp_path):
+    """Each stage table is materialized once: the gates fill the caches, so
+    each parquet write is one job over its materialized table."""
+    per_write = []
+    with _job_group(spark.sparkContext, "retail-pipeline-jobs") as jobs:
+        cat = run_retail_pipeline(spark)
+        for name, _ in MODELS:
+            before = jobs()
+            cat.table(name).write.mode("overwrite").parquet(str(tmp_path / name))
+            per_write.append(jobs() - before)
+    assert per_write == [1] * len(MODELS)
+    # Measured 52 (44 for the run, 8 for the writes) at 4 and 32 cores,
+    # plus a few jobs of headroom for AQE's stage split.
+    assert jobs() <= 57, jobs()
+
+
+def test_pipeline_holds_one_runs_stage_tables(spark):
+    """Two runs hold one run's 9 stage tables (raw_invoices + 8 models),
+    not 18, and ``release_caches`` drops them."""
+
+    def held() -> set[int]:
+        return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+    release_caches()
+    before = held()
+    run_retail_pipeline(spark)
+    run_retail_pipeline(spark)
+    assert len(held() - before) == len(MODELS) + 1
+    release_caches()
+    assert not held() - before
 
 
 def test_duplicate_invoice_key_fails_stop_before_reports(spark):

@@ -114,6 +114,13 @@ def test_retail_pipeline_no_unbounded_broadcast(spark):
             for line in plan.splitlines():
                 if "BroadcastHashJoin" in line:
                     assert not any(k in line for k in dim_keys), (table, line)
+            # The stage tables are persisted, so the plan is rooted at an
+            # InMemoryTableScan; the joins must still be in the scanned text
+            # (inside the nested cached plans) or the check above is vacuous.
+            assert any(
+                "SortMergeJoin" in line and any(k in line for k in dim_keys)
+                for line in plan.splitlines()
+            ), (table, plan)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
