@@ -7,8 +7,8 @@ Three tiers:
   numpy BLAS — the faster path for high dimensions; identical results,
   same oracle),
 - sub-quadratic approximate variants: IVF-style cell-pruned search and
-  random-hyperplane LSH (rows-only / pytest-verified — sign bits near the
-  hyperplane are float-rounding-sensitive, so no cross-engine hash).
+  random-hyperplane LSH (hash-checked against ``_lsh_oracle``, a bit-exact
+  SQL twin that re-derives the hyperplanes and every sign bit).
 
 Scale design: brute-force distributes as one broadcast of the query vector
 and a per-partition scan (no shuffle until the final top-k merge, which
@@ -50,6 +50,17 @@ LIMIT {TOP_K}
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_tables(spark, sf_dir).table("embeddings")
+
+
+def _with_matrix(df: DataFrame, name: str, value: list) -> DataFrame:
+    """Cross-join a broadcast one-row table whose column ``name`` holds
+    ``value``, nested lists of Python floats (k-means centroids, PQ
+    codebooks, LSH hyperplanes), typed as nested ``array<double>``.
+    Passing a matrix as data keeps the plan small and the generated code
+    the same whatever its values, where literals grow the expression
+    tree."""
+    m = df.sparkSession.createDataFrame([(value,)], [name])
+    return df.crossJoin(F.broadcast(m))
 
 
 def topk_bruteforce(
@@ -157,9 +168,9 @@ def sim_ann_ivf(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Random-hyperplane LSH (rows-only: sign bits near a hyperplane are float-
-# rounding-sensitive, so cross-engine hashing is not meaningful; recall vs
-# brute force is asserted in tests/test_similarity.py)
+# Random-hyperplane LSH (hash-checked against the bit-exact _lsh_oracle
+# twin; recall vs brute force and bucket equality with a pure-Python fold
+# are asserted in tests/test_similarity.py)
 # ---------------------------------------------------------------------------
 
 
@@ -175,44 +186,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
             row.append(((state >> 11) / float(1 << 53)) * 2.0 - 1.0)
         planes.append(row)
     return planes
-
-
-def _sql_double(x: float) -> str:
-    """Bit-exact SQL double literal: ``repr`` emits the shortest decimal
-    that round-trips in IEEE754, and Spark's parser (Double.parseDouble)
-    is correctly rounded — the parsed value IS ``x``."""
-    return f"{float(x)!r}D"
-
-
-def lsh_bucket(col, planes: list[list[float]]):
-    """Sign-bit bucket id: bit j = [dot(v, plane_j) > 0].
-
-    r13: the whole bucket is generated as ONE SQL string (a single
-    ``F.expr`` py4j round-trip) instead of composing ~65 Column calls
-    per plane — the old form cost 216 planes × 65 py4j round-trips
-    ≈ 14k driver calls ≈ 16 s of pure DataFrame CONSTRUCTION in
-    sim_ann_lsh before any job ran (measured; guide §7.3 — "nothing is
-    running" time is driver-side). The parsed expression is the same
-    tree the Column form built: aggregate(zip_with(v, array(...),
-    (x, y) -> double(x) * double(y)), 0.0, +) per plane — the left fold
-    whose bit-exactness the _lsh_oracle twin re-derives — XOR-folded
-    over shifted sign bits. ``col`` must be a SQL fragment (column
-    name), not a Column."""
-    col_sql = col if isinstance(col, str) else "embedding"
-    parts = ["CAST(0 AS BIGINT)"]
-    for j, plane in enumerate(planes):
-        arr = ", ".join(_sql_double(x) for x in plane)
-        dot = (
-            f"aggregate(zip_with({col_sql}, array({arr}), "
-            "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-            "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-        bit = (
-            f"CASE WHEN {dot} > 0 THEN CAST(1 AS BIGINT) "
-            "ELSE CAST(0 AS BIGINT) END"
-        )
-        parts.append(f"shiftleft({bit}, {j})")
-    return F.expr(" ^ ".join(parts))
 
 
 N_TABLES = 18
@@ -253,6 +226,32 @@ def _query_probe_buckets(
     return out
 
 
+def _lsh_entries(
+    emb: DataFrame, planes: list[list[float]], n_tables: int, k: int
+) -> DataFrame:
+    """(vec_id, label, embedding, tbl, bucket): one sign-bit bucket per
+    vector and table. Bit j of table t is [dot(v, planes[t*k + j]) > 0],
+    the dot a left fold over float32→double widenings (the fold the
+    _lsh_oracle twin re-derives). The planes ride one broadcast
+    ``array<array<double>>`` column, as the k-means centroids and PQ
+    codebooks do, so the expression has the same small size for any
+    number of planes; the shifted bits are disjoint, so OR-ing them is
+    the bucket's sum."""
+    buckets = F.expr(
+        f"""transform(sequence(0, {n_tables - 1}), t ->
+            aggregate(sequence(0, {k - 1}), 0L, (acc, j) -> acc |
+                CASE WHEN aggregate(
+                         zip_with(embedding, planes[t * {k} + j],
+                                  (x, y) -> double(x) * y),
+                         0.0D, (a, v) -> a + v) > 0
+                     THEN shiftleft(1L, j) ELSE 0L END))"""
+    )
+    return _with_matrix(emb, "planes", planes).select(
+        "vec_id", "label", "embedding",
+        F.posexplode(buckets).alias("tbl", "bucket"),
+    )
+
+
 def lsh_candidates(
     emb: DataFrame,
     query_vec_id: int = QUERY_VEC_ID,
@@ -267,14 +266,7 @@ def lsh_candidates(
     so no corpus shuffle happens per query."""
     qv = list(emb.filter(F.col("vec_id") == query_vec_id).head()["embedding"])
     planes = _hyperplanes(len(qv), n_tables * k)
-    tables = [planes[t * k : (t + 1) * k] for t in range(n_tables)]
-    buckets = F.array(
-        *[lsh_bucket("embedding", tables[t]) for t in range(n_tables)]
-    )
-    entries = emb.select(
-        "vec_id", "label", "embedding",
-        F.posexplode(buckets).alias("tbl", "bucket"),
-    )
+    entries = _lsh_entries(emb, planes, n_tables, k)
     probes_df = F.broadcast(
         emb.sparkSession.createDataFrame(
             _query_probe_buckets(qv, planes, n_tables, k, flips),
@@ -303,10 +295,12 @@ def _lsh_oracle() -> str:
       numerator < 2^53, power-of-two division, Sterbenz subtraction) —
       verified value-identical to the Python generator in
       tests/test_similarity.py::test_lsh_oracle_planes_bit_exact;
-    - dot products / norms: Spark's ``F.aggregate(..., 0.0, acc + v)``
+    - dot products / norms: Spark's ``aggregate(..., 0.0D, a + v)``
       is a left fold whose first step ``0.0 + p0 == p0``, i.e. exactly
       DuckDB's init-less left-to-right ``list_reduce``; both sides widen
-      the float32 embedding to double before multiplying;
+      the float32 embedding to double before multiplying, and the Spark
+      side folds against the broadcast ``planes`` column, which holds
+      the generator's doubles themselves (see :func:`_lsh_entries`);
     - the query's 5 lowest-|margin| bits: Python's stable sort ties on
       bit index == ``ROW_NUMBER() OVER (ORDER BY abs(dot), j)``;
     - the 2^5 directed probes: a static 32-mask table XORed onto the
@@ -638,13 +632,6 @@ def _assign_expr() -> F.Column:
     return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
-def _with_centroids(df, centroids: list[list[float]]):
-    """Cross-join a broadcast single-row (k × dim) centroid table."""
-    spark = df.sparkSession
-    cents = spark.createDataFrame([(centroids,)], "cents: array<array<double>>")
-    return df.crossJoin(F.broadcast(cents))
-
-
 def _assign_pandas_udf(centroids: list[list[float]]):
     """Arrow-batched assignment with the EXACT float semantics of
     ``_assign_expr``: per centroid, the squared distance accumulates
@@ -895,12 +882,6 @@ def _pq_assign_expr(m: int, sub_dim: int) -> F.Column:
     return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
-def _with_codebooks(df: DataFrame, cb: list) -> DataFrame:
-    spark = df.sparkSession
-    cb_df = spark.createDataFrame([(cb,)], "cb: array<array<array<double>>>")
-    return df.crossJoin(F.broadcast(cb_df))
-
-
 def train_pq_codebooks(e: DataFrame, dim: int) -> list:
     """[M][K][dim/M] codebooks via per-subspace Lloyd, all M subspaces
     trained in the SAME per-iteration pass: assignment is M argmin
@@ -925,7 +906,7 @@ def train_pq_codebooks(e: DataFrame, dim: int) -> list:
     cached = e.select("vec_id", "embedding").persist()
     try:
         for _ in range(PQ_ITERS):
-            assigned = _with_codebooks(cached, cb).select(
+            assigned = _with_matrix(cached, "cb", cb).select(
                 "embedding",
                 *[_pq_assign_expr(m, sub).alias(f"c{m}") for m in range(PQ_M)],
             )
@@ -1083,7 +1064,7 @@ def sim_pq_encode(spark, sf_dir):
     dim = len(e.select("embedding").head()["embedding"])
     sub = dim // PQ_M
     cb = train_pq_codebooks(e, dim)
-    return _with_codebooks(e, cb).select(
+    return _with_matrix(e, "cb", cb).select(
         "vec_id",
         "label",
         F.posexplode(
@@ -1113,7 +1094,7 @@ def _pq_adc_ranked(spark, sf_dir, k):
     ]
     spark_ = e.sparkSession
     dt_df = spark_.createDataFrame([(dtab,)], "dt: array<array<double>>")
-    coded = _with_codebooks(e, cb).select(
+    coded = _with_matrix(e, "cb", cb).select(
         "vec_id",
         "label",
         F.array(*[_pq_assign_expr(m, sub) for m in range(PQ_M)]).alias("codes"),
@@ -1276,7 +1257,7 @@ def sim_ann_ivf_pq(spark, sf_dir):
     cell = e.filter(
         (F.col("label") == F.lit(qlabel)) & (F.col("vec_id") != QUERY_VEC_ID)
     )
-    coded = _with_codebooks(cell, cb).select(
+    coded = _with_matrix(cell, "cb", cb).select(
         "vec_id",
         "label",
         F.array(*[_pq_assign_expr(m, sub) for m in range(PQ_M)]).alias("codes"),

@@ -6,8 +6,10 @@ row-count + schema + order-insensitive value hash at sf=0.01
 (CORRECTNESS_r{N}.json), so:
 
 - every computed column is aliased identically on both sides,
-- double aggregates are ``round(x, 2)`` on both sides (float summation
-  order differs between engines; rounding pins the returned value),
+- doubles are never rounded: per-row arithmetic on identical inputs is
+  IEEE-deterministic, and aggregates sum exact DECIMALs (float summation
+  order differs between engines), casting only the final aggregate to
+  DOUBLE on both sides (see the float discipline in ``plans/star.py``),
 - top-k queries carry deterministic tie-break orderings.
 
 Queries with ``oracle=None`` are genuinely non-SQL-expressible (hash-based

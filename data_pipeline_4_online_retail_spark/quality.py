@@ -348,22 +348,6 @@ def check_curation(spark, sf_dir: str) -> QualityReport:
         )
     )
 
-    cap = C.text_source_cap(spark, sf_dir)
-    over = (
-        cap.groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > C.SOURCE_CAP)
-        .count()
-    )
-    rep.add(
-        CheckResult(
-            "text_source_cap",
-            f"no source exceeds the cap ({C.SOURCE_CAP})",
-            over == 0,
-            f"{over} sources over cap",
-        )
-    )
-
     # r4c gates -----------------------------------------------------------
     from data_pipeline_4_online_retail_spark.operators import dedup as D
     from data_pipeline_4_online_retail_spark.operators import (
@@ -371,19 +355,29 @@ def check_curation(spark, sf_dir: str) -> QualityReport:
     )
     from data_pipeline_4_online_retail_spark.operators import relational as R
 
-    gs = R.op_group_sample_exact_k(spark, sf_dir)
-    off_k = (
-        gs.groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") != R.GROUP_SAMPLE_K)
-        .count()
-    )
-    rep.add(
-        CheckResult(
-            "op_group_sample_exact_k",
-            f"every group yields exactly k={R.GROUP_SAMPLE_K} rows",
-            off_k == 0,
-            f"{off_k} groups off-size",
+    # gated over their per-source group sizes
+    grouped = {"text_source_cap": C, "op_group_sample_exact_k": R}
+    rep.extend(
+        _gate_tables(
+            lambda table: getattr(grouped[table], table)(spark, sf_dir)
+            .groupBy("source")
+            .agg(F.count(F.lit(1)).alias("n")),
+            {
+                "text_source_cap": [
+                    _zero(
+                        f"no source exceeds the cap ({C.SOURCE_CAP})",
+                        F.count_if(F.col("n") > C.SOURCE_CAP),
+                        "sources over cap",
+                    )
+                ],
+                "op_group_sample_exact_k": [
+                    _zero(
+                        f"every group yields exactly k={R.GROUP_SAMPLE_K} rows",
+                        F.count_if(F.col("n") != R.GROUP_SAMPLE_K),
+                        "groups off-size",
+                    )
+                ],
+            },
         )
     )
 

@@ -142,7 +142,7 @@ def test_kmeans_assign_udf_matches_expr(spark):
     centroids = [[float(x) for x in r.embedding] for r in seed]
     via_expr = {
         r.vec_id: r.c
-        for r in S._with_centroids(e, centroids)
+        for r in S._with_matrix(e, "cents", centroids)
         .select("vec_id", S._assign_expr().alias("c"))
         .collect()
     }
@@ -185,6 +185,36 @@ def test_lsh_oracle_planes_bit_exact():
     assert len(rows) == n_planes * dim
     for p, d, w in rows:
         assert planes[p][d] == w  # exact float equality, no tolerance
+
+
+def test_lsh_buckets_match_python_fold(spark, catalog):
+    """Every (vec_id, tbl) bucket Spark computes equals the pure-Python
+    left fold over the same _hyperplanes, with bit j set when the dot is
+    > 0: the arithmetic _query_probe_buckets uses for the query row, so
+    corpus and probe buckets agree bit for bit."""
+    emb = catalog.table("embeddings")
+    dim = len(emb.head()["embedding"])
+    planes = S._hyperplanes(dim, S.N_TABLES * S.K_BITS)
+    rows = S._lsh_entries(emb, planes, S.N_TABLES, S.K_BITS).select(
+        "vec_id", "embedding", "tbl", "bucket"
+    ).collect()
+    assert len(rows) == emb.count() * S.N_TABLES
+    for r in rows:
+        want = 0
+        for j in range(S.K_BITS):
+            acc = 0.0
+            for x, y in zip(r.embedding, planes[r.tbl * S.K_BITS + j]):
+                acc += float(x) * float(y)
+            if acc > 0:
+                want |= 1 << j
+        assert r.bucket == want, (r.vec_id, r.tbl)
+
+
+def test_lsh_plan_size_is_bounded(spark):
+    """The hyperplanes ride a broadcast column, so the logical plan stays
+    small; writing the 216x64 weights as literals made it ~209K chars."""
+    plan = S.sim_ann_lsh(spark, SF_DIR)._jdf.queryExecution().logical()
+    assert len(plan.toString()) < 20_000
 
 
 def test_lsh_query_returns_topk_rows(spark):
