@@ -34,20 +34,19 @@ fixed constant (sampling pass, persist, carry join) that is pure overhead
 below its crossover (~10M rows — SCALING.md §r6 measured 2.5–11x at
 sf0.1). Each entry point therefore reads the input's Catalyst size
 estimate (``optimizedPlan().stats().sizeInBytes`` — plan-time, no job)
-and below ``SPARK_GRAFT_PREFIX_SMALL_BYTES`` (default 32 MiB ≈ 5–10M
-rows of a narrow projection) falls back to the plain single-partition
-window. Both paths are pinned bit-identical in
-tests/test_prefix_helper.py, so the switch is plan-only.
+and below ``_SMALL_BYTES`` (32 MiB ≈ 5–10M rows of a narrow projection)
+falls back to the plain single-partition window. Both paths are pinned
+bit-identical in tests/test_prefix_helper.py, so the switch is plan-only.
 
 Callers that already persist + count their aggregate pass the exact row
 count as ``rows_hint`` (RFM/Gini/ABC/Lorenz/conversion-lag); those route
 on a fixed 10M-row cut (the measured crossover) instead of the byte
 estimate, because Catalyst passes an Aggregate's CHILD size through and
-would decompose a dimension-sized frame a decade early. Env forcing works
-uniformly across BOTH signals (ADVICE r7):
-``SPARK_GRAFT_PREFIX_SMALL_BYTES=0`` forces the decomposition everywhere
-(the plan-shape tests do), and a huge value (>= 2^60) forces the plain
-window everywhere.
+would decompose a dimension-sized frame a decade early. Tests and
+``tools/explain_report.py`` force a path by setting both module
+constants: ``_SMALL_BYTES = _SMALL_ROWS = 0`` decomposes everywhere (the
+plan-shape tests do), and values above any estimate (``1 << 64``) take
+the plain window everywhere.
 
 **Tie-skew salting (r7, VERDICT r6 item 4).** A single key value with a
 huge tie count lands in one bucket and re-creates the straggler inside
@@ -74,7 +73,6 @@ the reference's only window is per-invoice (``dags/online_retail.py:46``)
 
 from __future__ import annotations
 
-import os
 from collections import deque
 
 from pyspark.sql import Column, DataFrame
@@ -90,7 +88,7 @@ _BUCKET = "__pfx_bucket"
 
 # Below this Catalyst size estimate for the input frame, skip the
 # decomposition and run the plain window (see module docstring).
-_SMALL_BYTES_DEFAULT = 32 << 20
+_SMALL_BYTES = 32 << 20
 
 # Last ~N (fn, bypassed, est_bytes) decisions — introspection for the
 # path-engagement tests; bounded so long sessions don't grow it.
@@ -121,25 +119,13 @@ def _use_plain_window(
     """True when the input is small enough that the plain window wins.
     ``rows_hint`` (an exact row count the caller already has) beats the
     byte estimate; unknown size falls back to the decomposition (the
-    scale-safe path). SPARK_GRAFT_PREFIX_SMALL_BYTES forces BOTH
-    signals at its extremes (ADVICE r7): ``0`` forces the decomposition
-    (the plan-shape tests rely on it), and a huge value (>= 2^60)
-    forces the plain window even for rows_hint callers."""
-    try:
-        small = int(
-            os.environ.get("SPARK_GRAFT_PREFIX_SMALL_BYTES", _SMALL_BYTES_DEFAULT)
-        )
-    except ValueError:  # pragma: no cover - malformed env
-        small = _SMALL_BYTES_DEFAULT
-    if small >= 1 << 60:  # explicit forcing: plain window on both signals
-        DECISIONS.append((fn, True, rows_hint))
-        return True
+    scale-safe path)."""
     if rows_hint is not None:
-        bypass = small > 0 and rows_hint < _SMALL_ROWS
+        bypass = rows_hint < _SMALL_ROWS
         DECISIONS.append((fn, bypass, rows_hint))
         return bypass
     est = _estimated_bytes(df)
-    bypass = est is not None and est < small
+    bypass = est is not None and est < _SMALL_BYTES
     DECISIONS.append((fn, bypass, est))
     return bypass
 

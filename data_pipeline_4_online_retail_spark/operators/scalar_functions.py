@@ -10,8 +10,10 @@ from hash comparisons.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from data_pipeline_4_online_retail_spark.plans.registry import register
@@ -1050,13 +1052,10 @@ TRIM_FRAC = 0.1  # drop floor(n * frac) elements from EACH end
 def op_pandas_udaf_trimmed_mean(spark, sf_dir):
     import math
 
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # NOTE: `from __future__ import annotations` stringifies type hints,
-    # which pandas_udf cannot resolve for locally-imported pandas — the
-    # explicit GROUPED_AGG functionType carries the same information.
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def trimmed_mean(v):
+    @pandas_udf(T.DoubleType())
+    def trimmed_mean(v: pd.Series) -> float:
         cents = (v * 100).round().astype("int64").sort_values().reset_index(
             drop=True
         )
@@ -1064,8 +1063,8 @@ def op_pandas_udaf_trimmed_mean(spark, sf_dir):
         kept = cents.iloc[k : len(cents) - k]
         return float(int(kept.sum())) / 100.0 / len(kept)
 
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def kept_count(v):
+    @pandas_udf(T.LongType())
+    def kept_count(v: pd.Series) -> int:
         k = math.floor(len(v) * TRIM_FRAC)
         return len(v) - 2 * k
 

@@ -276,13 +276,22 @@ def check_curation(spark, sf_dir: str) -> QualityReport:
     - contamination stays under an alarm ceiling and n_hits is consistent
       with the flag,
     - every document gets exactly one split assignment and one packing
-      slot (conservation),
-    - acceptance sampling's keep-rate stays inside its expected band.
+      slot, every span and event is accounted for (conservation),
+    - sampling keep-rates and per-source caps stay inside their bands,
+    - the LSH and IVF quality reports stay above their floors.
+
+    Each table is one ``gate``; a table whose check needs a join or a
+    group-by is gated over that derived frame.
     """
     from data_pipeline_4_online_retail_spark.operators import curation as C
+    from data_pipeline_4_online_retail_spark.operators import dedup as D
+    from data_pipeline_4_online_retail_spark.operators import events_windows as E
+    from data_pipeline_4_online_retail_spark.operators import relational as R
+    from data_pipeline_4_online_retail_spark.operators import similarity as S
 
     docs = C._docs(spark, sf_dir)
     n_docs = docs.count()
+    n_events = E._events(spark, sf_dir).count()
 
     def one_row_per_doc(name: str) -> Check:
         return Check(
@@ -292,8 +301,38 @@ def check_curation(spark, sf_dir: str) -> QualityReport:
             lambda v: f"{v[0]} rows / {n_docs} docs",
         )
 
-    rep = _gate_tables(
-        lambda table: getattr(C, table)(spark, sf_dir),
+    def with_span_total(spans: DataFrame) -> DataFrame:
+        # a document's spans: ceil(tokens / SPAN_WORDS)
+        total = F.ceil(F.size(F.split("text", " ")) / F.lit(float(C.SPAN_WORDS)))
+        return spans.join(docs.select("doc_id", total.alias("n_spans")), "doc_id", "left")
+
+    def with_keeper_doc(urls: DataFrame) -> DataFrame:
+        found = docs.select(F.col("doc_id").alias("keeper_found"))
+        return urls.join(found, urls.keeper_doc_id == found.keeper_found, "left")
+
+    def per_source(df: DataFrame) -> DataFrame:
+        return df.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
+
+    module = {
+        "op_group_sample_exact_k": R,
+        "dedup_url_canonicalize": D,
+        "ev_sessionize": E,
+        "dedup_lsh_recall_report": D,
+        "sim_ann_recall_report": S,
+    }
+    derive = {
+        "text_dup_span_removal": with_span_total,
+        "text_source_cap": per_source,
+        "op_group_sample_exact_k": per_source,
+        "dedup_url_canonicalize": with_keeper_doc,
+    }
+
+    def frame(table: str) -> DataFrame:
+        df = getattr(module.get(table, C), table)(spark, sf_dir)
+        return derive[table](df) if table in derive else df
+
+    return _gate_tables(
+        frame,
         {
             "text_quality_filters": [
                 ratio_between("keep = 1", 0.05, 0.95),
@@ -310,7 +349,6 @@ def check_curation(spark, sf_dir: str) -> QualityReport:
                 one_row_per_doc("conservation: every doc packed exactly once")
             ],
             "text_quality_sample": [ratio_between("sampled = 1", 0.05, 0.95)],
-            # r4 gates
             "text_temperature_sample": [
                 Check(
                     "sampling distribution normalizes",
@@ -320,116 +358,71 @@ def check_curation(spark, sf_dir: str) -> QualityReport:
                 ),
                 failed_rows("boost <= 0 OR sample_prob <= 0 OR sample_prob >= 1"),
             ],
+            "text_dup_span_removal": [
+                Check(
+                    "span conservation (kept + dropped = total)",
+                    F.struct(
+                        F.count_if(
+                            F.col("n_spans_kept") + F.col("n_spans_dropped")
+                            != F.col("n_spans")
+                        ),
+                        F.count(F.lit(1)),
+                    ),
+                    lambda v: v[0] == 0 and v[1] == n_docs,
+                    lambda v: f"{v[0]} violations / {v[1]} docs",
+                )
+            ],
+            "text_source_cap": [
+                _zero(
+                    f"no source exceeds the cap ({C.SOURCE_CAP})",
+                    F.count_if(F.col("n") > C.SOURCE_CAP),
+                    "sources over cap",
+                )
+            ],
+            "op_group_sample_exact_k": [
+                _zero(
+                    f"every group yields exactly k={R.GROUP_SAMPLE_K} rows",
+                    F.count_if(F.col("n") != R.GROUP_SAMPLE_K),
+                    "groups off-size",
+                )
+            ],
+            "dedup_url_canonicalize": [
+                Check(
+                    "every keeper id exists in documents; groups are real dups",
+                    F.struct(
+                        F.count_if(F.col("keeper_found").isNull()),
+                        F.count_if(F.col("n_dups") < 2),
+                    ),
+                    lambda v: v[0] == 0 and v[1] == 0,
+                    lambda v: f"{v[0]} dangling keepers",
+                )
+            ],
+            "ev_sessionize": [
+                Check(
+                    "session conservation: every event in exactly one session",
+                    F.sum("n_events"),
+                    lambda v: v == n_events,
+                    lambda v: f"{v} / {n_events} events",
+                )
+            ],
+            # The quality-evaluation reports are enforced too: a band-geometry
+            # or cell-count change that tanks index quality fails the gate.
+            "dedup_lsh_recall_report": [
+                Check(
+                    "LSH recall >= 0.9 against exact Jaccard truth",
+                    # the report is one row
+                    F.struct(F.first("lsh_recall"), F.first("n_hits"), F.first("n_true")),
+                    lambda v: v[0] >= 0.9,
+                    lambda v: f"recall {v[0]:.3f} ({v[1]}/{v[2]})",
+                )
+            ],
+            "sim_ann_recall_report": [
+                Check(
+                    "IVF pruning actually prunes (scan fraction < 0.5 per query)",
+                    F.struct(F.min("recall_at_k"), F.max("scan_fraction")),
+                    lambda v: v[1] < 0.5,
+                    lambda v: f"min recall {v[0]:.2f}, max scan fraction {v[1]:.3f}",
+                )
+            ],
         },
     )
-
-    spans = C.text_dup_span_removal(spark, sf_dir)
-    # conservation: kept + dropped spans == ceil(tokens/SPAN_WORDS) per doc
-    expected = docs.select(
-        "doc_id",
-        F.ceil(
-            F.size(F.split("text", " ")) / F.lit(float(C.SPAN_WORDS))
-        ).alias("n_spans"),
-    )
-    bad = (
-        spans.join(expected, "doc_id")
-        .filter(
-            F.col("n_spans_kept") + F.col("n_spans_dropped") != F.col("n_spans")
-        )
-        .count()
-    )
-    n_spans = spans.count()
-    rep.add(
-        CheckResult(
-            "text_dup_span_removal",
-            "span conservation (kept + dropped = total)",
-            bad == 0 and n_spans == n_docs,
-            f"{bad} violations / {n_spans} docs",
-        )
-    )
-
-    # r4c gates -----------------------------------------------------------
-    from data_pipeline_4_online_retail_spark.operators import dedup as D
-    from data_pipeline_4_online_retail_spark.operators import (
-        events_windows as E,
-    )
-    from data_pipeline_4_online_retail_spark.operators import relational as R
-
-    # gated over their per-source group sizes
-    grouped = {"text_source_cap": C, "op_group_sample_exact_k": R}
-    rep.extend(
-        _gate_tables(
-            lambda table: getattr(grouped[table], table)(spark, sf_dir)
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("n")),
-            {
-                "text_source_cap": [
-                    _zero(
-                        f"no source exceeds the cap ({C.SOURCE_CAP})",
-                        F.count_if(F.col("n") > C.SOURCE_CAP),
-                        "sources over cap",
-                    )
-                ],
-                "op_group_sample_exact_k": [
-                    _zero(
-                        f"every group yields exactly k={R.GROUP_SAMPLE_K} rows",
-                        F.count_if(F.col("n") != R.GROUP_SAMPLE_K),
-                        "groups off-size",
-                    )
-                ],
-            },
-        )
-    )
-
-    urls = D.dedup_url_canonicalize(spark, sf_dir)
-    bad_keeper = urls.join(
-        docs.select("doc_id"),
-        urls.keeper_doc_id == F.col("doc_id"),
-        "left_anti",
-    ).count()
-    rep.add(
-        CheckResult(
-            "dedup_url_canonicalize",
-            "every keeper id exists in documents; groups are real dups",
-            bad_keeper == 0 and urls.filter("n_dups < 2").count() == 0,
-            f"{bad_keeper} dangling keepers",
-        )
-    )
-
-    sess = E.ev_sessionize(spark, sf_dir)
-    n_events = E._events(spark, sf_dir).count()
-    got_events = sess.agg(F.sum("n_events")).head()[0]
-    rep.add(
-        CheckResult(
-            "ev_sessionize",
-            "session conservation: every event in exactly one session",
-            got_events == n_events,
-            f"{got_events} / {n_events} events",
-        )
-    )
-
-    # r4d gates: the quality-evaluation reports become ENFORCEMENT — a
-    # band-geometry or cell-count change that silently tanks index
-    # quality now fails the pipeline instead of shipping a bad corpus.
-    from data_pipeline_4_online_retail_spark.operators import similarity as S
-
-    lsh = D.dedup_lsh_recall_report(spark, sf_dir).head()
-    rep.add(
-        CheckResult(
-            "dedup_lsh_recall_report",
-            "LSH recall >= 0.9 against exact Jaccard truth",
-            lsh.lsh_recall >= 0.9,
-            f"recall {lsh.lsh_recall:.3f} ({lsh.n_hits}/{lsh.n_true})",
-        )
-    )
-    ann = S.sim_ann_recall_report(spark, sf_dir)
-    worst = ann.agg(F.min("recall_at_k"), F.max("scan_fraction")).head()
-    rep.add(
-        CheckResult(
-            "sim_ann_recall_report",
-            "IVF pruning actually prunes (scan fraction < 0.5 per query)",
-            worst[1] < 0.5,
-            f"min recall {worst[0]:.2f}, max scan fraction {worst[1]:.3f}",
-        )
-    )
-    return rep

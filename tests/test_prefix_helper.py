@@ -27,8 +27,15 @@ from data_pipeline_4_online_retail_spark.functions.prefix import (
 def _force_decomposition(monkeypatch):
     """These tests pin the DECOMPOSED path (the fixtures are tiny, so the
     r7 adaptive bypass would otherwise route every call to the plain
-    window). The bypass-specific tests below override the env per-test."""
-    monkeypatch.setenv("SPARK_GRAFT_PREFIX_SMALL_BYTES", "0")
+    window). The bypass-specific tests below re-route per test."""
+    _force(monkeypatch, 0)
+
+
+def _force(monkeypatch, limit: int) -> None:
+    """Route every call one way: ``0`` decomposes, ``1 << 64`` (above any
+    byte estimate or row count) takes the plain window."""
+    monkeypatch.setattr(prefix, "_SMALL_BYTES", limit)
+    monkeypatch.setattr(prefix, "_SMALL_ROWS", limit)
 
 
 def _plan(df) -> str:
@@ -290,7 +297,7 @@ def test_bypass_engages_below_threshold_and_matches(monkeypatch, skewed_df):
     # createDataFrame frames report unknown stats (Long.MaxValue) -> the
     # helper stays scale-safe (decomposed); a beyond-MaxValue threshold
     # forces the bypass for the fixture
-    monkeypatch.setenv("SPARK_GRAFT_PREFIX_SMALL_BYTES", str(1 << 64))
+    _force(monkeypatch, 1 << 64)
     prefix.DECISIONS.clear()
     fast = global_prefix(df, *args)
     assert prefix.DECISIONS[-1][0] == "global_prefix"
@@ -299,7 +306,7 @@ def test_bypass_engages_below_threshold_and_matches(monkeypatch, skewed_df):
     assert "__pfx_bucket" not in plan  # no decomposition machinery
     got_fast = {r["k"]: (r["rn"], r["run"], r["best"]) for r in fast.collect()}
 
-    monkeypatch.setenv("SPARK_GRAFT_PREFIX_SMALL_BYTES", "0")
+    _force(monkeypatch, 0)
     prefix.DECISIONS.clear()
     slow = global_prefix(df, *args)
     assert prefix.DECISIONS[0][1] is False  # decomposed
@@ -311,8 +318,8 @@ def test_bypass_ntile_and_lead_match_decomposed(monkeypatch, spark):
     rows = [(i, (i * 37) % 19) for i in range(101)]
     df = spark.createDataFrame(rows, "k long, v long")
     outs = {}
-    for env, tag in ((str(1 << 64), "fast"), ("0", "slow")):
-        monkeypatch.setenv("SPARK_GRAFT_PREFIX_SMALL_BYTES", env)
+    for limit, tag in ((1 << 64, "fast"), (0, "slow")):
+        _force(monkeypatch, limit)
         t = global_ntile(df, ["v", "k"], 7, F.col("v"), out_name="t", n_buckets=5)
         led = global_lead(df, ["v", "k"], "k", F.col("v"), out_name="nxt", n_buckets=5)
         outs[tag] = (
@@ -324,10 +331,10 @@ def test_bypass_ntile_and_lead_match_decomposed(monkeypatch, spark):
 
 def test_bypass_decision_uses_catalyst_estimate(monkeypatch, spark):
     """The default threshold (32 MiB) bypasses a small parquet-derived
-    frame without any env override — the production small-SF behavior.
+    frame without any forcing — the production small-SF behavior.
     An unknown estimate (createDataFrame -> LogicalRDD reports
     Long.MaxValue) stays on the scale-safe decomposed path."""
-    monkeypatch.delenv("SPARK_GRAFT_PREFIX_SMALL_BYTES", raising=False)
+    monkeypatch.undo()  # the module defaults, not the forced path
     o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     df = o.select("o_orderkey", "o_totalprice")
     prefix.DECISIONS.clear()
@@ -337,7 +344,7 @@ def test_bypass_decision_uses_catalyst_estimate(monkeypatch, spark):
     )
     fn, bypassed, est = prefix.DECISIONS[-1]
     assert bypassed is True
-    assert est is not None and est < prefix._SMALL_BYTES_DEFAULT
+    assert est is not None and est < prefix._SMALL_BYTES
     local = spark.createDataFrame([(i, i) for i in range(10)], "k long, v long")
     prefix.DECISIONS.clear()
     global_prefix(local, ["v", "k"], {"rn": ("count", F.lit(1), True)}, F.col("v"))
@@ -494,8 +501,8 @@ def test_rows_hint_overrides_byte_estimate(monkeypatch, spark):
     """An exact caller-supplied row count beats Catalyst's byte estimate
     (which passes an aggregate's CHILD size through): small hint ->
     plain window even when bytes say huge; big hint -> decomposed even
-    when bytes say tiny; env=0 force-decomposes BOTH signals."""
-    monkeypatch.delenv("SPARK_GRAFT_PREFIX_SMALL_BYTES", raising=False)
+    when bytes say tiny; forcing 0 decomposes on BOTH signals."""
+    monkeypatch.undo()  # the module defaults, not the forced path
     local = spark.createDataFrame([(i, i) for i in range(20)], "k long, v long")
     args = (["v", "k"], {"rn": ("count", F.lit(1), True)}, F.col("v"))
     prefix.DECISIONS.clear()
@@ -510,7 +517,7 @@ def test_rows_hint_overrides_byte_estimate(monkeypatch, spark):
         rows_hint=50_000_000,  # claims huge -> decomposed despite tiny bytes
     )
     assert prefix.DECISIONS[0][1] is False
-    monkeypatch.setenv("SPARK_GRAFT_PREFIX_SMALL_BYTES", "0")
+    _force(monkeypatch, 0)
     prefix.DECISIONS.clear()
     global_prefix(local, *args, rows_hint=20)
     assert prefix.DECISIONS[0][1] is False  # force-decomposed wins

@@ -10,8 +10,8 @@ import data_pipeline_4_online_retail_spark as pkg
 from data_pipeline_4_online_retail_spark.session import drain_retained
 
 
-def test_package_reads_only_the_four_documented_env_names():
-    """The engine package reads exactly these four environment names
+def test_package_reads_only_the_three_documented_env_names():
+    """The engine package reads exactly these three environment names
     (README's env table lists them with the bench/tool-only ones). A new
     knob must be added here on purpose; a value nothing sets stays a
     constant."""
@@ -21,7 +21,6 @@ def test_package_reads_only_the_four_documented_env_names():
     assert names == {
         "SPARK_GRAFT_CPUS",
         "SPARK_GRAFT_DRIVER_MEM",
-        "SPARK_GRAFT_PREFIX_SMALL_BYTES",
         "SPARK_GRAFT_SF_DIR",
     }
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pandas as pd
 import pytest
 
 import __spark_entry__ as entry
@@ -454,14 +455,14 @@ def test_pandas_udaf_trimmed_mean_window_form(spark, catalog, qs):
 
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     from data_pipeline_4_online_retail_spark.operators.scalar_functions import (
         TRIM_FRAC,
     )
 
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def trimmed_mean(v):
+    @pandas_udf("double")
+    def trimmed_mean(v: pd.Series) -> float:
         cents = (v * 100).round().astype("int64").sort_values().reset_index(
             drop=True
         )
@@ -487,6 +488,19 @@ def test_pandas_udaf_trimmed_mean_window_form(spark, catalog, qs):
     )
     assert {r.l_returnflag: r.tm for r in windowed} == grouped
     assert len(grouped) == 3  # A, N, R
+
+
+def test_pandas_udaf_trimmed_mean_builds_without_warning(spark, qs):
+    """The UDAFs are type-hinted (``pd.Series -> scalar``) grouped-agg
+    pandas UDFs: building the query emits no ``UserWarning``, where the
+    deprecated ``PandasUDFType.GROUPED_AGG`` form printed SPARK-28264's
+    on every build."""
+    import warnings
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        qs["op_pandas_udaf_trimmed_mean"](spark, SF_DIR)
+    assert [str(w.message) for w in caught if issubclass(w.category, UserWarning)] == []
 
 
 def test_variant_explode_discovers_all_fields(spark, catalog, qs):

@@ -8,9 +8,8 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from tools.oracle_check import value_hash
-
 import __spark_entry__ as entry
+from perfbench.checks import canon_rows
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -50,7 +49,7 @@ def duck():
 
 @pytest.mark.parametrize("name", TPCH)
 def test_tpch_matches_duckdb(spark, duck, name):
-    """Row-count + column-set + order-insensitive value-hash parity — the
+    """Row-count + column-set + order-insensitive canonical-row parity — the
     driver's exact comparison, at the test scale factor."""
     sdf = entry.queries()[name](spark, SF_DIR)
     s_rows = [tuple(r) for r in sdf.collect()]
@@ -59,8 +58,8 @@ def test_tpch_matches_duckdb(spark, duck, name):
     d_rows = res.fetchall()
     assert sorted(sdf.columns) == sorted(d_cols)
     assert len(s_rows) == len(d_rows), f"{name}: row count"
-    assert value_hash(s_rows, sdf.columns) == value_hash(d_rows, d_cols), (
-        f"{name}: value hash"
+    assert canon_rows(s_rows, sdf.columns) == canon_rows(d_rows, d_cols), (
+        f"{name}: canonical rows"
     )
 
 

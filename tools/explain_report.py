@@ -120,35 +120,27 @@ def main() -> None:
         emit(name, blurb, qs[name](spark, SF_DIR))
 
     # r7: the adaptive bypass, as reviewable plan evidence — the SAME
-    # query under both size regimes (env-forced; in production the
-    # Catalyst size estimate picks).
-    import os
+    # query under both size regimes (forced here through the module's
+    # thresholds; in production the Catalyst size estimate picks).
+    from data_pipeline_4_online_retail_spark.functions import prefix
 
-    # try/finally: if an emit raises, the forced-path setting must not
-    # leak into the rest of the process (ADVICE r7) — restore whatever
-    # value (usually none) was set before.
-    prior = os.environ.get("SPARK_GRAFT_PREFIX_SMALL_BYTES")
-    try:
-        os.environ["SPARK_GRAFT_PREFIX_SMALL_BYTES"] = str(1 << 62)
-        emit(
-            "op_skyline_pareto (small input -> bypass)",
+    for limit, label, blurb in (
+        (
+            1 << 64,
+            "small input -> bypass",
             "adaptive prefix: plain single-partition window below the "
             "crossover — the decomposition's constant is not paid",
-            qs["op_skyline_pareto"](spark, SF_DIR),
-        )
-        os.environ["SPARK_GRAFT_PREFIX_SMALL_BYTES"] = "0"
-        emit(
-            "op_skyline_pareto (large input -> decomposed)",
+        ),
+        (
+            0,
+            "large input -> decomposed",
             "adaptive prefix: range-bucket hash exchange + <=n_buckets-row "
             "triangle carry — no Exchange SinglePartition under the fact "
             "window",
-            qs["op_skyline_pareto"](spark, SF_DIR),
-        )
-    finally:
-        if prior is None:
-            os.environ.pop("SPARK_GRAFT_PREFIX_SMALL_BYTES", None)
-        else:
-            os.environ["SPARK_GRAFT_PREFIX_SMALL_BYTES"] = prior
+        ),
+    ):
+        prefix._SMALL_BYTES = prefix._SMALL_ROWS = limit
+        emit(f"op_skyline_pareto ({label})", blurb, qs["op_skyline_pareto"](spark, SF_DIR))
     with open("/root/repo/PLANS.md", "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
