@@ -9,11 +9,13 @@ The driver's tail capture keeps only ~2 KB of stdout, so the stdout line
 is kept small (headline per-query dict + tier totals; VERDICT r4 item 1 —
 r3/r4 both lost their driver-parsed bench number to oversized output).
 The FULL result (per-query extras/tpch/scale10 dicts, untruncated errors)
-is written to ``BENCH_full.json`` next to this file.
+is written to ``BENCH_full.json`` next to this file, or to the directory
+``$SPARK_GRAFT_BENCH_OUT`` names instead.
 
 Each query materializes fully through the ``noop`` sink (no output cost,
 no driver collect). Timings include plan + execution, excluding the shared
-SparkSession/catalog warmup (reported separately inside the JSON).
+SparkSession and an untimed warmup: one trivial query and a one-row read
+of every table (``warmup_sec`` in the JSON).
 
 Fault-isolated: every query (and the scale10 block) runs under its own
 try/except — a failing query lands in ``"errors"`` with its exception
@@ -195,59 +197,7 @@ _COMPACT_KEYS = (
     "cal_1t_sec",
     "cal_1t_end_sec",
     "cpus",
-    # r13 steal-burn context (VERDICT r12 item 5): how much hypervisor
-    # steal the burn absorbed before the first timed query — the reader's
-    # key for comparing absolute numbers across runs.
-    "burn_sec",
-    "burn_steal_pct",
 )
-
-
-def _read_steal() -> tuple[int, int]:
-    """(steal_ticks, busy_ticks) from /proc/stat; (0, 0) if unreadable."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [int(x) for x in parts[1:9]]
-        user, nice, system, idle, iowait, irq, softirq, steal = vals
-        busy = user + nice + system + irq + softirq + steal
-        return steal, busy
-    except Exception:  # noqa: BLE001 — not Linux / locked down
-        return 0, 0
-
-
-def _steal_burn(spark, budget_sec: float) -> dict:
-    """Sustained all-core JVM load for ``budget_sec`` BEFORE any timing.
-
-    The r12 driver-context probes (probes/r12/steal_ramp.json) measured
-    a decaying hypervisor-steal window after heavy activity: 14.5% of
-    busy ticks in the first 45 s, ~4-6% for the next few minutes, ~0
-    after sustained load (+31% throughput). The driver runs this bench
-    minutes after its own 50-query sweep — inside that window — so the
-    burn spends a fixed, untimed warmup budget to push the timed region
-    toward the idle-box regime (VERDICT r12 item 5; additions-only:
-    timing methodology unchanged, warmup was already untimed).
-    ``SPARK_GRAFT_BURN_SEC=0`` disables.
-    """
-    steal0, busy0 = _read_steal()
-    t0 = time.time()
-    n = 0
-    while time.time() - t0 < budget_sec:
-        # CPU-bound, shuffle-free, allocation-light: hash-reduce a range.
-        spark.range(0, 200_000_000, 1, int(_DEFAULT_CPUS)).selectExpr(
-            "sum(xxhash64(id)) AS h"
-        ).write.mode("overwrite").format("noop").save()
-        n += 1
-    steal1, busy1 = _read_steal()
-    d_busy = max(busy1 - busy0, 1)
-    return {
-        "burn_sec": round(time.time() - t0, 3),
-        "burn_jobs": n,
-        "burn_steal_pct": round(100.0 * (steal1 - steal0) / d_busy, 2),
-    }
-
-
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def _calibrate_host() -> float:
@@ -364,15 +314,6 @@ def main() -> None:
                 ).save()
         except Exception as exc:  # noqa: BLE001
             errors["_warmup"] = f"{type(exc).__name__}: {exc}"[:500]
-        # steal-window burn (r12 probes; VERDICT r12 item 5): untimed,
-        # fixed budget, before ANY timed query. Declared in
-        # OPTIMIZATION_r13.md; disable with SPARK_GRAFT_BURN_SEC=0.
-        try:
-            burn_budget = float(os.environ.get("SPARK_GRAFT_BURN_SEC", "90"))
-            if burn_budget > 0:
-                result.update(_steal_burn(spark, burn_budget))
-        except Exception as exc:  # noqa: BLE001
-            errors["_burn"] = f"{type(exc).__name__}: {exc}"[:500]
         result["warmup_sec"] = round(time.time() - t0, 3)
 
         timings: dict[str, float] = {}

@@ -190,20 +190,14 @@ def _pagerank_oracle(n_iter: int = N_ITER, damping: float = DAMPING) -> str:
 )
 def graph_pagerank_copurchase(spark, sf_dir):
     li = load_tables(spark, sf_dir).table("lineitem")
-    edges = copurchase_edges(li).persist()
-    try:
-        nodes = edges.select(F.col("src").alias("node")).distinct()
-        n = nodes.count()
-        ranks = pagerank(edges, nodes=nodes, n=n)
-        return ranks.select(
-            F.col("node").alias("part_key"),
-            (F.round(F.col("rank") * F.lit(float(n)), 6) + 0.0).alias(
-                "pagerank_x_n"
-            ),
-        )
-    finally:
-        # unpersist lazily; blocks release after the query's jobs finish
-        edges.unpersist(blocking=False)
+    edges = persist_scoped(copurchase_edges(li))
+    nodes = edges.select(F.col("src").alias("node")).distinct()
+    n = nodes.count()
+    ranks = pagerank(edges, nodes=nodes, n=n)
+    return ranks.select(
+        F.col("node").alias("part_key"),
+        (F.round(F.col("rank") * F.lit(float(n)), 6) + 0.0).alias("pagerank_x_n"),
+    )
 
 
 TRIANGLE_MIN_W = 2
@@ -558,21 +552,19 @@ def graph_bfs_distances(spark, sf_dir):
         .filter(F.col("w") >= BFS_SUPPORT)
         .select("src", "dst")
     )
-    edges = edges.persist()
-    try:
-        source = edges.agg(F.min("src")).collect()[0][0]
-        dist = spark.createDataFrame([(int(source), 0)], "node long, dist int")
-        frontier = dist
-        for h in range(1, BFS_MAX_HOPS + 1):
-            nxt = (
-                edges.join(frontier, edges.src == frontier.node)
-                .select(F.col("dst").alias("node"))
-                .distinct()
-                .withColumn("dist", F.lit(h))
-            )
-            new_nodes = nxt.join(dist.select("node"), "node", "left_anti")
-            dist = dist.unionByName(new_nodes).localCheckpoint(eager=True)
-            frontier = new_nodes
-        return dist
-    finally:
-        edges.unpersist()
+    edges = persist_scoped(edges)
+    source = edges.agg(F.min("src")).collect()[0][0]
+    dist = spark.createDataFrame([(int(source), 0)], "node long, dist int")
+    for h in range(1, BFS_MAX_HOPS + 1):
+        # the frontier comes from the checkpointed ``dist``, so a hop's
+        # join never re-derives the earlier hops
+        frontier = dist.filter(F.col("dist") == h - 1)
+        nxt = (
+            edges.join(frontier, edges.src == frontier.node)
+            .select(F.col("dst").alias("node"))
+            .distinct()
+            .withColumn("dist", F.lit(h))
+        )
+        new_nodes = nxt.join(dist.select("node"), "node", "left_anti")
+        dist = dist.unionByName(new_nodes).localCheckpoint(eager=True)
+    return dist

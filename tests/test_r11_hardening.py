@@ -1,8 +1,10 @@
-"""r11 guard-path pins (ADVICE r10): the shared drain helper and the
-package's environment surface. No SparkSession needed."""
+"""r11 guard-path pins (ADVICE r10): the shared drain helper, the
+package's environment surface and the tools' independence from where the
+repo is checked out. No SparkSession needed."""
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -23,6 +25,26 @@ def test_package_reads_only_the_three_documented_env_names():
         "SPARK_GRAFT_DRIVER_MEM",
         "SPARK_GRAFT_SF_DIR",
     }
+
+
+def test_tools_locate_the_repo_from_their_own_file():
+    """No ``tools/*.py`` names a checkout of this repo by absolute path:
+    run from a copy, such a tool would import the engine from the other
+    checkout and write its artifacts there. Tools derive the repo root
+    from ``__file__`` instead."""
+    tools = Path(__file__).resolve().parent.parent / "tools"
+    offenders = {}
+    for path in sorted(tools.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(node, ast.Constant) and isinstance(node.value, str)):
+                continue
+            if not node.value.startswith("/"):
+                continue
+            named = Path(node.value)
+            dirs = (named, *named.parents)
+            if any((d / "__spark_entry__.py").exists() for d in dirs):
+                offenders.setdefault(path.name, []).append(node.value)
+    assert not offenders, offenders
 
 
 class _RaisingHandle:

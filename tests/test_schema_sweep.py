@@ -1,14 +1,11 @@
 """Analysis-time regression net (VERDICT r3 items 1/3).
 
 The r3 round lost its entire bench to a single AnalysisException raised
-at plan time (`unix_micros` over a TIMESTAMP_NTZ `ts`). Both failure
-classes are catchable without executing a single job:
-
-1. the catalog must normalize every physical timestamp shape the
-   testdata has ever shipped (nanos-as-long, µs-NTZ) to plain TIMESTAMP;
-2. every registered query must *analyze* — building `.schema` forces
-   full analysis/resolution, so any type-signature break in any
-   operator surfaces here in seconds, not in the driver's bench run.
+at plan time (`unix_micros` over a TIMESTAMP_NTZ `ts`). Here the catalog
+must normalize every physical timestamp shape the testdata has ever
+shipped (nanos-as-long, µs-NTZ) to plain TIMESTAMP, and the query that
+broke runs end to end. That every registered query analyzes and runs is
+checked by the one registry sweep, `tests/test_cache_registry.py`.
 """
 
 from __future__ import annotations
@@ -43,18 +40,6 @@ def test_no_ntz_columns_in_any_catalog_table(catalog):
     assert not offenders, offenders
 
 
-def test_every_registered_query_analyzes(spark):
-    """Build .schema for every queries() entry — full Catalyst analysis,
-    zero execution. Fails fast with the per-query exception list."""
-    failures = {}
-    for name, fn in entry.queries().items():
-        try:
-            fn(spark, SF_DIR).schema
-        except Exception as exc:  # noqa: BLE001 — collect all, report once
-            failures[name] = f"{type(exc).__name__}: {exc}"[:200]
-    assert not failures, failures
-
-
 @pytest.mark.parametrize("query", ["ev_asof_join"])
 def test_asof_join_executes_on_driver_shaped_events(spark, query):
     """Direct regression pin for the r3 red: the exact query that broke,
@@ -65,98 +50,6 @@ def test_asof_join_executes_on_driver_shaped_events(spark, query):
         df.columns
     )
     assert len(rows) > 0
-
-
-def test_no_unintended_cartesian_or_nested_loop_joins(spark):
-    """Plan sweep over EVERY registered query: a CartesianProduct or a
-    non-trivial BroadcastNestedLoopJoin in a physical plan is the classic
-    silent scale-killer (an equi-condition that fell out of the join
-    clause). Whitelist: queries that deliberately crossJoin a broadcast
-    1-row frame (query vectors, centroid/codebook tables, global stats)
-    — those appear as BroadcastNestedLoopJoin over a single-row side and
-    are bounded by construction. The O(n^2) baselines (ngram_jaccard,
-    embedding_cosine) use equi-join candidate generation, so even they
-    must NOT plan a cartesian."""
-    import __spark_entry__ as entry
-
-    # deliberate broadcast-of-tiny-frame crossJoins
-    allowed_bnlj = {
-        "sim_topk_bruteforce",  # broadcast 1-row query vector
-        "sim_topk_pandas_udf",
-        "sim_ann_ivf",  # broadcast query row
-        "sim_ann_lsh",
-        "sim_ann_pq_adc",  # broadcast M*K distance table (1 row)
-        "sim_ann_pq_refine",  # same table + broadcast 1-row query vector
-        "sim_ann_ivf_pq",  # same broadcast table, cell-pruned scan
-        # (sim_kmeans left the list in-round: assignment is now an Arrow
-        # UDF over the cached scan — no centroid crossJoin remains)
-        "sim_pq_encode",  # broadcast 1-row codebook table
-        "text_mixture_sample",  # broadcast 1-row min_n frame
-        "text_contamination",  # broadcast benchmark side (tiny by design)
-        "text_bm25",  # broadcast corpus-stats row
-        "text_pack_sequences",
-        "text_quality_sample",
-        "dedup_incremental",  # asymmetric probe against empty-index edge
-        "dedup_incremental_fast",
-        "text_lm_score",  # broadcast vocab-total row
-        "text_repetition_stats",
-        "sim_topk_batch",  # broadcast Q-row query batch (Q=5)
-        "sim_ann_recall_report",  # same Q-row batch + 1-row corpus count
-        "sim_knn_classify",  # same broadcast Q-row query batch
-        "text_dsir_weights",  # broadcast 1-row target/raw token totals
-        "tpch_q22",  # broadcast 1-row avg-acctbal threshold (scalar subquery)
-        "tpch_q11",  # r6: broadcast 1-row value-total threshold (was a
-        # global window funneling the |parts| frame through one task)
-        "tpch_q15",  # r6: broadcast 1-row max-revenue threshold (same)
-        "ev_ab_test_metrics",  # 1-row x 1-row variant crossJoin (A x B)
-        "sim_range_search",  # broadcast Q-row query batch (Q=10), radius filter
-        "ev_conversion_lag",  # broadcast 1-row global-percentile frame
-        "wh_dim_surrogate_assign",  # broadcast 1-row high-water frame
-        "wh_data_diff_summary",  # 1-row x 1-row profile crossJoin (old x new)
-        "text_filter_attrition",  # broadcast 1-row corpus-total frame
-        "op_did_analysis",  # four 1-row cell frames crossJoined (2x2 design)
-        # (tpch_q11 left the list in-round: its threshold is now a global
-        # window over the per-part frame, no BNLJ remains)
-        # documented inequality joins
-        "dedup_embedding_cosine",  # the explicit O(n^2) verification
-        # baseline (vec_id < vec_id is its only condition); production
-        # paths are dedup_semantic_within_label / sim_ann_*
-        "op_join_range",  # broadcast 3-row literal band table — bounded
-        "op_sql_udf",  # broadcast 6-row size_bands table function, range
-        # predicate p_size BETWEEN lo AND hi — bounded by construction
-        # range-bucket prefix carry (functions/prefix.py): the strictly-
-        # lower-triangle self-join over the <= n_buckets-row per-bucket
-        # totals — <= 64x64 broadcast rows by construction, the explicit
-        # replacement for an unpartitioned fact-sized WindowExec
-        "ev_peak_concurrency",
-        "op_skyline_pareto",
-        "op_sequence_gaps",
-        "op_quantile_normalization",
-        # same carry + a broadcast 1-row total/count frame (global_ntile
-        # / cumulative share over the per-customer/part aggregates)
-        "op_rfm_segments",
-        "op_lorenz_curve",
-        "op_abc_classification",
-        "op_gini_revenue_concentration",
-        "text_vocab_growth",
-    }
-    offenders = {}
-    for name, fn in entry.queries().items():
-        try:
-            plan = (
-                fn(spark, SF_DIR)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-        except Exception as exc:  # noqa: BLE001
-            offenders[name] = f"plan build failed: {exc}"[:120]
-            continue
-        if "CartesianProduct" in plan:
-            offenders[name] = "CartesianProduct"
-        elif "BroadcastNestedLoopJoin" in plan and name not in allowed_bnlj:
-            offenders[name] = "BroadcastNestedLoopJoin (not whitelisted)"
-    assert not offenders, offenders
 
 
 # The r7 window deliberately spends slots on the rows-only tier: VERDICT

@@ -7,9 +7,11 @@ Usage: python tools/explain_report.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry
 from data_pipeline_4_online_retail_spark.session import get_spark
@@ -141,7 +143,7 @@ def main() -> None:
     ):
         prefix._SMALL_BYTES = prefix._SMALL_ROWS = limit
         emit(f"op_skyline_pareto ({label})", blurb, qs["op_skyline_pareto"](spark, SF_DIR))
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 

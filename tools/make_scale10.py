@@ -21,9 +21,10 @@ Then:  SPARK_GRAFT_SF_DIR=<OUT_DIR> python bench.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
