@@ -1,9 +1,17 @@
 """Vector math over ``array<float>`` embedding columns.
 
-Built-in higher-order functions (``zip_with`` + ``aggregate``) keep the
-arithmetic JVM-side. For very high dimensions a vectorized Pandas UDF can
-win on SIMD — see operators/similarity.py for that variant — but the
-built-in path has no serialization cost and scales with codegen.
+Two forms of the same left-fold arithmetic:
+
+- built-in higher-order functions (``zip_with`` + ``aggregate``): no
+  Python worker and no serialization, but Spark evaluates their lambdas
+  interpreted (``CodegenFallback``), one dispatch per element; fine for
+  cosine against one query vector;
+- Arrow-batched pandas UDFs that fold dim by dim, vectorized across the
+  batch's rows: :func:`matrix_fold_udf` (every row against a fixed
+  matrix: k-means centroids, PQ codebooks, LSH hyperplanes) and
+  :func:`dot_product_seq_udf` (two columns, pair by pair). Each keeps the
+  fold's addition order, so its doubles are bit-identical to the
+  higher-order-function form and to the DuckDB oracle twins.
 """
 
 from __future__ import annotations
@@ -151,3 +159,71 @@ def dot_product_seq_udf():
         return pd.Series(acc)
 
     return dot_seq
+
+
+def matrix_fold(x, w, op: str):
+    """(rows of ``x``) x (rows of ``w``) accumulators of a left fold over
+    the dims, starting from 0.0: ``acc + x[d] * w[d]`` for ``op="dot"``,
+    ``acc + (x[d] - w[d]) ** 2`` (as ``t * t``) for ``op="l2"``. Each
+    step is one numpy op over all (row, matrix row) pairs and the dims
+    run in order, so every entry is the double the scalar fold gives."""
+    import numpy as np
+
+    acc = np.zeros((len(x), len(w)), dtype=np.float64)
+    for d in range(x.shape[1]):
+        if op == "dot":
+            acc = acc + x[:, d : d + 1] * w[:, d]
+        else:
+            t = x[:, d : d + 1] - w[:, d]
+            acc = acc + t * t
+    return acc
+
+
+def matrix_fold_udf(mats: list, op: str, bits: int = 0):
+    """Arrow-batched pandas UDF over an ``array<float>`` column that folds
+    each row against fixed matrices held in its closure.
+
+    ``mats`` holds one matrix (rows of Python floats) per contiguous
+    slice of the embedding, in order; the slice widths are the matrices'
+    widths and must add up to the embedding's. Slice ``b`` is widened to
+    double and folded against every row of ``mats[b]`` by
+    :func:`matrix_fold` with ``op``. The result is one array per row:
+
+    - ``bits == 0``: ``array<int>``, per slice the index of the matrix
+      row with the smallest accumulator, the first one on a tie
+      (k-means assignment, PQ codes);
+    - ``bits > 0``: ``array<bigint>``, per run of ``bits`` consecutive
+      matrix rows one bucket whose bit j is ``acc > 0`` for the run's
+      row j (LSH sign-bit buckets, one per table).
+
+    Ragged or mis-sized embeddings raise instead of computing garbage."""
+    import numpy as np
+    import pandas as pd
+
+    from pyspark.sql import types as T
+
+    ws = [np.asarray(m, dtype=np.float64) for m in mats]
+    width = sum(w.shape[1] for w in ws)
+    weights = np.left_shift(np.int64(1), np.arange(bits, dtype=np.int64))
+    elem = T.LongType() if bits else T.IntegerType()
+
+    @F.pandas_udf(T.ArrayType(elem))
+    def fold(col):
+        # no type hints: under postponed annotations pandas_udf cannot
+        # read them from a closure
+        if len(col) == 0:
+            return pd.Series([], dtype=object)
+        x = np.vstack(col.to_numpy()).astype(np.float64)
+        if x.shape[1] != width:
+            raise ValueError(f"embeddings have {x.shape[1]} dims, matrices {width}")
+        out, lo = [], 0
+        for w in ws:
+            acc = matrix_fold(x[:, lo : lo + w.shape[1]], w, op)
+            lo += w.shape[1]
+            if bits:
+                out.append((acc.reshape(len(x), -1, bits) > 0) @ weights)
+            else:
+                out.append(np.argmin(acc, axis=1)[:, None].astype(np.int32))
+        return pd.Series(list(np.hstack(out)))
+
+    return fold

@@ -2379,7 +2379,7 @@ def op_transpose_summary(spark, sf_dir):
     doc="engine surface: the PANDAS API ON SPARK (pyspark.pandas) — the "
     "drop-in pandas dialect data scientists bring to the cluster: "
     "DataFrame.pandas_api() -> groupby().agg() with named aggregates "
-    "-> reset_index().to_spark(), all lowering to the SAME Catalyst "
+    "-> to_spark(index_col=...), all lowering to the SAME Catalyst "
     "plan a native groupBy builds (distributed partial-first "
     "aggregate, no driver pandas anywhere despite the API's shape). "
     "Aggregates chosen for cross-engine exactness without summation: "
@@ -2401,4 +2401,4 @@ def op_pandas_api_groupby(spark, sf_dir):
         min_price=("o_totalprice", "min"),
         max_price=("o_totalprice", "max"),
     )
-    return out.reset_index().to_spark()
+    return out.to_spark(index_col="o_orderstatus")

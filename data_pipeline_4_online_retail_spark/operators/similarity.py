@@ -2,13 +2,20 @@
 
 Three tiers:
 - brute-force cosine top-k (the exactness baseline; built-in higher-order
-  functions, JVM-side),
+  functions, evaluated interpreted in the JVM),
 - the same semantics through a vectorized Pandas UDF (Arrow batches +
   numpy BLAS — the faster path for high dimensions; identical results,
   same oracle),
-- sub-quadratic approximate variants: IVF-style cell-pruned search and
+- sub-quadratic approximate variants: IVF-style cell-pruned search,
   random-hyperplane LSH (hash-checked against ``_lsh_oracle``, a bit-exact
-  SQL twin that re-derives the hyperplanes and every sign bit).
+  SQL twin that re-derives the hyperplanes and every sign bit) and
+  product quantization.
+
+Every fold against a fixed matrix (LSH hyperplanes, k-means centroids,
+PQ codebooks) runs through ``functions/vector.matrix_fold_udf``: the
+matrix rides in the UDF's closure, and the left fold over dims keeps the
+order the SQL oracle twins re-derive, so sign bits, cluster ids and codes
+are bit-identical to them.
 
 Scale design: brute-force distributes as one broadcast of the query vector
 and a per-partition scan (no shuffle until the final top-k merge, which
@@ -30,6 +37,8 @@ from data_pipeline_4_online_retail_spark.functions.vector import (
     cosine_similarity,
     dot_product,
     l2_norm,
+    matrix_fold,
+    matrix_fold_udf,
     nano_mean,
 )
 from data_pipeline_4_online_retail_spark.plans.registry import register
@@ -50,17 +59,6 @@ LIMIT {TOP_K}
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_tables(spark, sf_dir).table("embeddings")
-
-
-def _with_matrix(df: DataFrame, name: str, value: list) -> DataFrame:
-    """Cross-join a broadcast one-row table whose column ``name`` holds
-    ``value``, nested lists of Python floats (k-means centroids, PQ
-    codebooks, LSH hyperplanes), typed as nested ``array<double>``.
-    Passing a matrix as data keeps the plan small and the generated code
-    the same whatever its values, where literals grow the expression
-    tree."""
-    m = df.sparkSession.createDataFrame([(value,)], [name])
-    return df.crossJoin(F.broadcast(m))
 
 
 def topk_bruteforce(
@@ -232,23 +230,13 @@ def _lsh_entries(
     """(vec_id, label, embedding, tbl, bucket): one sign-bit bucket per
     vector and table. Bit j of table t is [dot(v, planes[t*k + j]) > 0],
     the dot a left fold over float32→double widenings (the fold the
-    _lsh_oracle twin re-derives). The planes ride one broadcast
-    ``array<array<double>>`` column, as the k-means centroids and PQ
-    codebooks do, so the expression has the same small size for any
-    number of planes; the shifted bits are disjoint, so OR-ing them is
-    the bucket's sum."""
-    buckets = F.expr(
-        f"""transform(sequence(0, {n_tables - 1}), t ->
-            aggregate(sequence(0, {k - 1}), 0L, (acc, j) -> acc |
-                CASE WHEN aggregate(
-                         zip_with(embedding, planes[t * {k} + j],
-                                  (x, y) -> double(x) * y),
-                         0.0D, (a, v) -> a + v) > 0
-                     THEN shiftleft(1L, j) ELSE 0L END))"""
-    )
-    return _with_matrix(emb, "planes", planes).select(
+    _lsh_oracle twin re-derives). The planes stay in the UDF's closure,
+    out of the plan, so the plan has the same small size for any number
+    of planes."""
+    buckets = matrix_fold_udf([planes[: n_tables * k]], "dot", bits=k)
+    return emb.select(
         "vec_id", "label", "embedding",
-        F.posexplode(buckets).alias("tbl", "bucket"),
+        F.posexplode(buckets("embedding")).alias("tbl", "bucket"),
     )
 
 
@@ -297,10 +285,10 @@ def _lsh_oracle() -> str:
       tests/test_similarity.py::test_lsh_oracle_planes_bit_exact;
     - dot products / norms: Spark's ``aggregate(..., 0.0D, a + v)``
       is a left fold whose first step ``0.0 + p0 == p0``, i.e. exactly
-      DuckDB's init-less left-to-right ``list_reduce``; both sides widen
-      the float32 embedding to double before multiplying, and the Spark
-      side folds against the broadcast ``planes`` column, which holds
-      the generator's doubles themselves (see :func:`_lsh_entries`);
+      DuckDB's init-less left-to-right ``list_reduce`` (the corpus side
+      runs the same fold in numpy, see :func:`_lsh_entries`); both sides
+      widen the float32 embedding to double before multiplying, against
+      the generator's doubles themselves;
     - the query's 5 lowest-|margin| bits: Python's stable sort ties on
       bit index == ``ROW_NUMBER() OVER (ORDER BY abs(dot), j)``;
     - the 2^5 directed probes: a static 32-mask table XORed onto the
@@ -608,64 +596,15 @@ KMEANS_K = 8
 KMEANS_ITERS = 3
 
 
-def _assign_expr() -> F.Column:
-    """cluster_id = argmin over distances to the ``cents`` column (an
-    array<array<double>> carried by a broadcast 1-row DataFrame).
-
-    Squared L2 per centroid is zip_with + a left-to-right aggregate fold:
-    the addition order is the array order, so the double result is
-    reproducible bit-for-bit (the pytest replica folds in the same
-    order). Keeping the centroids in a *data* column rather than literals
-    means every iteration compiles the SAME generated code — the codegen
-    cache hits instead of recompiling a k×dim-literal expression tree
-    per iteration."""
-    dists = F.transform(
-        F.col("cents"),
-        lambda c: F.aggregate(
-            F.zip_with("embedding", c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
-    # array_position returns the FIRST index of the minimum (1-based),
-    # which makes ties deterministic: lowest cluster id wins.
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-
-def _assign_pandas_udf(centroids: list[list[float]]):
-    """Arrow-batched assignment with the EXACT float semantics of
-    ``_assign_expr``: per centroid, the squared distance accumulates
-    dim-by-dim left-to-right (``acc = acc + t*t`` — vectorized across
-    rows, *sequential* across dims, so each row's fold order is
-    identical to the HOF expression and to the pytest replica), and
-    ``np.argmin`` returns the FIRST minimum (lowest cluster id wins,
-    same tie rule as array_position-of-array_min). Bit-identical
-    results at ~10x the speed: the interpreted higher-order-function
-    path pays per-element lambda dispatch, this pays one numpy op per
-    (centroid, dim) per batch. ``test_kmeans_assign_udf_matches_expr``
-    pins UDF == expression on real data."""
-    import numpy as np
-    import pandas as pd
-
-    cents = [np.asarray(c, dtype=np.float64) for c in centroids]
-
-    @F.pandas_udf(T.IntegerType())
-    def assign(col):
-        if len(col) == 0:  # zero-row Arrow batch -> shape (0,) below
-            return pd.Series([], dtype=np.int32)
-        m = np.array(col.tolist(), dtype=np.float64)
-        if m.ndim != 2:  # ragged embeddings build a 1-D object array
-            raise ValueError(f"embeddings must be fixed-width: {m.shape}")
-        dists = np.empty((len(m), len(cents)), dtype=np.float64)
-        for i, c in enumerate(cents):
-            acc = np.zeros(len(m), dtype=np.float64)
-            for d in range(m.shape[1]):
-                t = m[:, d] - c[d]
-                acc = acc + t * t
-            dists[:, i] = acc
-        return pd.Series(np.argmin(dists, axis=1).astype(np.int32))
-
-    return assign
+def _assign(centroids: list[list[float]]) -> F.Column:
+    """cluster_id of ``embedding``: the index of the nearest centroid by
+    squared L2, each distance a left fold over the dims
+    (``acc + (x - c) * (x - c)`` from 0.0, float32 widened to double),
+    the lowest cluster id winning a tie. The fold and the tie rule are
+    the ones the ``_kmeans_assign_sql`` oracle twin spells in SQL;
+    ``test_kmeans_assign_udf_matches_expr`` pins them against a
+    pure-Python fold."""
+    return matrix_fold_udf([centroids], "l2")("embedding")[0]
 
 
 EMB_DIM = 64  # testdata embedding dimensionality (TESTDATA.md, every SF)
@@ -673,12 +612,12 @@ EMB_DIM = 64  # testdata embedding dimensionality (TESTDATA.md, every SF)
 
 def _kmeans_assign_sql(cb: str, dim: int) -> str:
     """One synchronized Lloyd assignment as SQL: argmin over the ``cb``
-    codebook CTE with the EXACT float semantics of ``_assign_expr`` —
+    codebook CTE with the EXACT float semantics of ``_assign`` —
     per-centroid squared L2 as a left-to-right fold over float32→double
-    widenings (DuckDB's init-less ``list_reduce`` == Spark's
-    ``aggregate`` 0.0-fold: squares are non-negative, so 0.0+v1 == v1
-    bitwise), first-min-wins via row_number ordered (dist ASC, cid ASC)
-    — the same tie rule as array_position-of-array_min and np.argmin."""
+    widenings (DuckDB's init-less ``list_reduce`` == the 0.0-seeded
+    fold: squares are non-negative, so 0.0+v1 == v1 bitwise),
+    first-min-wins via row_number ordered (dist ASC, cid ASC) — the
+    same tie rule as np.argmin."""
     return f"""
         SELECT vec_id, cid FROM (
             SELECT e.vec_id, c.cid,
@@ -748,11 +687,12 @@ def _kmeans_oracle(dim: int = EMB_DIM) -> str:
     _kmeans_oracle(),
     doc="iterative k-means (Lloyd, k=8, 3 iterations) over the embeddings "
     "table. Deterministic init (the k lowest vec_ids), assignment as an "
-    "Arrow-batched pandas UDF whose per-row fold order is IDENTICAL to "
-    "the built-in HOF expression (dim-sequential accumulation, first-min "
-    "argmin — bit-exact twin pinned by pytest; the interpreted HOF path "
-    "pays per-element lambda dispatch, the vectorized path is ~10x "
-    "faster and shuffle-free), update as posexplode + one hash "
+    "Arrow-batched pandas UDF (functions/vector.matrix_fold_udf) whose "
+    "per-row fold order is IDENTICAL to the SQL twin's (dim-sequential "
+    "accumulation, first-min argmin — pinned against a pure-Python fold "
+    "by pytest; vectorized across rows, shuffle-free, where an "
+    "interpreted HOF fold pays per-element lambda dispatch), update as "
+    "posexplode + one hash "
     "aggregate with engine-mirrored nano-unit means (r8: nano_mean "
     "replaced the half-boundary-unsafe decimal(18,9) cast) — only "
     "k*dim centroid values "
@@ -776,7 +716,7 @@ def sim_kmeans(spark, sf_dir):
         for _ in range(KMEANS_ITERS):
             assigned = cached.select(
                 "embedding",
-                _assign_pandas_udf(centroids)("embedding").alias("cluster_id"),
+                _assign(centroids).alias("cluster_id"),
             )
             # update step: k*dim rows to the driver (k, dim are constants)
             rows = (
@@ -801,7 +741,7 @@ def sim_kmeans(spark, sf_dir):
     return e.select(
         "vec_id",
         "label",
-        _assign_pandas_udf(centroids)("embedding").alias("cluster_id"),
+        _assign(centroids).alias("cluster_id"),
     )
 
 
@@ -863,29 +803,17 @@ PQ_K = 16  # codes per subspace
 PQ_ITERS = 3
 
 
-def _pq_sub(m: int, sub_dim: int) -> F.Column:
-    return F.slice(F.col("embedding"), m * sub_dim + 1, sub_dim)
-
-
-def _pq_assign_expr(m: int, sub_dim: int) -> F.Column:
-    """argmin code for subspace m against the ``cb`` column (a broadcast
-    array<array<array<double>>> of [M][K][sub_dim] centroids). Same
-    left-to-right fold + first-min-wins determinism as sim_kmeans."""
-    dists = F.transform(
-        F.element_at(F.col("cb"), m + 1),
-        lambda c: F.aggregate(
-            F.zip_with(_pq_sub(m, sub_dim), c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+def _pq_codes(cb: list) -> F.Column:
+    """array<int> of the M PQ codes of ``embedding``: per subspace m, the
+    index of the nearest ``cb[m]`` centroid to the m-th subvector, with
+    the same left fold and first-min tie rule as sim_kmeans."""
+    return matrix_fold_udf(cb, "l2")("embedding")
 
 
 def train_pq_codebooks(e: DataFrame, dim: int) -> list:
     """[M][K][dim/M] codebooks via per-subspace Lloyd, all M subspaces
-    trained in the SAME per-iteration pass: assignment is M argmin
-    expressions over one broadcast codebook table, the update explodes
+    trained in the SAME per-iteration pass: assignment is one UDF call
+    returning all M codes (:func:`_pq_codes`), the update explodes
     (m, code, dim_idx, val) once and aggregates with engine-mirrored
     nano-unit means (functions/vector.nano_mean, r8 — replaced the
     half-boundary-unsafe decimal(18,9) cast, which is what unlocked the
@@ -906,15 +834,8 @@ def train_pq_codebooks(e: DataFrame, dim: int) -> list:
     cached = e.select("vec_id", "embedding").persist()
     try:
         for _ in range(PQ_ITERS):
-            assigned = _with_matrix(cached, "cb", cb).select(
-                "embedding",
-                *[_pq_assign_expr(m, sub).alias(f"c{m}") for m in range(PQ_M)],
-            )
-            s1 = assigned.select(
-                F.posexplode(
-                    F.array(*[F.col(f"c{m}") for m in range(PQ_M)])
-                ).alias("m", "code"),
-                "embedding",
+            s1 = cached.select(
+                F.posexplode(_pq_codes(cb)).alias("m", "code"), "embedding"
             )
             s2 = s1.select(
                 "m",
@@ -943,7 +864,7 @@ def train_pq_codebooks(e: DataFrame, dim: int) -> list:
 def _pq_assign_sql(cb: str, sub: int) -> str:
     """One synchronized PQ assignment as SQL — all M subspaces at once:
     argmin code per (vector, m) over the ``cb`` codebook CTE with the
-    EXACT float semantics of ``_pq_assign_expr`` (left-to-right double
+    EXACT float semantics of ``_pq_codes`` (left-to-right double
     fold over the m-th subvector, first-min-wins via row_number ordered
     (dist ASC, code ASC))."""
     return f"""
@@ -1052,7 +973,7 @@ def _pq_adc_ctes(dim: int = EMB_DIM) -> str:
     "Quantization for Nearest Neighbor Search', PAMI'11). Output is the "
     "exploded (vec_id, label, m, code) form. 100 TB shape: training "
     "touches only M*K*(dim/M) driver values per iteration; encoding is "
-    "one map-side pass against a broadcast codebook. PROMOTED from "
+    "one map-side pass, the codebook in the UDF's closure. PROMOTED from "
     "rows-only in r8 (VERDICT r7 item 2): the oracle unrolls the 3 "
     "pinned-seed Lloyd rounds in SQL (_pq_train_ctes) and hashes the "
     "integer codes; the bit-exact Python replica remains in "
@@ -1062,43 +983,28 @@ def _pq_adc_ctes(dim: int = EMB_DIM) -> str:
 def sim_pq_encode(spark, sf_dir):
     e = _emb(spark, sf_dir)
     dim = len(e.select("embedding").head()["embedding"])
-    sub = dim // PQ_M
     cb = train_pq_codebooks(e, dim)
-    return _with_matrix(e, "cb", cb).select(
-        "vec_id",
-        "label",
-        F.posexplode(
-            F.array(*[_pq_assign_expr(m, sub) for m in range(PQ_M)])
-        ).alias("m", "code"),
+    return e.select(
+        "vec_id", "label", F.posexplode(_pq_codes(cb)).alias("m", "code")
     )
 
 
-def _pq_adc_ranked(spark, sf_dir, k):
-    """ADC-scored candidates: top-k corpus vectors by approximate L2."""
-    e = _emb(spark, sf_dir)
-    q = [float(x) for x in
-         e.filter(F.col("vec_id") == QUERY_VEC_ID).head()["embedding"]]
-    dim = len(q)
-    sub = dim // PQ_M
-    cb = train_pq_codebooks(e, dim)
+def _pq_adc(e: DataFrame, q: list[float], cb: list) -> DataFrame:
+    """(vec_id, label, approx_l2) for every row of ``e``: the sum, in m
+    order from 0.0, of the M distance-table lookups its PQ codes index.
+    The broadcast table holds the query subvector's squared L2 to each
+    centroid, the same left fold the codes use (``_pq_adc_ctes``
+    re-derives both)."""
+    import numpy as np
 
-    def sq(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
+    sub = len(q) // PQ_M
+    qv = np.asarray(q, dtype=np.float64)
     dtab = [
-        [sq(q[m * sub : (m + 1) * sub], cb[m][k2]) for k2 in range(PQ_K)]
+        matrix_fold(qv[None, m * sub : (m + 1) * sub], np.asarray(cb[m]), "l2")[0]
+        .tolist()
         for m in range(PQ_M)
     ]
-    spark_ = e.sparkSession
-    dt_df = spark_.createDataFrame([(dtab,)], "dt: array<array<double>>")
-    coded = _with_matrix(e, "cb", cb).select(
-        "vec_id",
-        "label",
-        F.array(*[_pq_assign_expr(m, sub) for m in range(PQ_M)]).alias("codes"),
-    )
+    dt_df = e.sparkSession.createDataFrame([(dtab,)], "dt: array<array<double>>")
     approx = F.aggregate(
         F.sequence(F.lit(0), F.lit(PQ_M - 1)),
         F.lit(0.0),
@@ -1108,9 +1014,20 @@ def _pq_adc_ranked(spark, sf_dir, k):
         ),
     )
     return (
-        coded.crossJoin(F.broadcast(dt_df))
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
+        e.select("vec_id", "label", _pq_codes(cb).alias("codes"))
+        .crossJoin(F.broadcast(dt_df))
         .select("vec_id", "label", approx.alias("approx_l2"))
+    )
+
+
+def _pq_adc_ranked(spark, sf_dir, k):
+    """ADC-scored candidates: top-k corpus vectors by approximate L2."""
+    e = _emb(spark, sf_dir)
+    q = [float(x) for x in
+         e.filter(F.col("vec_id") == QUERY_VEC_ID).head()["embedding"]]
+    cb = train_pq_codebooks(e, len(q))
+    return (
+        _pq_adc(e.filter(F.col("vec_id") != QUERY_VEC_ID), q, cb)
         .orderBy(F.asc("approx_l2"), F.asc("vec_id"))
         .limit(k)
     )
@@ -1237,42 +1154,13 @@ def sim_ann_ivf_pq(spark, sf_dir):
     e = _emb(spark, sf_dir)
     qrow = e.filter(F.col("vec_id") == QUERY_VEC_ID).head()
     q = [float(x) for x in qrow["embedding"]]
-    qlabel = qrow["label"]
-    dim = len(q)
-    sub = dim // PQ_M
-    cb = train_pq_codebooks(e, dim)
-
-    def sq(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
-    dtab = [
-        [sq(q[m * sub : (m + 1) * sub], cb[m][k]) for k in range(PQ_K)]
-        for m in range(PQ_M)
-    ]
-    dt_df = e.sparkSession.createDataFrame([(dtab,)], "dt: array<array<double>>")
+    cb = train_pq_codebooks(e, len(q))
     # IVF: prune to the query's cell BEFORE encoding/ranking
     cell = e.filter(
-        (F.col("label") == F.lit(qlabel)) & (F.col("vec_id") != QUERY_VEC_ID)
-    )
-    coded = _with_matrix(cell, "cb", cb).select(
-        "vec_id",
-        "label",
-        F.array(*[_pq_assign_expr(m, sub) for m in range(PQ_M)]).alias("codes"),
-    )
-    approx = F.aggregate(
-        F.sequence(F.lit(0), F.lit(PQ_M - 1)),
-        F.lit(0.0),
-        lambda acc, m: acc
-        + F.element_at(
-            F.element_at(F.col("dt"), m + 1), F.element_at(F.col("codes"), m + 1) + 1
-        ),
+        (F.col("label") == F.lit(qrow["label"])) & (F.col("vec_id") != QUERY_VEC_ID)
     )
     return (
-        coded.crossJoin(F.broadcast(dt_df))
-        .select("vec_id", "label", approx.alias("approx_l2"))
+        _pq_adc(cell, q, cb)
         .orderBy(F.asc("approx_l2"), F.asc("vec_id"))
         .limit(TOP_K)
     )

@@ -12,6 +12,13 @@ Semantics pinned to match the reference stack (BigQuery SQL + pandas):
 - **AQE on** — runtime re-planning (skew-join splitting, partition
   coalescing) is the 100 TB safety net; free at small SF.
 
+Performance, not semantics: **the generated-code cache holds 1000
+classes** (Spark's default is 100, fewer than one warm pass of either
+perfbench workload runs, so every warm pass recompiled all of them). It
+is a static conf: :func:`pin_session_semantics` cannot set it on a
+session someone else built, which must be launched with
+``--conf spark.sql.codegen.cache.maxEntries=1000`` instead.
+
 Scale knobs are environment-variable driven so the same code runs on
 ``local[32]`` in tests and on a 1000-executor cluster unchanged.
 """
@@ -245,6 +252,15 @@ def get_spark(
             "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
             "100m",
         )
+        # -- generated-code cache sized to the working set: one warm pass
+        #    of the perfbench curation workload runs about 145 distinct
+        #    whole-stage classes, the retail pipeline about 135.
+        #    Spark's default LRU holds 100, so every warm pass missed on
+        #    every lookup and recompiled all of them (about 1.1-1.6 s of
+        #    Janino per pass, 4 cores); at 1000 a warm pass compiles 0-5.
+        #    Static conf: fixed at JVM start, so an externally built
+        #    session needs ``--conf`` (pin_session_semantics cannot). ------
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # -- Arrow for the (rare) pandas_udf paths -------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # -- keep parquet scans prunable ------------------------------------

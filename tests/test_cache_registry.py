@@ -41,13 +41,9 @@ ALLOWED_BNLJ = {
     "sim_topk_bruteforce",  # broadcast 1-row query vector
     "sim_topk_pandas_udf",
     "sim_ann_ivf",  # broadcast query row
-    "sim_ann_lsh",
     "sim_ann_pq_adc",  # broadcast M*K distance table (1 row)
     "sim_ann_pq_refine",  # same table + broadcast 1-row query vector
     "sim_ann_ivf_pq",  # same broadcast table, cell-pruned scan
-    # (sim_kmeans left the list in-round: assignment is now an Arrow
-    # UDF over the cached scan — no centroid crossJoin remains)
-    "sim_pq_encode",  # broadcast 1-row codebook table
     "text_mixture_sample",  # broadcast 1-row min_n frame
     "text_contamination",  # broadcast benchmark side (tiny by design)
     "text_bm25",  # broadcast corpus-stats row

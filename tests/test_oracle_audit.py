@@ -11,10 +11,6 @@ in round 2:
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import types as T
 
 from tools.oracle_check import dtype_pair_problems, duck_type_class, spark_type_class

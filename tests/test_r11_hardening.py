@@ -28,22 +28,23 @@ def test_package_reads_only_the_three_documented_env_names():
 
 
 def test_tools_locate_the_repo_from_their_own_file():
-    """No ``tools/*.py`` names a checkout of this repo by absolute path:
-    run from a copy, such a tool would import the engine from the other
-    checkout and write its artifacts there. Tools derive the repo root
-    from ``__file__`` instead."""
-    tools = Path(__file__).resolve().parent.parent / "tools"
+    """No ``tools/*.py`` or ``tests/*.py`` names a checkout of this repo
+    by absolute path: run from a copy, such a file would import the
+    engine from the other checkout (and a tool write its artifacts
+    there). Both derive the repo root from ``__file__`` instead."""
+    root = Path(__file__).resolve().parent.parent
     offenders = {}
-    for path in sorted(tools.glob("*.py")):
+    for path in sorted([*root.glob("tools/*.py"), *root.glob("tests/*.py")]):
         for node in ast.walk(ast.parse(path.read_text())):
             if not (isinstance(node, ast.Constant) and isinstance(node.value, str)):
                 continue
-            if not node.value.startswith("/"):
+            # a path, not SQL or prose that happens to start with "/"
+            if not node.value.startswith("/") or any(c.isspace() for c in node.value):
                 continue
             named = Path(node.value)
             dirs = (named, *named.parents)
             if any((d / "__spark_entry__.py").exists() for d in dirs):
-                offenders.setdefault(path.name, []).append(node.value)
+                offenders.setdefault(str(path.relative_to(root)), []).append(node.value)
     assert not offenders, offenders
 
 

@@ -683,6 +683,23 @@ def test_pandas_api_groupby_is_distributed(spark, catalog, qs):
     assert got == expect
 
 
+def test_pandas_api_groupby_builds_without_advice_warning(spark, qs):
+    """The grouped frame hands its index to ``to_spark(index_col=...)``,
+    so building the query emits no ``PandasAPIOnSparkAdviceWarning``
+    (``reset_index().to_spark()`` printed one on every build) and the
+    group key is still the first output column."""
+    import warnings
+
+    from pyspark.pandas.utils import PandasAPIOnSparkAdviceWarning
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        df = qs["op_pandas_api_groupby"](spark, SF_DIR)
+    advice = [w for w in caught if issubclass(w.category, PandasAPIOnSparkAdviceWarning)]
+    assert [str(w.message) for w in advice] == []
+    assert df.columns == ["o_orderstatus", "n", "n_cust", "min_price", "max_price"]
+
+
 def test_filter_attrition_reconciles_with_gate_filter(spark, qs):
     """The cascade bookkeeping must reconcile exactly with the combined
     gate filter: final n_out == kept docs, total removed == rejected

@@ -130,29 +130,79 @@ def test_emb_vec_forms_match_exploded(spark):
     assert all(-127 <= v[1] <= 127 for v in qvec.values())
 
 
+def _py_fold(x, w, op):
+    """The scalar left fold the SQL oracle twins spell: from 0.0, dim by
+    dim, ``acc + x*w`` (dot) or ``acc + (x-w)*(x-w)`` (l2)."""
+    acc = 0.0
+    for a, b in zip(x, w):
+        acc = acc + (float(a) * b if op == "dot" else (float(a) - b) * (float(a) - b))
+    return acc
+
+
 def test_kmeans_assign_udf_matches_expr(spark):
-    """The Arrow assignment twin must be BIT-IDENTICAL to the built-in
-    HOF expression on real data (same fold order, same first-min tie
-    rule) — this is what licenses the fast path inside sim_kmeans."""
+    """The Arrow assignment must be BIT-IDENTICAL to the scalar fold the
+    SQL twin spells (same fold order, lowest cluster id wins a tie) —
+    this is what licenses the fast path inside sim_kmeans. The
+    centroids are sim_kmeans' seeds plus a copy of seed 0 at the end,
+    so every vector nearest to seed 0 is a tie between ids 0 and k."""
     sf = "/root/testdata/sf0.001"
     from data_pipeline_4_online_retail_spark.sources.catalog import load_tables
 
     e = load_tables(spark, sf).table("embeddings").select("vec_id", "embedding")
-    seed = e.orderBy("vec_id").limit(S.KMEANS_K).collect()
-    centroids = [[float(x) for x in r.embedding] for r in seed]
-    via_expr = {
-        r.vec_id: r.c
-        for r in S._with_matrix(e, "cents", centroids)
-        .select("vec_id", S._assign_expr().alias("c"))
-        .collect()
-    }
+    rows = sorted(e.collect(), key=lambda r: r.vec_id)
+    centroids = [[float(x) for x in r.embedding] for r in rows[: S.KMEANS_K]]
+    centroids.append(centroids[0])
     via_udf = {
         r.vec_id: r.c
-        for r in e.select(
-            "vec_id", S._assign_pandas_udf(centroids)("embedding").alias("c")
-        ).collect()
+        for r in e.select("vec_id", S._assign(centroids).alias("c")).collect()
     }
-    assert via_expr == via_udf
+    want = {}
+    for r in rows:
+        d = [_py_fold(r.embedding, c, "l2") for c in centroids]
+        want[r.vec_id] = d.index(min(d))
+    assert via_udf == want
+    assert sum(1 for c in want.values() if c == 0) >= 1  # the tie is exercised
+
+
+def test_matrix_fold_is_the_scalar_left_fold(catalog):
+    """Every accumulator of functions/vector.matrix_fold equals the scalar
+    left fold bit for bit, for both ops, on real embeddings against the
+    LSH hyperplanes: a reordered or re-associated fold changes the last
+    bits of many of these doubles, where an argmin or a sign bit rarely
+    moves."""
+    import numpy as np
+
+    from data_pipeline_4_online_retail_spark.functions.vector import matrix_fold
+
+    rows = catalog.table("embeddings").orderBy("vec_id").limit(40).collect()
+    x = np.array([r.embedding for r in rows], dtype=np.float64)
+    planes = S._hyperplanes(x.shape[1], S.N_TABLES * S.K_BITS)
+    for op in ("dot", "l2"):
+        got = matrix_fold(x, np.asarray(planes), op)
+        for i, r in enumerate(rows):
+            assert got[i].tolist() == [_py_fold(r.embedding, p, op) for p in planes]
+
+
+def test_pq_codebooks_and_codes_are_pinned(spark, catalog):
+    """train_pq_codebooks' codebooks (every double, by its hex form) and
+    sim_pq_encode's codes at sf0.001, pinned by SHA-256 to the values the
+    interpreted higher-order-function assignment produced before the
+    numpy kernel replaced it."""
+    import hashlib
+
+    e = catalog.table("embeddings")
+    cb = S.train_pq_codebooks(e, len(e.head()["embedding"]))
+    books = "\n".join(",".join(x.hex() for x in c) for book in cb for c in book)
+    codes = "\n".join(
+        f"{r.vec_id},{r.m},{r.code}"
+        for r in sorted(S.sim_pq_encode(spark, SF_DIR).collect())
+    )
+    assert hashlib.sha256(books.encode()).hexdigest() == (
+        "0a353230128dd7fe09e2e45303134ccecf6cae93dee7979cb9d9a12b3c0458e0"
+    )
+    assert hashlib.sha256(codes.encode()).hexdigest() == (
+        "bc5be95395cdedadd17215c11969d224d36aa5485c5465dd100a2f25644d8db7"
+    )
 
 
 def test_lsh_oracle_planes_bit_exact():
