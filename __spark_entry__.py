@@ -5,13 +5,22 @@ report_customer_invoices.sql analogue) at sf0.001. ``queries()`` /
 ``oracle_sql()`` expose every implemented operator from SURVEY.md §2 plus
 the training-data-pipeline extensions; the driver hash-compares each against
 DuckDB at sf0.01.
+
+The driver checks only the first ``DRIVER_WINDOW`` queries, so at import
+the registry is sorted by :func:`driver_order` over the driver's records,
+the ``CORRECTNESS_r<round>.json`` files next to this module: queries never
+checked first, then those whose latest row is red, then the oracled ones
+checked longest ago, and the rows-only queries last. Ties keep import
+order. A new record reorders the window; no list of names is kept.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -41,102 +50,37 @@ import data_pipeline_4_online_retail_spark.operators.graph  # noqa: E402,F401
 import data_pipeline_4_online_retail_spark.operators.governance  # noqa: E402,F401
 import data_pipeline_4_online_retail_spark.plans.retail_oracle  # noqa: E402,F401
 
-# ---------------------------------------------------------------------------
-# Driver-visible ordering, round 13: the REGRESSION RING continues
-# (VERDICT r12 items 2/4). The 50 slots front, in order:
-# 1. the 2 never-checked registrations (mm_png_features +
-#    mm_image_features, from the interrupted post-r11 build — never had
-#    a driver row);
-# 2. every execution path this OPTIMIZATION round changed: the spread
-#    star paths (fct/report_customer/report_year/dim_datetime), the
-#    single-scan window rewrites (ev_conversion_lag, ev_cohort_retention),
-#    the persisted-signature mm_phash_dedup, the spread
-#    wh_late_arriving_dim / op_sql_udf, and the registry-sweep-outlier
-#    rewrites (dedup_embedding_cosine chain-dot, op_fuzzy_match_blocked
-#    thresholded levenshtein, sim_ann_lsh SQL-string buckets);
-# 3. the r12-changed paths the r12 window never re-proved (VERDICT r12
-#    gate section): ev_funnel, text_dsir_stats, text_dsir_weights, and
-#    the 7 non-windowed consumers of the r12 signature core
-#    (dedup_minhash_lsh, dedup_clusters, dedup_corpus, dedup_incremental,
-#    dedup_incremental_fast, dedup_lsh_recall_report,
-#    dedup_minhash_estimate) — all of which also inherit this round's
-#    gated _docs spread;
-# 4. the 5 warehouse rows deferred at r5 (wh_foreign_key_check,
-#    wh_scd2_asof_join, wh_scd3_prior_value, wh_scd6_hybrid;
-#    wh_late_arriving_dim already fronts in group 2) — this CLOSES the
-#    r5 tier;
-# 5. 22 of the 45 r6-stale rows as fill (alphabetical; the remaining 23
-#    r6 rows front the r14 window — max staleness becomes r6).
-# Registry growth (0) <= rotation (standing item).
-# ---------------------------------------------------------------------------
-_DRIVER_PRIORITY = [
-    # --- 1. never-checked registrations (front the ring) ---
-    "mm_png_features",
-    "mm_image_features",
-    # --- 2. r13-touched execution paths ---
-    "star_fct_invoice_line_value",
-    "star_report_customer",
-    "star_report_year",
-    "star_dim_datetime",
-    "ev_conversion_lag",
-    "ev_cohort_retention",
-    "mm_phash_dedup",
-    "op_sql_udf",
-    "wh_late_arriving_dim",
-    # --- 3. r12-changed, never driver-re-proved ---
-    "dedup_embedding_cosine",
-    "op_fuzzy_match_blocked",
-    "sim_ann_lsh",
-    "ev_funnel",
-    "text_dsir_stats",
-    "text_dsir_weights",
-    "dedup_minhash_lsh",
-    "dedup_clusters",
-    "dedup_corpus",
-    "dedup_incremental",
-    "dedup_incremental_fast",
-    "dedup_lsh_recall_report",
-    "dedup_minhash_estimate",
-    # --- 4. the r5-deferred warehouse rows (closes r5) ---
-    "wh_foreign_key_check",
-    "wh_scd2_asof_join",
-    "wh_scd3_prior_value",
-    "wh_scd6_hybrid",
-    # --- 5. r6-stale fill (alphabetical) ---
-    "ev_audience_overlap",
-    "ev_bounce_rate",
-    "ev_burst_detection",
-    "ev_cohort_ltv",
-    "ev_dwell_time",
-    "ev_forecast_backtest",
-    "ev_funnel_dropoff",
-    "ev_holt_linear_trend",
-    "ev_interarrival_percentiles",
-    "ev_interval_coverage",
-    "ev_nearest_join",
-    "ev_rolling_wau",
-    "ev_seasonality_profile",
-    "op_benford_first_digit",
-    "op_collation_group",
-    "op_constraint_check",
-    "op_crosstab_chi2",
-    "op_date_spine",
-    "op_explode_outer",
-    "op_group_moments_mergeable",
-    "op_group_sample_exact_k",
-    "op_map_functions",
-]
+DRIVER_WINDOW = 50  # the driver hash-checks the first 50 registered queries
 
-assert len(_DRIVER_PRIORITY) == 50, len(_DRIVER_PRIORITY)
-assert len(set(_DRIVER_PRIORITY)) == 50
-_missing = [n for n in _DRIVER_PRIORITY if n not in REGISTRY]
-assert not _missing, f"priority names not registered: {_missing}"
 
-_ordered = {n: REGISTRY[n] for n in _DRIVER_PRIORITY}
-for _n, _q in REGISTRY.items():
-    _ordered.setdefault(_n, _q)
-REGISTRY.clear()
-REGISTRY.update(_ordered)
+def driver_order(
+    names: list[str], oracled: set[str], rows_by_round: dict[int, dict[str, dict]]
+) -> list[str]:
+    """``names`` in driver order: never-checked queries, then queries
+    whose latest row is red, then the rest by ascending last round, then
+    the rows-only queries. ``rows_by_round`` maps a round to its
+    correctness record; ties keep the order of ``names``."""
+    latest: dict[str, tuple[int, dict]] = {}
+    for rnd in sorted(rows_by_round):
+        latest.update((n, (rnd, row)) for n, row in rows_by_round[rnd].items())
+
+    def key(name: str) -> tuple[int, int]:
+        if name not in oracled:
+            return (3, 0)
+        if name not in latest:
+            return (0, 0)
+        rnd, row = latest[name]
+        return (2, rnd) if row.get("hash_match") else (1, 0)
+
+    return sorted(names, key=key)
+
+
+_RECORDS = {
+    int(p.stem.removeprefix("CORRECTNESS_r")): json.loads(p.read_text())
+    for p in Path(__file__).resolve().parent.glob("CORRECTNESS_r*.json")
+}
+_ordered = driver_order(list(REGISTRY), set(_registry.oracle_sql()), _RECORDS)
+REGISTRY.update({n: REGISTRY.pop(n) for n in _ordered})
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -44,12 +44,13 @@ DAMPING = 0.85
 N_ITER = 10
 CHECKPOINT_EVERY = 4
 
-def copurchase_edges(li: DataFrame) -> DataFrame:
-    """Symmetric weighted edge list (src, dst, w) — w = co-order count,
-    normalized below by the src node's total outgoing weight."""
+
+def copurchase_pairs(li: DataFrame) -> DataFrame:
+    """Symmetric (src, dst, w) over distinct parts: w = the number of
+    orders containing both."""
     basket = li.select("l_orderkey", "l_partkey").distinct()
     a, b = basket.alias("a"), basket.alias("b")
-    pairs = (
+    return (
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -60,6 +61,12 @@ def copurchase_edges(li: DataFrame) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("w"))
     )
+
+
+def copurchase_edges(li: DataFrame) -> DataFrame:
+    """Weighted edge list (src, dst, p): the co-purchase pairs with w
+    normalized by the src node's total outgoing weight."""
+    pairs = copurchase_pairs(li)
     out_w = pairs.groupBy("src").agg(F.sum("w").alias("out_w"))
     return pairs.join(out_w, "src").select(
         "src", "dst", (F.col("w") / F.col("out_w")).alias("p")
@@ -537,22 +544,9 @@ BFS_SUPPORT = 2
 )
 def graph_bfs_distances(spark, sf_dir):
     li = load_tables(spark, sf_dir).table("lineitem")
-    basket = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = basket.alias("a"), basket.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= BFS_SUPPORT)
-        .select("src", "dst")
+    edges = persist_scoped(
+        copurchase_pairs(li).filter(F.col("w") >= BFS_SUPPORT).select("src", "dst")
     )
-    edges = persist_scoped(edges)
     source = edges.agg(F.min("src")).collect()[0][0]
     dist = spark.createDataFrame([(int(source), 0)], "node long, dist int")
     for h in range(1, BFS_MAX_HOPS + 1):

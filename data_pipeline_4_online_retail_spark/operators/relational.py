@@ -12,6 +12,8 @@ Design-for-scale notes appear per operator; the general rules:
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -2394,11 +2396,16 @@ def op_transpose_summary(spark, sf_dir):
 )
 def op_pandas_api_groupby(spark, sf_dir):
     o = load_tables(spark, sf_dir).table("orders")
-    psdf = o.pandas_api()
-    out = psdf.groupby("o_orderstatus").agg(
-        n=("o_orderkey", "count"),
-        n_cust=("o_custkey", "nunique"),
-        min_price=("o_totalprice", "min"),
-        max_price=("o_totalprice", "max"),
-    )
-    return out.to_spark(index_col="o_orderstatus")
+    with warnings.catch_warnings():
+        # pyspark.pandas' type inference converts np.character to a dtype,
+        # which numpy deprecates: 55 warnings a build, none about this query
+        warnings.filterwarnings(
+            "ignore", "Converting `np.character` to a dtype", DeprecationWarning
+        )
+        out = o.pandas_api().groupby("o_orderstatus").agg(
+            n=("o_orderkey", "count"),
+            n_cust=("o_custkey", "nunique"),
+            min_price=("o_totalprice", "min"),
+            max_price=("o_totalprice", "max"),
+        )
+        return out.to_spark(index_col="o_orderstatus")

@@ -596,23 +596,12 @@ KMEANS_K = 8
 KMEANS_ITERS = 3
 
 
-def _assign(centroids: list[list[float]]) -> F.Column:
-    """cluster_id of ``embedding``: the index of the nearest centroid by
-    squared L2, each distance a left fold over the dims
-    (``acc + (x - c) * (x - c)`` from 0.0, float32 widened to double),
-    the lowest cluster id winning a tie. The fold and the tie rule are
-    the ones the ``_kmeans_assign_sql`` oracle twin spells in SQL;
-    ``test_kmeans_assign_udf_matches_expr`` pins them against a
-    pure-Python fold."""
-    return matrix_fold_udf([centroids], "l2")("embedding")[0]
-
-
 EMB_DIM = 64  # testdata embedding dimensionality (TESTDATA.md, every SF)
 
 
 def _kmeans_assign_sql(cb: str, dim: int) -> str:
     """One synchronized Lloyd assignment as SQL: argmin over the ``cb``
-    codebook CTE with the EXACT float semantics of ``_assign`` —
+    codebook CTE with the EXACT float semantics of ``_pq_codes`` —
     per-centroid squared L2 as a left-to-right fold over float32→double
     widenings (DuckDB's init-less ``list_reduce`` == the 0.0-seeded
     fold: squares are non-negative, so 0.0+v1 == v1 bitwise),
@@ -686,7 +675,8 @@ def _kmeans_oracle(dim: int = EMB_DIM) -> str:
     "sim_kmeans",
     _kmeans_oracle(),
     doc="iterative k-means (Lloyd, k=8, 3 iterations) over the embeddings "
-    "table. Deterministic init (the k lowest vec_ids), assignment as an "
+    "table, trained as PQ with one subspace (train_pq_codebooks). "
+    "Deterministic init (the k lowest vec_ids), assignment as an "
     "Arrow-batched pandas UDF (functions/vector.matrix_fold_udf) whose "
     "per-row fold order is IDENTICAL to the SQL twin's (dim-sequential "
     "accumulation, first-min argmin — pinned against a pure-Python fold "
@@ -705,44 +695,10 @@ def _kmeans_oracle(dim: int = EMB_DIM) -> str:
     tags=("similarity", "iterative"),
 )
 def sim_kmeans(spark, sf_dir):
+    # k-means is PQ with one subspace: one codebook of KMEANS_K centroids
     e = _emb(spark, sf_dir).select("vec_id", "label", "embedding")
-
-    # deterministic seed: the k lowest vec_ids (bounded driver fetch)
-    seed_rows = e.orderBy("vec_id").limit(KMEANS_K).collect()
-    centroids = [[float(x) for x in r.embedding] for r in seed_rows]
-
-    cached = e.persist()
-    try:
-        for _ in range(KMEANS_ITERS):
-            assigned = cached.select(
-                "embedding",
-                _assign(centroids).alias("cluster_id"),
-            )
-            # update step: k*dim rows to the driver (k, dim are constants)
-            rows = (
-                assigned.select(
-                    "cluster_id", F.posexplode("embedding").alias("dim_idx", "val")
-                )
-                .groupBy("cluster_id", "dim_idx")
-                .agg(nano_mean(F.col("val")).alias("centroid_val"))
-                .collect()
-            )
-            new_centroids = [list(c) for c in centroids]  # empty clusters keep
-            acc: dict[int, dict[int, float]] = {}
-            for r in rows:
-                acc.setdefault(r.cluster_id, {})[r.dim_idx] = r.centroid_val
-            for cid, dims in acc.items():
-                new_centroids[cid] = [dims[i] for i in range(len(dims))]
-            centroids = new_centroids
-    finally:
-        cached.unpersist()
-
-    # final assignment from the (uncached) source with converged centroids
-    return e.select(
-        "vec_id",
-        "label",
-        _assign(centroids).alias("cluster_id"),
-    )
+    cb = train_pq_codebooks(e, EMB_DIM, KMEANS_K, 1, KMEANS_ITERS)
+    return e.select("vec_id", "label", _pq_codes(cb)[0].alias("cluster_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -805,13 +761,25 @@ PQ_ITERS = 3
 
 def _pq_codes(cb: list) -> F.Column:
     """array<int> of the M PQ codes of ``embedding``: per subspace m, the
-    index of the nearest ``cb[m]`` centroid to the m-th subvector, with
-    the same left fold and first-min tie rule as sim_kmeans."""
+    index of the nearest ``cb[m]`` centroid to the m-th subvector by
+    squared L2, each distance a left fold over the dims
+    (``acc + (x - c) * (x - c)`` from 0.0, float32 widened to double),
+    the lowest code winning a tie. The fold and the tie rule are the ones
+    the ``_kmeans_assign_sql`` and ``_pq_assign_sql`` oracle twins spell;
+    ``test_kmeans_assign_udf_matches_expr`` pins them against a
+    pure-Python fold."""
     return matrix_fold_udf(cb, "l2")("embedding")
 
 
-def train_pq_codebooks(e: DataFrame, dim: int) -> list:
-    """[M][K][dim/M] codebooks via per-subspace Lloyd, all M subspaces
+def train_pq_codebooks(
+    e: DataFrame,
+    dim: int,
+    codes: int = PQ_K,
+    subspaces: int = PQ_M,
+    iters: int = PQ_ITERS,
+) -> list:
+    """[M][K][dim/M] codebooks (M = ``subspaces``, K = ``codes``) via
+    ``iters`` rounds of per-subspace Lloyd, all M subspaces
     trained in the SAME per-iteration pass: assignment is one UDF call
     returning all M codes (:func:`_pq_codes`), the update explodes
     (m, code, dim_idx, val) once and aggregates with engine-mirrored
@@ -820,20 +788,21 @@ def train_pq_codebooks(e: DataFrame, dim: int) -> list:
     family's full SQL oracles) — only M*K*(dim/M) values reach the
     driver per iteration.
 
-    Deterministic: seeds are the PQ_K lowest vec_ids' subvectors; empty
-    codes keep their previous centroid (same contract as sim_kmeans)."""
-    sub = dim // PQ_M
-    seed_rows = e.orderBy("vec_id").limit(PQ_K).collect()
+    Deterministic: seeds are the K lowest vec_ids' subvectors; empty
+    codes keep their previous centroid. With one subspace this is
+    sim_kmeans' Lloyd k-means."""
+    sub = dim // subspaces
+    seed_rows = e.orderBy("vec_id").limit(codes).collect()
     cb = [
         [
             [float(x) for x in r.embedding[m * sub : (m + 1) * sub]]
             for r in seed_rows
         ]
-        for m in range(PQ_M)
+        for m in range(subspaces)
     ]
     cached = e.select("vec_id", "embedding").persist()
     try:
-        for _ in range(PQ_ITERS):
+        for _ in range(iters):
             s1 = cached.select(
                 F.posexplode(_pq_codes(cb)).alias("m", "code"), "embedding"
             )

@@ -13,9 +13,9 @@ ROOT = Path(__file__).resolve().parent.parent
 
 
 def test_committed_coverage_index_matches_registry():
-    # A fresh interpreter: past the 50-slot window the registry keeps
-    # module import order, which the operator imports of other test
-    # modules would change in this process.
+    # A fresh interpreter: where the driver order ties, the registry
+    # keeps module import order, which the operator imports of other
+    # test modules would change in this process.
     rendered = subprocess.run(
         [
             sys.executable,

@@ -700,6 +700,19 @@ def test_pandas_api_groupby_builds_without_advice_warning(spark, qs):
     assert df.columns == ["o_orderstatus", "n", "n_cust", "min_price", "max_price"]
 
 
+def test_pandas_api_groupby_builds_without_deprecation_warning(spark, qs):
+    """pyspark.pandas converts ``np.character`` to a dtype while typing
+    the grouped frame, which numpy deprecates (55 warnings a build); the
+    builder filters that one message around its pandas-API calls."""
+    import warnings
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        qs["op_pandas_api_groupby"](spark, SF_DIR)
+    deprecations = [w for w in caught if issubclass(w.category, DeprecationWarning)]
+    assert [str(w.message) for w in deprecations] == []
+
+
 def test_filter_attrition_reconciles_with_gate_filter(spark, qs):
     """The cascade bookkeeping must reconcile exactly with the combined
     gate filter: final n_out == kept docs, total removed == rejected

@@ -52,36 +52,34 @@ def test_asof_join_executes_on_driver_shaped_events(spark, query):
     assert len(rows) > 0
 
 
-# The r7 window deliberately spends slots on the rows-only tier: VERDICT
-# r6 item 1 rotates the never-driver-checked backlog — 11 rows-only
-# members at composition time, 9 after the mid-round promotions of
-# sim_mmr_rerank and dedup_semantic_within_label_fast to full oracles —
-# into the window so EVERY registration has some driver record (hash
-# rows for the oracled, rows-only for these).
-# r8/r9: empty — those windows fronted stale records that all carry
-# full DuckDB oracles. r10: the ring's stalest tier (r3) includes the
-# two rows-only multimodal fakes, which VERDICT r9 item 3 explicitly
-# rotates in — their byte-exact replica pytests remain the strong
-# check; the driver row refreshes staleness. The other 5 rows-only
-# registrations (emb_pca_project, text_bpe_apply, mm_ppm_resize,
-# op_agg_approx_distinct_raw, op_percentiles_approx_raw) sit OUTSIDE
-# the window; each keeps its replica/bound pytest.
-# r11: empty again — the window fronts the r4/r5 stale tiers plus the
-# post-bloom q17/q02 re-proofs, all of which carry full DuckDB oracles
-# (the 7 rows-only registrations all sit outside the window with their
-# replica/bound pytests).
-_EXPECTED_ROWS_ONLY_SLOTS: set[str] = set()
+def test_driver_order_rule():
+    """Never-checked before red, red before green whatever the rounds,
+    the latest row decides red or green, staler greens first, rows-only
+    queries last (even never-checked ones), ties in input order."""
+    green, red = {"hash_match": True}, {"hash_match": False}
+    names = ["rows_only", "green_r6_b", "red_r12", "fixed", "green_r6_a", "new", "newer"]
+    oracled = set(names) - {"rows_only"}
+    records = {
+        12: {"red_r12": red, "fixed": green, "gone": red},
+        6: {"green_r6_b": green, "green_r6_a": green, "fixed": red},
+    }
+    assert entry.driver_order(names, oracled, records) == [
+        "new", "newer", "red_r12", "green_r6_b", "green_r6_a", "fixed", "rows_only",
+    ]
+    assert entry.driver_order(names, oracled, {}) == [*names[1:], "rows_only"]
 
 
-def test_driver_window_integrity():
-    """The first 50 registrations ARE the documented priority window, in
-    order, and every rows-only slot is one the window DOCUMENTS as such
-    (an undocumented rows-only slot would silently waste a hash check)."""
-    import __spark_entry__ as entry
-    from __spark_entry__ import _DRIVER_PRIORITY
-
-    names = list(entry.queries())
-    assert names[:50] == _DRIVER_PRIORITY
+def test_driver_window_comes_from_committed_records():
+    """On the committed records the window holds DRIVER_WINDOW distinct
+    oracled queries, among them every oracled query never checked or
+    last checked in the stalest round (r6 when this test was written)."""
+    window = list(entry.queries())[: entry.DRIVER_WINDOW]
     oracles = entry.oracle_sql()
-    rows_only = {n for n in _DRIVER_PRIORITY if n not in oracles}
-    assert rows_only == _EXPECTED_ROWS_ONLY_SLOTS, rows_only
+    assert len(set(window)) == entry.DRIVER_WINDOW
+    assert all(n in oracles for n in window)
+    last_round = {}
+    for rnd in sorted(entry._RECORDS):
+        last_round.update(dict.fromkeys(entry._RECORDS[rnd], rnd))
+    stalest = min(last_round[n] for n in oracles if n in last_round)
+    due = {n for n in oracles if last_round.get(n, stalest) == stalest}
+    assert due <= set(window), sorted(due - set(window))

@@ -154,7 +154,7 @@ def test_kmeans_assign_udf_matches_expr(spark):
     centroids.append(centroids[0])
     via_udf = {
         r.vec_id: r.c
-        for r in e.select("vec_id", S._assign(centroids).alias("c")).collect()
+        for r in e.select("vec_id", S._pq_codes([centroids])[0].alias("c")).collect()
     }
     want = {}
     for r in rows:

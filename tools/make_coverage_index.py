@@ -25,7 +25,7 @@ from data_pipeline_4_online_retail_spark.plans.registry import (  # noqa: E402
 def render() -> str:
     """The index text for the registry as imported."""
     names = list(entry.queries())
-    window = set(names[:50])
+    window = set(names[: entry.DRIVER_WINDOW])
     n_oracled = sum(1 for q in REGISTRY.values() if q.oracle is not None)
     n_verif = sum(1 for q in REGISTRY.values() if "verification" in q.tags)
     lines = [
@@ -34,8 +34,8 @@ def render() -> str:
         f"Generated by `tools/make_coverage_index.py`. **{len(names)}"
         f" queries, {n_oracled} DuckDB-oracled, "
         f"{len(names) - n_oracled} rows-only (each replica/bound-tested "
-        "in pytest).** First 50 = the driver correctness window "
-        "(`[W]`). Docs are the operators' own docstrings. Tier "
+        f"in pytest).** First {entry.DRIVER_WINDOW} = the driver "
+        "correctness window (`[W]`). Docs are the operators' own docstrings. Tier "
         f"`verification` ({n_verif} queries) marks exactness twins "
         "(all-pairs / md5 / uncapped forms kept as the oracle-exact "
         "baseline of a registered production path) — bulk scale "
